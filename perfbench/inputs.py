@@ -7,9 +7,9 @@ the same seed writes byte-identical files. Two corpora:
   135 kecamatan and 234 kelurahan features in 40 files, named the way
   ``sources.geojson.classify_level`` expects), plus the Python oracle
   rows the table must hold after ingest;
-* the star-schema / events / LLM-corpus parquet tables the registry's
-  bench queries read, with the column domains of the driver's synthetic
-  data (uniform keys, 5 % near-duplicate documents, unit-norm 64-d
+* the LLM-corpus parquet tables (`documents`, `embeddings`) the
+  registry's LLM bench queries read, with the column domains of the
+  driver's synthetic data (5 % near-duplicate documents, unit-norm 64-d
   embeddings with 10 weak label clusters).
 """
 
@@ -139,22 +139,11 @@ def write_wilayah_corpus(out_dir: str, seed: int) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
-# star schema, events and the LLM corpus
+# the LLM corpus
 # ---------------------------------------------------------------------------
 
-# rows per table (the sf0.01 shapes); documents/embeddings are the LLM corpus
-SIZES = {
-    "customer": 1500,
-    "supplier": 100,
-    "part": 2000,
-    "orders": 15000,
-    "lineitem": 60000,
-    "events": 10000,
-    "documents": 500,
-    "embeddings": 500,
-}
-STAR = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events")
-LLM = ("documents", "embeddings")
+# rows per table (the sf0.01 shapes)
+SIZES = {"documents": 500, "embeddings": 500}
 
 _VOCAB = (
     "join hash row batch scan column customer filter small slow merge order "
@@ -162,98 +151,13 @@ _VOCAB = (
     "big sort query fast the"
 ).split()
 _LANGS = ("en", "zh", "es", "de", "fr")
-_DAY = np.timedelta64(1, "D")
-
-
-def _days(rng, lo: str, hi: str, n: int) -> np.ndarray:
-    lo_d, hi_d = np.datetime64(lo, "D"), np.datetime64(hi, "D")
-    span = int((hi_d - lo_d) / _DAY)
-    return (lo_d + rng.integers(0, span + 1, n) * _DAY).astype("datetime64[us]")
-
-
-def _money(rng, lo: float, hi: float, n: int) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def _pick(rng, values, n: int, p=None) -> list:
-    return [values[i] for i in rng.choice(len(values), n, p=p)]
 
 
 def make_tables(seed: int) -> dict[str, pa.Table]:
-    """All ten tables, SIZES rows each (dims region/nation fixed)."""
+    """The `documents` and `embeddings` tables, SIZES rows each."""
     rng = np.random.default_rng([seed, 2])
-    n = SIZES
     t: dict[str, pa.Table] = {}
-    t["region"] = pa.table({
-        "r_regionkey": pa.array(range(5), pa.int32()),
-        "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"],
-    })
-    t["nation"] = pa.table({
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-    })
-    nc = n["customer"]
-    t["customer"] = pa.table({
-        "c_custkey": pa.array(np.arange(nc), pa.int64()),
-        "c_name": [f"Customer#{i:09d}" for i in range(nc)],
-        "c_nationkey": pa.array(rng.integers(0, 25, nc), pa.int32()),
-        "c_acctbal": _money(rng, -999.99, 9999.99, nc),
-        "c_mktsegment": _pick(rng, ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"), nc),
-    })
-    ns = n["supplier"]
-    t["supplier"] = pa.table({
-        "s_suppkey": pa.array(np.arange(ns), pa.int64()),
-        "s_name": [f"Supplier#{i:09d}" for i in range(ns)],
-        "s_nationkey": pa.array(rng.integers(0, 25, ns), pa.int32()),
-        "s_acctbal": _money(rng, -999.99, 9999.99, ns),
-    })
-    npt = n["part"]
-    adj = ("blue", "cold", "hot", "large", "new", "old", "red", "small")
-    noun = ("anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod", "widget")
-    t["part"] = pa.table({
-        "p_partkey": pa.array(np.arange(npt), pa.int64()),
-        "p_name": [f"{adj[a]} {noun[b]}" for a, b in rng.integers(0, 8, (npt, 2))],
-        "p_brand": [f"Brand#{i}" for i in rng.integers(1, 26, npt)],
-        "p_type": _pick(rng, ("ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"), npt),
-        "p_size": pa.array(rng.integers(1, 51, npt), pa.int32()),
-        "p_retailprice": np.round(900 + (np.arange(npt) % 1000) / 10, 1),
-    })
-    no = n["orders"]
-    t["orders"] = pa.table({
-        "o_orderkey": pa.array(np.arange(no), pa.int64()),
-        "o_custkey": pa.array(rng.integers(0, nc, no), pa.int64()),
-        "o_orderstatus": _pick(rng, ("F", "O", "P"), no),
-        "o_totalprice": _money(rng, 1000, 500000, no),
-        "o_orderdate": _days(rng, "1995-01-01", "2001-08-01", no),
-        "o_orderpriority": _pick(rng, ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"), no),
-    })
-    nl = n["lineitem"]
-    t["lineitem"] = pa.table({
-        "l_orderkey": pa.array(rng.integers(0, no, nl), pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, npt, nl), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(0, ns, nl), pa.int64()),
-        "l_linenumber": pa.array(rng.integers(1, 8, nl), pa.int32()),
-        "l_quantity": rng.integers(1, 51, nl).astype(np.float64),
-        "l_extendedprice": _money(rng, 900, 105000, nl),
-        "l_discount": rng.integers(0, 11, nl) / 100.0,
-        "l_tax": rng.integers(0, 9, nl) / 100.0,
-        "l_returnflag": _pick(rng, ("A", "N", "R"), nl),
-        "l_linestatus": _pick(rng, ("F", "O"), nl),
-        "l_shipdate": _days(rng, "1995-01-02", "2001-11-04", nl),
-    })
-    ne = n["events"]
-    gaps = rng.exponential(30 * 86400 / ne, ne)
-    ts = np.datetime64("2024-01-01T00:00:00", "us") + (np.cumsum(gaps) * 1e6).astype("timedelta64[us]")
-    t["events"] = pa.table({
-        "event_id": pa.array(np.arange(ne), pa.int64()),
-        "ts": ts,
-        "user_id": pa.array(rng.integers(0, max(15, ne // 66), ne), pa.int64()),
-        "event_type": _pick(rng, ("click", "error", "purchase", "signup", "view"), ne),
-        "value": np.round(np.maximum(0.01, rng.exponential(50, ne)), 2),
-        "props": [json.dumps({"k": int(k)}) for k in rng.integers(0, 100, ne)],
-    })
-    nd = n["documents"]
+    nd = SIZES["documents"]
     texts = [
         " ".join(_VOCAB[i] for i in rng.integers(0, len(_VOCAB), int(rng.integers(10, 100))))
         for _ in range(nd)
@@ -263,11 +167,11 @@ def make_tables(seed: int) -> dict[str, pa.Table]:
     t["documents"] = pa.table({
         "doc_id": pa.array(np.arange(nd), pa.int64()),
         "text": texts,
-        "lang": _pick(rng, _LANGS, nd, p=[0.44, 0.14, 0.14, 0.14, 0.14]),
+        "lang": [_LANGS[i] for i in rng.choice(len(_LANGS), nd, p=[0.44, 0.14, 0.14, 0.14, 0.14])],
         "source": [f"src{i % 20}" for i in range(nd)],
         "n_chars": pa.array([len(s) for s in texts], pa.int64()),
     })
-    nv = n["embeddings"]
+    nv = SIZES["embeddings"]
     centers = rng.standard_normal((10, 64))
     centers /= np.linalg.norm(centers, axis=1, keepdims=True)
     labels = rng.integers(0, 10, nv)
@@ -281,7 +185,7 @@ def make_tables(seed: int) -> dict[str, pa.Table]:
     return t
 
 
-def write_tables(tables: dict[str, pa.Table], out_dir: str, names) -> None:
+def write_tables(tables: dict[str, pa.Table], out_dir: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
-    for name in names:
-        pq.write_table(tables[name], os.path.join(out_dir, f"{name}.parquet"))
+    for name, table in tables.items():
+        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))

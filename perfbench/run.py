@@ -85,8 +85,14 @@ def _layer_metrics(ops: list[dict], n_passes: int) -> dict:
             rec["layers"][key] = rec["dur"]
     out = {}
     for key, how in PER_LAYER.items():
-        vals = [(r["pass"], r["layers"][key]) for r in ops if r["layers"].get(key) is not None]
-        if how == "last":
+        recs = [r for r in ops if key in r["layers"]]
+        vals = [(r["pass"], r["layers"][key]) for r in recs if r["layers"][key] is not None]
+        if len(vals) < len(recs):
+            # the op ran but its value could not be read (status API unavailable)
+            print(f"{key}: no value on {len(recs) - len(vals)} of {len(recs)} ops", file=sys.stderr)
+        if recs and not vals:
+            out[key] = None
+        elif how == "last":
             out[key] = vals[-1][1] if vals else 0
         elif how == "op_median":
             out[key] = _median(v for _, v in vals)
@@ -142,7 +148,7 @@ def main(argv=None) -> int:
 def _run(args, k: int, work: str, tmp: str) -> int:
     try:
         import workloads
-        from ops import Runner, tree_cpu_s
+        from ops import Runner
         from tracing import NullTracer, Tracer
         from wilayah_aceh_etl_spark.session import get_spark
     except ImportError as exc:
@@ -182,17 +188,14 @@ def _run(args, k: int, work: str, tmp: str) -> int:
         # nominal pass time, so every run measures the same op sequence
         n_passes = max(1, round(args.seconds / wl.pass_estimate_s))
         pass_wall: list[float] = []
-        pass_cpu: list[float] = []
         gc = []
         for i in range(n_passes):
             runner.pass_idx = i
             t = time.perf_counter()
-            cpu0 = tree_cpu_s(os.getpid())
             gc0 = tracer.gc_s(spark)
             with tracer.span(f"pass{i}"):
                 wl.run_pass(i)
             gc.append(tracer.gc_s(spark) - gc0)
-            pass_cpu.append(tree_cpu_s(os.getpid()) - cpu0)
             pass_wall.append(time.perf_counter() - t)
         t_check = time.perf_counter()
         wl.finish()
@@ -203,7 +206,10 @@ def _run(args, k: int, work: str, tmp: str) -> int:
     ops = runner.ops
     failed = sum(not r["ok"] for r in ops) + runner.check_failures
     ok = lambda cls, key: [r[key] for r in ops if r["cls"] == cls and r["ok"]]  # noqa: E731
+    # a pass's time is the sum over its ops, so the harness's own work
+    # between ops (copying inputs, oracles, result checks) is left out
     pass_s = _median(sum(r["dur"] for r in ops if r["pass"] == i) for i in range(n_passes))
+    pass_cpu = [sum(r["cpu"] for r in ops if r["pass"] == i) for i in range(n_passes)]
     counts = {c: len(ok(c, "dur")) for c in ("fresh", "repeat", "maint")}
     print(
         f"workload={args.workload} seed={args.seed} k={k} passes={n_passes} "

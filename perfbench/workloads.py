@@ -24,7 +24,9 @@ import datetime
 import json
 import os
 import shutil
+import sys
 import time
+import traceback
 
 import numpy as np
 
@@ -32,6 +34,7 @@ import inputs
 from ops import Runner, canon
 
 CLOCK = datetime.datetime(2026, 1, 1)
+KODE, NAMA = "kode_wilayah_kemendagri", "nama_wilayah_kemendagri"  # table columns
 
 
 def _tree_files(path: str, sub: str) -> list[str]:
@@ -41,6 +44,19 @@ def _tree_files(path: str, sub: str) -> list[str]:
         if rel.split(os.sep)[0].startswith(sub):
             out += [os.path.join(root, f) for f in files if f.endswith(".parquet")]
     return out
+
+
+def _envelope_parts(code: str) -> list[tuple[str, int, str]]:
+    """The reference service's code-length dispatch for
+    /api/db/geojson: (envelope part, level, code prefix) per part."""
+    n = len(code)
+    if n == 2:
+        return [("provinsi", 1, code), ("kabupaten", 2, code)]
+    if n == 5:
+        return [("kabupaten", 2, code), ("kecamatan", 3, code), ("kelurahan", 4, code)]
+    if n == 8:
+        return [("kabupaten", 2, code[:5]), ("kecamatan", 3, code), ("kelurahan", 4, code)]
+    return [("kecamatan", 3, code[:8]), ("kelurahan", 4, code)]
 
 
 class WilayahServe:
@@ -106,7 +122,7 @@ class WilayahServe:
         q = names[int(rng.integers(len(names)))][-4:].lower()
 
         def env_check(code):
-            parts = W._dispatch(code)
+            parts = _envelope_parts(code)
 
             def check(rows):
                 got = {r["part"]: (r["n_features"], json.loads(r["feature_collection"])) for r in rows}
@@ -162,7 +178,8 @@ class WilayahServe:
         r.action("sync", "fresh", lambda: W.sync(spark, self.geo, self.table, kab, clock=CLOCK),
                  lambda n: n == want, after=lambda rec: self._sync_layers(rec, kab, before))
         self.layers["live_files"].append(len(self._live()))
-        r.action("compact_table", "maint", lambda: W.compact_table(spark, self.table), lambda rep: True)
+        r.action("compact_table", "maint", lambda: W.compact_table(spark, self.table),
+                 lambda rep: all(after <= before for before, after in rep.values()))
         r.action("vacuum_history", "maint", lambda: W.vacuum_history(self.table), lambda rm: True)
         self.layers["history_files"].append(len(_tree_files(self.table, "_history")))
 
@@ -199,18 +216,40 @@ class WilayahServe:
         })
 
     def finish(self) -> None:
-        pass
+        """Check what the writes left: the latest snapshot, and the one
+        before it (kept by `vacuum_history`), must hold exactly the
+        oracle's (kode, nama, level) rows, each with a geometry. Every
+        sync re-ingests unchanged files, so both equal the corpus."""
+        W, spark = self.W, self.r.spark
+        want = sorted((r["kode"], r["nama"], r["level"]) for r in self.rows)
+        latest = W.table_version(self.table)
+        for version in (latest, latest - 1):
+            try:
+                if version == latest:
+                    df = W.load_wilayah(spark, self.table)
+                else:
+                    df = W.read_table_version(spark, self.table, version)
+                got = df.select(KODE, NAMA, "level", "geometry").collect()
+                bad = sorted((k, n, lv) for k, n, lv, _ in got) != want
+                bad = bad or any(g is None for *_, g in got)
+            except Exception:  # noqa: BLE001 — an unreadable snapshot is a failure
+                traceback.print_exc(file=sys.stderr)
+                bad = True
+            self.r.fail_checks(f"table v{version}", int(bad))
 
 
-class _RegistryWorkload:
-    """Registry bench queries over a seed-generated corpus, presented
-    at a freshly copied path every pass. Results are checked against
-    the registry's own DuckDB oracle SQL once per run, outside timing."""
+class LlmCuration:
+    """MinHash near-duplicate pairs, then trained-IVF top-k, over a
+    seed-generated LLM corpus presented at a freshly copied path every
+    pass: the first trained-IVF run on the fresh path trains KMeans in
+    build, the two reruns serve from what that run left behind.
+    Results are checked against the registry's own DuckDB oracle SQL
+    once per run, outside timing."""
 
-    tables: tuple[str, ...] = ()
-    fresh_queries: tuple[str, ...] = ()
-    repeat_queries: tuple[str, ...] = ()
-    repeats = 1
+    name = "llm_curation"
+    fresh_queries = ("dedup_minhash_lsh_pairs",)
+    repeat_queries = ("similarity_ivf_trained_topk",)
+    repeats = 2
     pass_estimate_s = 30.0
 
     def __init__(self, runner: Runner, work: str, seed: int) -> None:
@@ -225,7 +264,7 @@ class _RegistryWorkload:
         self.results: dict[str, list[tuple]] = {}
 
     def stage(self) -> None:
-        inputs.write_tables(inputs.make_tables(self.seed), self.src, self.tables)
+        inputs.write_tables(inputs.make_tables(self.seed), self.src)
 
     def seed_ingest(self) -> None:
         pass
@@ -235,7 +274,7 @@ class _RegistryWorkload:
         parquet scan run here, not in the first timed op."""
         from wilayah_aceh_etl_spark.sources.tables import load_table
 
-        load_table(self.r.spark, self.src, self.tables[0]).count()
+        load_table(self.r.spark, self.src, next(iter(inputs.SIZES))).count()
 
     def _query(self, name: str, cls: str, path: str) -> None:
         spec = self.specs[name]
@@ -264,7 +303,7 @@ class _RegistryWorkload:
         import duckdb
 
         con = duckdb.connect()
-        for t in self.tables:
+        for t in inputs.SIZES:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{os.path.join(self.src, t)}.parquet')"
             )
@@ -277,37 +316,4 @@ class _RegistryWorkload:
         con.close()
 
 
-class LlmCuration(_RegistryWorkload):
-    """MinHash near-duplicate pairs, then trained-IVF top-k: its first
-    run on the fresh path trains KMeans in build, the two reruns serve
-    from what that run left behind."""
-
-    name = "llm_curation"
-    tables = inputs.LLM
-    fresh_queries = ("dedup_minhash_lsh_pairs",)
-    repeat_queries = ("similarity_ivf_trained_topk",)
-    repeats = 2
-
-
-class StarAnalytics(_RegistryWorkload):
-    """The seven relational/event bench queries, each run fresh and
-    then once more on the same path: the control that build- and
-    cache-layer changes must not move. Not listed in BENCHMARK.json
-    (see README.md, "Run budget"); run it by name."""
-
-    name = "star_analytics"
-    tables = inputs.STAR
-    repeat_queries = (
-        "agg_pricing_summary",
-        "tpch_q8_market_share",
-        "join_revenue_by_nation",
-        "grouped_map_segment_trend",
-        "events_asof_last_purchase",
-        "events_rolling_1h_user_window",
-        "events_tumbling_window_counts",
-    )
-    repeats = 1
-    pass_estimate_s = 25.0
-
-
-WORKLOADS = {w.name: w for w in (WilayahServe, LlmCuration, StarAnalytics)}
+WORKLOADS = {w.name: w for w in (WilayahServe, LlmCuration)}
