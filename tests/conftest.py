@@ -33,10 +33,10 @@ def pytest_configure(config):
 
 
 def _run_full(config) -> bool:
-    return bool(
-        config.getoption("--full")
-        or os.environ.get("SPARK_GRAFT_FULL_TESTS")
-    )
+    """--full, or SPARK_GRAFT_FULL_TESTS set to a truthy word: "0",
+    "false" and the like leave the full battery off."""
+    env = os.environ.get("SPARK_GRAFT_FULL_TESTS", "").strip().lower()
+    return bool(config.getoption("--full")) or env in ("1", "true", "yes", "on")
 
 
 def pytest_collection_modifyitems(config, items):

@@ -21,6 +21,13 @@ the pure-Parquet last-wins window rewrite (no Delta available): the
 same shuffle a MERGE would do, with an explicit (source_file,
 feature_index) tiebreaker reproducing the reference's sequential
 last-write-wins (SURVEY §7 hard-problem 3).
+
+Every read of the table declares `TABLE_SCHEMA` (no Parquet schema
+inference job) and scans each file root — the live tree or one
+`_history/vN` directory — once, with `level` as its partition
+column; every write casts to the same schema. A read therefore runs
+no Spark job until the caller's action, and a merge or delete runs
+only the jobs that find, rewrite and count the affected files.
 """
 
 from __future__ import annotations
@@ -30,6 +37,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from wilayah_aceh_etl_spark.functions.geometry import (
     DEFAULT_TOLERANCE,
@@ -38,17 +46,38 @@ from wilayah_aceh_etl_spark.functions.geometry import (
 )
 from wilayah_aceh_etl_spark.sources.geojson import read_features
 
-TABLE_COLUMNS = [
-    "kode_wilayah_kemendagri",
-    "nama_wilayah_kemendagri",
-    "level",
-    "geometry",
-    "created_at",
-    "updated_at",
-]
+TABLE_SCHEMA = T.StructType(
+    [
+        T.StructField("kode_wilayah_kemendagri", T.StringType()),
+        T.StructField("nama_wilayah_kemendagri", T.StringType()),
+        T.StructField("level", T.IntegerType()),
+        T.StructField("geometry", T.StringType()),
+        T.StructField("created_at", T.TimestampType()),
+        T.StructField("updated_at", T.TimestampType()),
+    ]
+)
+TABLE_COLUMNS = TABLE_SCHEMA.fieldNames()
 
 _KODE = "kode_wilayah_kemendagri"
 _NAMA = "nama_wilayah_kemendagri"
+
+
+def _read(spark: SparkSession, root: str, paths: list[str]) -> DataFrame:
+    """Data files (or the directory) under `root`, read with the
+    declared schema in one scan; `level` comes from the paths."""
+    return (
+        spark.read.schema(TABLE_SCHEMA)
+        .option("basePath", root)
+        .parquet(*paths)
+    )
+
+
+def _conform(df: DataFrame) -> DataFrame:
+    """`df` cast to the declared schema, so every written file matches
+    what readers declare."""
+    return df.select(
+        *[F.col(f.name).cast(f.dataType) for f in TABLE_SCHEMA.fields]
+    )
 
 
 def _now(clock: datetime.datetime | None) -> F.Column:
@@ -111,41 +140,40 @@ def upsert(
     nama/geometry/updated_at only, server.js:93-97).
 
     Returns the number of batch rows applied (A5 processed counter).
-    The counter rides the first batch action via the Observation API —
-    the batch lineage (GeoJSON scan + geometry kernel, the expensive
-    part of ingest) executes exactly once (it is persisted before the
-    level probe). This is the Spark twin of the reference's
-    totalProcessed++ (server.js:357,374) and of Delta's
-    operationMetrics.numOutputRows.
+    The counter rides the batch's first action via the Observation
+    API; the batch lineage (GeoJSON scan + geometry kernel, the
+    expensive part of ingest) executes exactly once (it is persisted
+    for the file-pruning join and the merge). This is the Spark twin
+    of the reference's totalProcessed++ (server.js:357,374) and of
+    Delta's operationMetrics.numOutputRows. An empty batch commits
+    nothing.
 
     Scale design — FILE-SCOPED MERGE (Delta's add-file pruning on
     plain Parquet), not a table rewrite:
 
-      1. probe the batch's distinct levels (≤4 values, a domain
-         bound) — a batch can only conflict inside its own level
-         partitions because `kode` determines `level` by construction
-         (code-length dispatch, SURVEY §2.7);
-      2. read each candidate file's `kode` min/max from its Parquet
-         FOOTER (metadata-scale: one row per file, no data read) and
-         join that stats relation against the batch's distinct keys —
-         only files whose key range intersects a batch key are
-         "affected" (a file with absent/truncated stats is treated as
-         affected, conservatively);
-      3. union the batch with ONLY the affected files (basePath read
-         keeps the partition column), re-window last-wins, and write
-         replacement files range-partitioned on (level, kode) so
-         future merges prune tightly;
-      4. swap at FILE granularity: delete the affected files, move
+      1. take each live file's `kode` min/max from the commit log
+         (Parquet footers for pre-log tables) and join that stats
+         relation against the batch's (kode, level) keys — only files
+         whose level matches and whose key range contains a batch key
+         are "affected" (a file with absent/truncated stats is treated
+         as affected, conservatively);
+      2. union the batch with ONLY the affected files, re-window
+         last-wins (the same window carries the key's earliest
+         existing created_at), and write replacement files
+         range-partitioned on (level, kode) so future merges prune
+         tightly;
+      3. swap at FILE granularity: retire the affected files, move
          the staged files in. Every other file in the table — even
          inside the batch's own level partition — keeps its bytes and
          inode (asserted by tests).
 
     At 100 TB a single-kelurahan sync rewrites one file, not a
     partition and not the world. The per-batch driver cost is one
-    footer read per candidate file plus one metadata-scale join —
-    exactly the add-file pruning a Delta MERGE does from its
-    transaction log, sourced from footers instead.
+    metadata-scale join — exactly the add-file pruning a Delta MERGE
+    does from its transaction log.
     """
+    import shutil
+
     from pyspark.sql import Observation
     from pyspark.sql.window import Window
 
@@ -153,65 +181,38 @@ def upsert(
     batch = batch.observe(obs, F.count(F.lit(1)).alias("n_batch"))
     batch = batch.withColumn("_prio", F.lit(1)).persist()
     try:
-        affected: list[str] | None = None
-        if _table_exists(table_path):
-            levels = [
-                r["level"]
-                for r in batch.select("level").distinct().collect()
-            ]
-            if not levels:  # empty batch: nothing to rewrite
-                return int(obs.get["n_batch"])
-            affected = _affected_files(spark, table_path, levels, batch)
-        if affected:
-            existing = (
-                spark.read.option("basePath", table_path)
-                .parquet(*affected)
-                .withColumn("_prio", F.lit(0))
-            )
-            merged = batch.unionByName(existing)
-        else:
-            merged = batch
+        affected = (
+            _affected_files(spark, table_path, batch)
+            if _table_exists(table_path)
+            else None
+        )
         w = Window.partitionBy(_KODE).orderBy(F.col("_prio").desc())
-        winners = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # preserve created_at of pre-existing keys: a matched key
-        # always lives in an affected file (its own footer range
-        # contains it), so the slice is sufficient
+        merged = batch
         if affected:
-            old_created = (
-                spark.read.option("basePath", table_path)
-                .parquet(*affected)
-                .groupBy(_KODE)
-                .agg(F.min("created_at").alias("_old_created"))
+            existing = _read(spark, table_path, affected)
+            merged = batch.unionByName(existing.withColumn("_prio", F.lit(0)))
+            # a matched key always lives in an affected file (its own
+            # range contains it), so the slice holds its created_at
+            key_rows = w.rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
             )
-            winners = (
-                winners.join(old_created, _KODE, "left")
-                .withColumn(
-                    "created_at",
-                    F.coalesce("_old_created", F.col("created_at")),
-                )
-                .drop("_old_created")
+            old_created = F.min(
+                F.when(F.col("_prio") == 0, F.col("created_at"))
+            ).over(key_rows)
+            merged = merged.withColumn(
+                "created_at", F.coalesce(old_created, F.col("created_at"))
             )
-        out = winners.select(*TABLE_COLUMNS)
-        # write-stage layout: partition pruning on level; disjoint
-        # kode ranges per file + kode-sorted row groups, so both
-        # min/max pruning on prefix predicates AND the next merge's
-        # file scoping stay tight
-        tmp = table_path + "._staged"
-        (
-            out.repartitionByRange(
-                UPSERT_RANGE_PARTITIONS, F.col("level"), F.col(_KODE)
-            )
-            .sortWithinPartitions("level", _KODE)
-            .write.mode("overwrite")
-            .partitionBy("level")
-            .parquet(tmp)
+        winners = merged.withColumn("_rn", F.row_number().over(w)).filter(
+            F.col("_rn") == 1
         )
+        tmp = table_path + "._staged"
+        _write_staged(_conform(winners), tmp)
+        n_batch = int(obs.get["n_batch"])
+        if n_batch == 0:
+            shutil.rmtree(tmp, ignore_errors=True)
+            return 0
         _swap_files(table_path, tmp, affected, action="merge")
-        return int(obs.get["n_batch"])
+        return n_batch
     finally:
         batch.unpersist()
 
@@ -222,53 +223,36 @@ def upsert(
 UPSERT_RANGE_PARTITIONS = 8
 
 
+def _write_staged(out: DataFrame, tmp: str) -> None:
+    """The merge/delete write-stage layout: partition pruning on
+    level; disjoint kode ranges per file + kode-sorted row groups, so
+    both min/max pruning on prefix predicates AND the next merge's
+    file scoping stay tight."""
+    (
+        out.repartitionByRange(
+            UPSERT_RANGE_PARTITIONS, F.col("level"), F.col(_KODE)
+        )
+        .sortWithinPartitions("level", _KODE)
+        .write.mode("overwrite")
+        .partitionBy("level")
+        .parquet(tmp)
+    )
+
+
 def _table_exists(path: str) -> bool:
     return os.path.exists(path)
 
 
-def _file_kode_stats(
-    table_path: str, levels: list
-) -> list[tuple[str, int, str | None, str | None]]:
-    """(path, level, kode_min, kode_max) per data file in the given
-    level partitions, from Parquet footers only. None stats mean
-    'unknown' → the caller treats the file as affected."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for lv in levels:
-        d = os.path.join(table_path, f"level={lv}")
-        if not os.path.isdir(d):
-            continue
-        for f in os.listdir(d):
-            if not f.endswith(".parquet"):
-                continue
-            path = os.path.join(d, f)
-            kmin = kmax = None
-            try:
-                md = pq.ParquetFile(path).metadata
-                idx = md.schema.names.index(_KODE)
-                mins, maxs = [], []
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if st is None or not st.has_min_max:
-                        mins = []
-                        break
-                    mins.append(st.min)
-                    maxs.append(st.max)
-                if mins:
-                    kmin, kmax = min(mins), max(maxs)
-            except Exception:
-                pass  # unreadable footer → conservative (affected)
-            out.append((path, int(lv), kmin, kmax))
-    return out
+def _file_kode_stats(table_path: str) -> dict:
+    """Pre-log tables: {relpath: [kode_min, kode_max] | None} for every
+    live data file, from Parquet footers only."""
+    return _footer_stats_for(table_path, _live_files(table_path))
 
 
-def _log_kode_stats(
-    table_path: str, levels: list
-) -> list[tuple[str, int, str | None, str | None]] | None:
-    """The same (path, level, kmin, kmax) relation sourced from the
-    latest commit record's stats — zero footer reads. None when the
-    table predates the log or the log is missing stats."""
+def _log_kode_stats(table_path: str) -> dict | None:
+    """The same relation sourced from the latest commit record's
+    stats — zero footer reads. None when the table predates the log
+    or the log is missing stats."""
     v = table_version(table_path)
     if v is None:
         return None
@@ -276,53 +260,44 @@ def _log_kode_stats(
     stats = rec.get("stats")
     if stats is None:
         return None
-    lv_set = {int(x) for x in levels}
-    out = []
-    for rel in rec["manifest"]:
-        lv = int(rel.split("/", 1)[0].split("=", 1)[1])
-        if lv not in lv_set:
-            continue
-        s = stats.get(rel)
-        kmin, kmax = (s[0], s[1]) if s else (None, None)
-        out.append((os.path.join(table_path, rel), lv, kmin, kmax))
-    return out
+    return {rel: stats.get(rel) for rel in rec["manifest"]}
 
 
 def _affected_files(
-    spark: SparkSession, table_path: str, levels: list, batch: DataFrame
+    spark: SparkSession, table_path: str, keys: DataFrame
 ) -> list[str]:
     """Delta-style file pruning: the file-stats relation (one row per
-    candidate file) range-joined against the batch's distinct keys.
-    Stats come from the COMMIT LOG when available (captured once at
-    write time — no footer I/O on the merge path) and fall back to
-    footer reads for pre-log tables. Both sides are metadata-scale;
-    the collect returns only the files that must be rewritten."""
-    stats = _log_kode_stats(table_path, levels)
+    live file) range-joined on level and kode against `keys`' (kode,
+    level) rows. Stats come from the COMMIT LOG when available
+    (captured once at write time — no footer I/O on the merge path)
+    and fall back to footer reads for pre-log tables. The stats are
+    broadcast and the keys stream past them with no shuffle; the
+    collect returns one path per key that lies in a file's range."""
+    stats = _log_kode_stats(table_path)
     if stats is None:
-        stats = _file_kode_stats(table_path, levels)
-    if not stats:
-        return []
-    no_stats = [p for p, _, kmin, _ in stats if kmin is None]
-    with_stats = [s for s in stats if s[2] is not None]
-    if not with_stats:
-        return no_stats
-    stats_df = spark.createDataFrame(
-        with_stats, "path string, level int, kmin string, kmax string"
-    )
-    keys = batch.select(F.col(_KODE).alias("_k"), F.col("level").alias("_lv"))
-    hit = (
-        F.broadcast(stats_df)
-        .join(
-            keys,
-            (stats_df.level == keys._lv)
-            & (keys._k >= stats_df.kmin)
-            & (keys._k <= stats_df.kmax),
-            "left_semi",
+        stats = _file_kode_stats(table_path)
+    hit = {rel for rel, s in stats.items() if not s}  # unknown range
+    with_stats = [
+        (rel, int(rel.split("/", 1)[0].split("=", 1)[1]), s[0], s[1])
+        for rel, s in stats.items()
+        if s
+    ]
+    if with_stats:
+        # keys on the streamed side: with an empty batch the scan stays
+        # in the executed plan, so the batch's Observation still reports
+        stats_df = F.broadcast(
+            spark.createDataFrame(
+                with_stats, "path string, level int, kmin string, kmax string"
+            )
         )
-        .select("path")
-        .collect()
-    )
-    return no_stats + [r["path"] for r in hit]
+        k = keys.select(F.col(_KODE).alias("_k"), F.col("level").alias("_lv"))
+        cond = (
+            (stats_df.level == k._lv)
+            & (k._k >= stats_df.kmin)
+            & (k._k <= stats_df.kmax)
+        )
+        hit |= {r[0] for r in k.join(stats_df, cond).select("path").collect()}
+    return [os.path.join(table_path, rel) for rel in sorted(hit)]
 
 
 # ---------------------------------------------------------------------------
@@ -551,9 +526,12 @@ def read_table_version(
     """Snapshot (time-travel) read: reconstruct the file set of
     `version` from its manifest, resolving each entry against the
     live tree first and `_history/v*/` second (where later commits
-    retired it). The `level` partition column is rebuilt from the
-    manifest paths, so live and historical files read identically.
-    Raises if a needed file was vacuumed."""
+    retired it). Files are grouped by root — the live table or one
+    `_history/vN` directory, each laid out as `level=N/...` — and each
+    root is one declared-schema scan with `level` as its partition
+    column: the latest snapshot is a single scan, and live and
+    historical files read identically. Raises if a needed file was
+    vacuumed."""
     import glob as _glob
 
     from functools import reduce
@@ -561,27 +539,23 @@ def read_table_version(
     v = table_version(table_path) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no commit log at {table_path}")
-    manifest = _read_commit(table_path, v)["manifest"]
-    by_level: dict[int, list[str]] = {}
-    for rel in manifest:
-        level_dir, name = rel.split("/", 1)
-        lv = int(level_dir.split("=", 1)[1])
-        live = os.path.join(table_path, rel)
-        if os.path.exists(live):
-            by_level.setdefault(lv, []).append(live)
-            continue
-        hits = _glob.glob(
-            os.path.join(table_path, _HISTORY_DIR, "v*", level_dir, name)
-        )
-        if not hits:
-            raise FileNotFoundError(
-                f"{rel} of version {v} has been vacuumed"
+    by_root: dict[str, list[str]] = {}
+    for rel in _read_commit(table_path, v)["manifest"]:
+        path = os.path.join(table_path, rel)
+        if not os.path.exists(path):
+            hits = _glob.glob(
+                os.path.join(table_path, _HISTORY_DIR, "v*", rel)
             )
-        by_level.setdefault(lv, []).append(hits[0])
-    parts = [
-        spark.read.parquet(*files).withColumn("level", F.lit(lv))
-        for lv, files in sorted(by_level.items())
-    ]
+            if not hits:
+                raise FileNotFoundError(
+                    f"{rel} of version {v} has been vacuumed"
+                )
+            path = hits[0]
+        root = os.path.dirname(os.path.dirname(path))
+        by_root.setdefault(root, []).append(path)
+    if not by_root:
+        return spark.createDataFrame([], TABLE_SCHEMA)
+    parts = [_read(spark, r, files) for r, files in sorted(by_root.items())]
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
@@ -725,8 +699,7 @@ def compact_table(
         n_out = max(1, -(-total // target_bytes))
         tmp = table_path + f"._compact_{level}"
         (
-            spark.read.option("basePath", table_path)
-            .parquet(*small)
+            _read(spark, table_path, small)
             .coalesce(n_out)
             .sortWithinPartitions(_KODE)
             .write.mode("overwrite")
@@ -746,12 +719,13 @@ def delete_keys(
 ) -> int:
     """DELETE WHERE key IN (...) at file scope — the erasure
     counterpart of the file-scoped MERGE (and the right-to-be-
-    forgotten primitive at 100 TB): footer-stats pruning finds the
-    files that can contain the keys, ONLY those are rewritten with an
-    anti-join, every other file keeps its bytes and inode. Returns
-    the number of rows actually deleted (Observation-free: the count
-    is the difference of two metadata-cheap aggregates over the
-    affected slice only).
+    forgotten primitive at 100 TB): the merge's file-stats pruning
+    finds the files that can contain the keys, ONLY those are
+    rewritten with an anti-join, every other file keeps its bytes and
+    inode. Returns the number of rows actually deleted (Observation-
+    free: the count is the difference of two aggregates over the
+    affected slice only); a delete that matches no row commits
+    nothing.
 
     `keys` must carry the table's key column (kode_wilayah_kemendagri)
     and `level` (derivable from the kode by the length dispatch —
@@ -767,37 +741,25 @@ def delete_keys(
     if not _table_exists(table_path):
         return 0
     keys = keys.select(_KODE, "level").distinct().persist()
+    existing = None
     try:
-        levels = [r["level"] for r in keys.select("level").distinct().collect()]
-        if not levels:
-            return 0
-        affected = _affected_files(spark, table_path, levels, keys)
+        affected = _affected_files(spark, table_path, keys)
         if not affected:
             return 0
-        existing = (
-            spark.read.option("basePath", table_path)
-            .parquet(*affected)
-            .persist()
-        )
+        existing = _read(spark, table_path, affected).persist()
         survivors = existing.join(keys, [_KODE, "level"], "left_anti")
-        n_before = existing.count()
-        n_survivors = survivors.count()  # slice-sized; reuses the cache
+        # slice-sized; the second count reuses the cache
+        n_deleted = existing.count() - survivors.count()
+        if n_deleted == 0:
+            return 0
         tmp = table_path + "._staged"
-        (
-            survivors.select(*TABLE_COLUMNS)
-            .repartitionByRange(
-                UPSERT_RANGE_PARTITIONS, F.col("level"), F.col(_KODE)
-            )
-            .sortWithinPartitions("level", _KODE)
-            .write.mode("overwrite")
-            .partitionBy("level")
-            .parquet(tmp)
-        )
-        existing.unpersist()
+        _write_staged(_conform(survivors), tmp)
         _swap_files(table_path, tmp, affected, action="delete")
-        return int(n_before - n_survivors)
+        return n_deleted
     finally:
         keys.unpersist()
+        if existing is not None:
+            existing.unpersist()
 
 
 def vacuum_staging(table_path: str) -> list[str]:
@@ -853,7 +815,7 @@ def seed_if_empty(
     """S11: ingest the province file iff no level-1 row exists
     (reference server.js:103-157). Returns True if seeding ran."""
     if _table_exists(table_path):
-        table = spark.read.parquet(table_path)
+        table = load_wilayah(spark, table_path)
         if table.filter(F.col("level") == 1).limit(1).count() > 0:
             return False
     batch = ingest_features(spark, geojson_dir, clock=clock).filter(
@@ -883,7 +845,7 @@ def load_wilayah(spark: SparkSession, table_path: str) -> DataFrame:
     never trusted for a mutating table."""
     if table_version(table_path) is not None:
         return read_table_version(spark, table_path)
-    return spark.read.parquet(table_path)
+    return _read(spark, table_path, [table_path])
 
 
 def search(table: DataFrame, q: str, limit: int = 10) -> DataFrame:
@@ -1029,7 +991,8 @@ def geojson_envelope(table: DataFrame, code: str) -> DataFrame:
                 )
             ).alias("feature_collection"),
         )
-        .orderBy("part")
+        .coalesce(1)
+        .sortWithinPartitions("part")
     )
 
 

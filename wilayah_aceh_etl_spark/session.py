@@ -39,16 +39,18 @@ def _env_int(value: str | None, fallback: int) -> int:
         return fallback
 
 
+def _shuffle_partitions() -> int:
+    """SPARK_GRAFT_SHUFFLE_PARTITIONS, else SPARK_GRAFT_CPUS, else 32;
+    each variable is validated on its own, so a bad first one falls
+    back to a valid second one."""
+    return _env_int(
+        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"),
+        _env_int(os.environ.get("SPARK_GRAFT_CPUS"), 32),
+    )
+
+
 _BUILD_TIME_CONF = {
-    "spark.sql.shuffle.partitions": str(
-        _env_int(
-            os.environ.get(
-                "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-                os.environ.get("SPARK_GRAFT_CPUS"),
-            ),
-            32,
-        )
-    ),
+    "spark.sql.shuffle.partitions": str(_shuffle_partitions()),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
