@@ -26,12 +26,14 @@ queries read the warmup run's materialization instead of executing —
 the warm number measures a cache read. Each query is therefore ALSO
 timed cold: before every cold iteration `clear_computed_caches`
 drops the session CacheManager entries and the trained-model float
-memos (metadata memos — schemas, partition probes, expression
-fragments — stay; they cannot hold results), so every cold run pays
-the full computation from the parquet inputs, training included.
-`queries` / `value` keep the historical warm min-of-3 methodology
-(comparable with rounds 1–12); `queries_cold` / `value_cold` are the
-honest execution figures.
+memos (metadata memos — schemas and partition probes — stay; they
+cannot hold results), so every cold run pays the full computation
+from the parquet inputs, training included. `queries` / `value` keep
+the historical warm min-of-3 methodology (comparable with rounds
+1–12); `queries_cold` / `value_cold` are the honest execution
+figures. A query that raises in either phase is dropped from both
+totals, so they always cover the same query set (`n_queries` ==
+`n_queries_cold`); `errors` names the failed phase.
 """
 
 from __future__ import annotations
@@ -46,6 +48,50 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from wilayah_aceh_etl_spark.cachectl import clear_computed_caches
 from wilayah_aceh_etl_spark.plans.registry import all_specs
 from wilayah_aceh_etl_spark.session import get_spark
+
+
+def time_queries(
+    spark, specs: dict, sf_dir: str
+) -> tuple[dict[str, float], dict[str, float], dict[str, str]]:
+    """Warm and cold min-of-3 wall time per spec, by name.
+
+    A query that raises in either phase is left out of BOTH timing
+    dicts, so `value` and `value_cold` always total the same query
+    set; `errors[name]` says which phase failed (`warm: ...` or
+    `cold: ...`). One failing query must not zero out the whole
+    bench run: the rest are still timed."""
+    timings: dict[str, float] = {}
+    timings_cold: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for name, spec in sorted(specs.items()):
+        phase = "warm"
+        try:
+            spark.sparkContext.setJobDescription(f"bench:{name}")
+            spec.fn(spark, sf_dir).collect()  # warm-up: codegen, listing
+            best = float("inf")
+            for _ in range(3):
+                t0 = time.time()
+                spec.fn(spark, sf_dir).collect()
+                best = min(best, time.time() - t0)
+            warm = round(best, 3)
+            # cold: every iteration pays execution from parquet —
+            # no CacheManager reuse across runs, no trained floats
+            phase = "cold"
+            spark.sparkContext.setJobDescription(f"bench:{name}:cold")
+            best = float("inf")
+            for _ in range(3):
+                clear_computed_caches(spark)
+                t0 = time.time()
+                spec.fn(spark, sf_dir).collect()
+                best = min(best, time.time() - t0)
+            timings[name] = warm
+            timings_cold[name] = round(best, 3)
+        except Exception as exc:  # noqa: BLE001
+            errors[name] = f"{phase}: {type(exc).__name__}: {exc}"[:500]
+            print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
+        finally:
+            spark.sparkContext.setJobDescription(None)
+    return timings, timings_cold, errors
 
 
 def main() -> None:
@@ -79,37 +125,7 @@ def main() -> None:
 
     calibration = _calibrate()
 
-    timings: dict[str, float] = {}
-    timings_cold: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name, spec in sorted(specs.items()):
-        # One failing query must not zero out the whole bench run:
-        # record the error, keep timing the rest.
-        try:
-            spark.sparkContext.setJobDescription(f"bench:{name}")
-            df = spec.fn(spark, sf_dir)
-            df.collect()  # warm-up: codegen + file listing + broadcast
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                spec.fn(spark, sf_dir).collect()
-                best = min(best, time.time() - t0)
-            timings[name] = round(best, 3)
-            # cold: every iteration pays execution from parquet —
-            # no CacheManager reuse across runs, no trained floats
-            spark.sparkContext.setJobDescription(f"bench:{name}:cold")
-            best = float("inf")
-            for _ in range(3):
-                clear_computed_caches(spark)
-                t0 = time.time()
-                spec.fn(spark, sf_dir).collect()
-                best = min(best, time.time() - t0)
-            timings_cold[name] = round(best, 3)
-        except Exception as exc:  # noqa: BLE001
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
-        finally:
-            spark.sparkContext.setJobDescription(None)
+    timings, timings_cold, errors = time_queries(spark, specs, sf_dir)
 
     report = {
         "metric": "headline_queries_wall_clock",
@@ -118,6 +134,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf_val,
         "n_queries": len(timings),
+        "n_queries_cold": len(timings_cold),
         "cpus": int(cpus),
         "timing": "min_of_3_after_warmup",
         "queries_cold": timings_cold,

@@ -126,7 +126,8 @@ def test_array_form_signatures_match_oracle_family(spark):
     defaulted) parameter silently receives the ELEMENT INDEX column
     instead of the closed-over seed, producing a different-but-
     plausible hash family whose candidate set only coincidentally
-    agrees with the oracle's."""
+    agrees with the oracle's. The lambda-built components are the
+    independent reference for the pipeline's SQL-text `_mh_comp`."""
     from pyspark.sql import functions as F
 
     import wilayah_aceh_etl_spark.operators.dedup as D
@@ -146,7 +147,7 @@ def test_array_form_signatures_match_oracle_family(spark):
     )
     arr = docs.select(
         "doc_id",
-        F.array_distinct(word_shingles(F.col("text"), 3)).alias("_sh"),
+        F.array_distinct(word_shingles("text", 3)).alias("_sh"),
     ).filter(F.size("_sh") > 0)
     comps = [
         F.array_min(
@@ -158,6 +159,15 @@ def test_array_form_signatures_match_oracle_family(spark):
         map(tuple, arr.select("doc_id", *comps).collect())
     )
     assert array_family == oracle_family
+    sql_family = sorted(
+        map(
+            tuple,
+            arr.select(
+                "doc_id", *[D._mh_comp(seed) for seed in range(D.DEFAULT_K)]
+            ).collect(),
+        )
+    )
+    assert sql_family == array_family
 
 
 def test_minhash_repeat_runs_reuse_cache_entries(spark):

@@ -2,14 +2,12 @@
 
 The engine keeps two kinds of module-level state:
 
-1. **Metadata / compile-time memos** — parquet-footer schemas
-   (`sources.tables._SCHEMA_MEMO`), RDD-partition-count probes
-   (`sources.tables._SPREAD_MEMO`) and unresolved expression
-   fragments (`functions.vectors._FRAG_MEMO`). These hold
-   *StructType / int / unresolved Column* objects, never rows and
-   never anything derived from data values. They are what a
-   manifest-backed catalog provides for free and are NOT cleared
-   for cold timing.
+1. **Metadata memos** — parquet-footer schemas
+   (`sources.tables._SCHEMA_MEMO`) and RDD-partition-count probes
+   (`sources.tables._SPREAD_MEMO`). These hold *StructType / int*
+   objects, never rows and never anything derived from data values.
+   They are what a manifest-backed catalog provides for free and
+   are NOT cleared for cold timing.
 
 2. **Computed-result state** — Spark's CacheManager entries for the
    `persist()`ed intermediates inside query functions, plus the
@@ -31,8 +29,8 @@ from __future__ import annotations
 def clear_computed_caches(spark) -> None:
     """Drop every computed-result cache: the session's CacheManager
     entries and the trained-model float memos. Metadata memos
-    (schemas, partition-count probes, expression fragments) survive —
-    they cannot hold results."""
+    (schemas, partition-count probes) survive — they cannot hold
+    results."""
     spark.catalog.clearCache()
 
     from wilayah_aceh_etl_spark.operators import ml_train, similarity

@@ -6,6 +6,17 @@ bitwise-identical on the test corpus), which is what lets the
 similarity queries be hash-checked against a SQL oracle at full
 double precision before rounding.
 
+Operand contract: every builder takes SQL TEXT — a column name
+(`vec`), a qualified name (`a.vec`) or any SQL expression, such as
+an `array_literal(...)` — and returns ONE `F.expr` over it. The
+fold text lives in `dot_sql` only. SQL text rather than
+`F.aggregate`/`F.zip_with` with Python lambdas because building a
+higher-order function through the Column API registers each lambda
+over py4j: one lambda-built dot() measured 22.4 ms of driver time
+per build against 0.35 ms for the same fold parsed from SQL text
+(4-vCPU VM, PySpark 4.1), with bit-identical doubles. At that
+price no memo of built expressions is needed.
+
 At scale: these are per-row expressions — a brute-force top-k over
 N vectors × Q queries is a broadcast of Q against a partitioned scan
 of N, no shuffle until the per-query top-k aggregation.
@@ -13,62 +24,15 @@ of N, no shuffle until the per-query top-k aggregation.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Unresolved-expression fragment memo (r12 optimization round).
-# Building a higher-order-function Column crosses py4j dozens of
-# times (lambda registration, nested invocations): one dot() is
-# ~20 ms of driver time, and the similarity operators build up to 7
-# per query construction — ~0.16 s of every timed bench build.
-# A Column over bare field NAMES is a context-free unresolved
-# expression: reusing the object across DataFrames/queries is
-# ordinary Spark usage (analysis copies and resolves per plan), so
-# fragments keyed by (SparkContext identity, builder, names) are
-# memoized and handed back verbatim. Entries are identity-checked
-# against the ACTIVE context so a restarted JVM never serves a
-# fragment bound to a dead gateway.
-_FRAG_MEMO: dict[tuple, tuple[object, Column]] = {}
 
-
-def _frag(kind: str, names: tuple[str, ...], build) -> Column:
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        # Spark Connect (or pre-context call): every lookup would
-        # miss and re-store, making the memo pure overhead and
-        # re-pinning Columns forever — build without storing
-        # (r12 advice)
-        return build()
-    key = (kind, *names)
-    hit = _FRAG_MEMO.get(key)
-    if hit is not None and hit[0] is sc:
-        return hit[1]
-    # rebuilding implies the context changed (or first use): sweep
-    # entries bound to DEAD contexts so a driver that cycles
-    # sessions never accumulates py4j references to old gateways
-    # (r12 review finding)
-    for k in [k for k, v in _FRAG_MEMO.items() if v[0] is not sc]:
-        del _FRAG_MEMO[k]
-    col = build()
-    _FRAG_MEMO[key] = (sc, col)
-    return col
-
-
-def as_double(vec: Column | str) -> Column:
-    """array<float> → array<double> (promote before arithmetic so
-    both engines accumulate in f64). Accepts a column NAME to enable
-    fragment memoization (see _FRAG_MEMO)."""
-    if isinstance(vec, str):
-        return _frag(
-            "as_double", (vec,), lambda: as_double(F.col(vec))
-        )
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Sequential-fold dot product (deterministic order).
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of the sequential-fold dot product of two
+    array<double> operands: (((0.0 + a1·b1) + a2·b2) + …).
 
     Measured and REJECTED alternative (round 8): UNROLLING the fold
     into a flat `0.0 + a[1]·b[1] + … + a[d]·b[d]` expression chain
@@ -80,42 +44,51 @@ def dot(a: Column | str, b: Column | str) -> Column:
     1.10 → 3.86 s, semantic dedup 2.54 → 6.37 s, identical outputs):
     the 64-term tree gets duplicated across window/join/aggregate
     nodes where the single shared lambda did not, and the blown-up
-    generated methods fall out of JIT/codegen budgets. The unrolled
-    `d`-form parameter was REMOVED in round 9 (r8 advice): it had no
-    callers, and `element_at` past the actual array length NULLs the
-    whole product silently (or raises under ANSI mode) — re-add it
-    only with a dimension-validated call site AND whole-query bench
-    evidence.
-
-    String arguments name columns and route through the fragment
-    memo (_FRAG_MEMO): same expression, built once per context."""
-    if isinstance(a, str) and isinstance(b, str):
-        return _frag("dot", (a, b), lambda: dot(F.col(a), F.col(b)))
-    if isinstance(a, str):
-        a = F.col(a)
-    if isinstance(b, str):
-        b = F.col(b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    generated methods fall out of JIT/codegen budgets. Re-add an
+    unrolled form only with a dimension-validated call site (an
+    `element_at` past the array length NULLs the whole product) AND
+    whole-query bench evidence."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
+        "(acc, x) -> acc + x)"
     )
 
 
-def l2_norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return _frag("l2_norm", (a,), lambda: l2_norm(F.col(a)))
-    return F.sqrt(dot(a, a))
+def array_literal(values) -> str:
+    """SQL text of an array<double> literal, `array(0.1D, …)`.
+    `repr` of a Python float is its shortest exact round-trip
+    decimal, so every value (−0.0 and subnormals included) parses
+    back to the identical double. Non-finite values have no SQL
+    literal and raise ValueError."""
+    parts = []
+    for v in values:
+        v = float(v)
+        if not math.isfinite(v):
+            raise ValueError(f"array_literal: non-finite value {v!r}")
+        parts.append(f"{v!r}D")
+    return f"array({', '.join(parts)})"
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return _frag("cosine", (a, b), lambda: cosine(F.col(a), F.col(b)))
-    if isinstance(a, str):
-        a = F.col(a)
-    if isinstance(b, str):
-        b = F.col(b)
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def as_double(vec: str) -> Column:
+    """array<float> → array<double> (promote before arithmetic so
+    both engines accumulate in f64)."""
+    return F.expr(f"transform({vec}, x -> CAST(x AS DOUBLE))")
+
+
+def dot(a: str, b: str) -> Column:
+    """Sequential-fold dot product (deterministic order); see
+    dot_sql."""
+    return F.expr(dot_sql(a, b))
+
+
+def l2_norm(a: str) -> Column:
+    return F.expr(f"SQRT({dot_sql(a, a)})")
+
+
+def cosine(a: str, b: str) -> Column:
+    return F.expr(
+        f"{dot_sql(a, b)} / (SQRT({dot_sql(a, a)}) * SQRT({dot_sql(b, b)}))"
+    )
 
 
 def sign_lsh_bucket(vec: Column, n_bits: int = 8) -> Column:

@@ -92,17 +92,11 @@ def minhash_signatures(
 
 
 def _mh_comp(seed: int) -> "Column":
-    """array_min(transform(_sh, md5(seed#·))) — ONE memoized fragment
-    per seed (functions/vectors.py::_frag): the HOF lambda costs
-    ~15 ms of py4j per build and every signature build needs k=8."""
-    from wilayah_aceh_etl_spark.functions.vectors import _frag
-
-    return _frag(
-        "mh_comp",
-        (str(seed),),
-        lambda: F.array_min(
-            F.transform(F.col("_sh"), lambda s: minhash_component(s, seed))
-        ).alias(f"mh{seed}"),
+    """array_min(transform(_sh, md5(seed#·))) AS mh<seed> — the
+    per-row form of minhash_component's min aggregate."""
+    return F.expr(
+        f"array_min(transform(_sh, s -> md5(concat('{seed}#', s))))"
+        f" AS mh{seed}"
     )
 
 
@@ -136,25 +130,17 @@ def lsh_band_hashes(
 ) -> DataFrame:
     """Fold each band's rows into one hash → (doc_id, band_id,
     band_hash) long-form, the join key for candidate generation."""
-    from wilayah_aceh_etl_spark.functions.vectors import _frag
-
     rows_per_band = k // bands
-
-    def _band_col(b: int) -> "Column":
-        parts = [
-            F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)
-        ]
-        return F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(F.concat(*parts)).alias("band_hash"),
+    band_cols = []
+    for b in range(bands):
+        parts = ", ".join(
+            f"mh{b * rows_per_band + r}" for r in range(rows_per_band)
         )
-
-    band_cols = [
-        _frag("lsh_band", (str(k), str(bands), str(b)), lambda b=b: _band_col(b))
-        for b in range(bands)
-    ]
+        band_cols.append(
+            f"struct({b} AS band_id, md5(concat({parts})) AS band_hash)"
+        )
     return sigs.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band")
+        "doc_id", F.expr(f"explode(array({', '.join(band_cols)})) AS band")
     ).select("doc_id", "band.band_id", "band.band_hash")
 
 
@@ -328,11 +314,6 @@ def verified_near_dup_pairs(
         .filter(F.size("_sh") > 0)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # _mh_comp: one memoized fragment per seed; its lambda takes
-    # exactly ONE parameter — PySpark binds a second (even defaulted)
-    # parameter to the ELEMENT INDEX column, silently replacing the
-    # seed (F.transform invokes the Python fn eagerly at build time,
-    # so the plain closure over the loop variable is correct).
     sigs = sh_arr.select("doc_id", *[_mh_comp(seed) for seed in range(k)])
     # candidate pairs are tiny (≈ O(true duplicates)) and feed three
     # verify subtrees (broadcast size scope + the inter join) —

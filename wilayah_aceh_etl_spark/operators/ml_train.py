@@ -30,7 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
+from wilayah_aceh_etl_spark.functions.vectors import (
+    array_literal,
+    as_double,
+    dot,
+)
 
 Q = 16777216  # 2^24 — the repo-wide quantization for exact reduces
 
@@ -38,8 +42,7 @@ Q = 16777216  # 2^24 — the repo-wide quantization for exact reduces
 def _margin(w: list[float], b: float):
     """m = w·x + b as a Spark column over `x` (array<double>) —
     sequential-fold dot, bitwise equal to DuckDB list_dot_product."""
-    warr = F.array(*[F.lit(float(v)) for v in w])
-    return dot(F.col("x"), warr) + F.lit(float(b))
+    return dot("x", array_literal(w)) + F.lit(float(b))
 
 
 def _prep_vu(df, id_col, vec_col, label_col):

@@ -20,8 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wilayah_aceh_etl_spark.functions.vectors import (
+    array_literal,
     as_double,
     dot,
+    dot_sql,
     l2_norm,
     sign_lsh_bucket,
 )
@@ -449,31 +451,25 @@ def kmeans_centroids(
             )
         else:
             # map-side assignment: argmax cosine, tie -> low cid
-            choices = []
-            for cid in sorted(cents):
-                cv = cents[cid]
-                carr = F.array(*[F.lit(float(x)) for x in cv])
-                cos_c = dot(F.col("vec"), carr) / (
-                    F.col("nrm")
-                    * F.lit(float(math.sqrt(_py_dot(cv, cv))))
-                )
-                choices.append(
-                    F.struct(
-                        cos_c.alias("c"), F.lit(-cid).cast("long").alias("n")
-                    )
-                )
-            cid_expr = (-F.greatest(*choices)["n"]).cast("long")
-            assigned = vn.select(cid_expr.alias("cid"), "vec")
+            choices = ", ".join(
+                f"struct({dot_sql('vec', array_literal(cents[cid]))} / "
+                f"(nrm * {math.sqrt(_py_dot(cents[cid], cents[cid]))!r}D)"
+                f" AS c, CAST({-cid} AS BIGINT) AS n)"
+                for cid in sorted(cents)
+            )
+            assigned = vn.select(
+                F.expr(f"CAST(-(greatest({choices}).n) AS BIGINT) AS cid"),
+                "vec",
+            )
         sums = (
             assigned.groupBy("cid")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("_n"),
                 *[
-                    F.sum(
-                        F.round(F.element_at("vec", j + 1) * Q).cast("long")
+                    F.expr(
+                        f"CAST(sum(CAST(round(element_at(vec, {j + 1}) * {Q})"
+                        f" AS BIGINT)) AS BIGINT) AS _s{j}"
                     )
-                    .cast("long")
-                    .alias(f"_s{j}")
                     for j in range(d)
                 ],
             )
@@ -1312,9 +1308,8 @@ def norm_stats_by_label(
 ) -> DataFrame:
     """Per-label L2-norm profile (embedding-space sanity check)."""
     v = corpus.select(
-        F.col(label_col).alias("label"),
-        F.round(l2_norm(as_double(vec_col)), 6).alias("norm"),
-    )
+        F.col(label_col).alias("label"), as_double(vec_col).alias("x")
+    ).select("label", F.round(l2_norm("x"), 6).alias("norm"))
     return (
         v.groupBy("label")
         .agg(

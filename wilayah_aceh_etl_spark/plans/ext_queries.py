@@ -1067,7 +1067,7 @@ def array_hof_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wilayah_aceh_etl_spark.functions.vectors import as_double
 
     emb = load_table(spark, sf_dir, "embeddings")
-    e = as_double(F.col("embedding"))
+    e = as_double("embedding")
     l1 = F.aggregate(
         F.transform(e, lambda x: F.abs(x)), F.lit(0.0), lambda a, x: a + x
     )
@@ -1315,7 +1315,7 @@ def text_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wilayah_aceh_etl_spark.functions.text import word_shingles
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = word_shingles(F.col("text"), 3)
+    sh = word_shingles("text", 3)
     n = F.size(sh)
     nd = F.size(F.array_distinct(sh))
     return docs.select(
@@ -1548,7 +1548,7 @@ def embedding_kmeans_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wilayah_aceh_etl_spark.functions import vectors as V
 
     e = load_table(spark, sf_dir, "embeddings")
-    v = e.select("vec_id", V.as_double(F.col("embedding")).alias("e"))
+    v = e.select("vec_id", V.as_double("embedding").alias("e"))
     cent = v.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("centroid_id"), F.col("e").alias("ce")
     )
@@ -3095,7 +3095,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
+        "vec_id", "label", as_double("embedding").alias("vec")
     )
     q = v.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
@@ -3113,7 +3113,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "vec_id",
             F.col("label").alias("neg_label"),
-            cosine(F.col("qvec"), F.col("vec")).alias("_c"),
+            cosine("qvec", "vec").alias("_c"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("_c").desc(), "vec_id")
@@ -4412,7 +4412,7 @@ def contamination_semantic_embedding(
         train.join(
             F.broadcast(test), F.col("bucket") == F.col("t_bucket")
         )
-        .filter(cosine(F.col("vec"), F.col("t_vec")) >= 0.2)
+        .filter(cosine("vec", "t_vec") >= 0.2)
         .select("vec_id")
         .distinct()
         .withColumn("_hit", F.lit(1))

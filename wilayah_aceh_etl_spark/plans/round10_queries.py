@@ -190,7 +190,11 @@ def data_curation_influence_dedup_audit(
     queries don't already move. Both trainings ride their per-corpus
     memos (trajectory + quantizer), so in a gate window with the
     parent queries this audit pays only the join and aggregates."""
-    from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        as_double,
+        dot,
+    )
     from wilayah_aceh_etl_spark.operators.ml_train import (
         logreg_fit_trajectory_cached,
     )
@@ -205,13 +209,12 @@ def data_curation_influence_dedup_audit(
         labeled, cache_key=sf_dir, n_iter=3, lr=2.0
     )
     v = labeled.select(
-        "vec_id", as_double(F.col("embedding")).alias("x"), "y"
+        "vec_id", as_double("embedding").alias("x"), "y"
     )
     xx = dot("x", "x")
     terms = []
     for w, b in traj:
-        warr = F.array(*[F.lit(float(x)) for x in w])
-        m = dot(F.col("x"), warr) + F.lit(float(b))
+        m = dot("x", array_literal(w)) + F.lit(float(b))
         e = (
             F.lit(0.5)
             + m / (F.lit(2.0) * (F.lit(1.0) + F.abs(m)))
@@ -347,7 +350,10 @@ def corpus_classifier_reliability_bins(
     100 TB the reliability audit costs one pass over the eval
     shard."""
     from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit
-    from wilayah_aceh_etl_spark.functions.vectors import dot as vdot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        dot as vdot,
+    )
     from wilayah_aceh_etl_spark.plans.round9_queries import (
         _qc_feature_vectors,
     )
@@ -362,8 +368,7 @@ def corpus_classifier_reliability_bins(
     w, b = logreg_fit(
         train, n_iter=3, lr=0.5, id_col="doc_id", vec_col="x"
     )
-    warr = F.array(*[F.lit(float(wj)) for wj in w])
-    m = vdot(F.col("x"), warr) + F.lit(float(b))
+    m = vdot("x", array_literal(w)) + F.lit(float(b))
     p = F.lit(0.5) + m / (F.lit(2.0) * (F.lit(1.0) + F.abs(m)))
     scored = labeled.filter(F.col("doc_id") % 5 == 0).select(
         "y", m.alias("m"), F.round(p * 16777216).cast("long").alias("p_q")
@@ -527,7 +532,7 @@ def _chain_audit_frame(
     emb = load_table(spark, sf_dir, "embeddings")
     sd = S.semantic_dedup(emb, threshold=0.35, n_iter=2, **sd_kwargs)
     v = emb.select(
-        "vec_id", as_double(F.col("embedding")).alias("vec")
+        "vec_id", as_double("embedding").alias("vec")
     ).withColumn("nrm", l2_norm("vec"))
     w = Window.partitionBy("cid").orderBy(
         F.col("cent_cos").asc(), F.col("vec_id")
@@ -738,7 +743,11 @@ def _gns_scalar_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σs² of the 65 quantized coordinate sums as DECIMAL(38,0) — the
     exact integers both the GNS query and the critical-batch
     schedule (round11_queries) emit their floats from."""
-    from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        as_double,
+        dot,
+    )
     from wilayah_aceh_etl_spark.operators.ml_train import (
         logreg_fit_trajectory_cached,
     )
@@ -754,10 +763,9 @@ def _gns_scalar_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w3, b3 = traj[-1]
     v = labeled.select(
-        "vec_id", as_double(F.col("embedding")).alias("x"), "y"
+        "vec_id", as_double("embedding").alias("x"), "y"
     )
-    warr = F.array(*[F.lit(float(x)) for x in w3])
-    m = dot(F.col("x"), warr) + F.lit(float(b3))
+    m = dot("x", array_literal(w3)) + F.lit(float(b3))
     e = (
         F.lit(0.5)
         + m / (F.lit(2.0) * (F.lit(1.0) + F.abs(m)))
@@ -1187,12 +1195,16 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeding a partitions×64-long combined aggregate — the identical
     shuffle shape as one GD/Lloyd step. No joins over data, no d×d
     state anywhere."""
-    from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        as_double,
+        dot,
+    )
 
     d = 64
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select(
-        "vec_id", as_double(F.col("embedding")).alias("x")
+        "vec_id", as_double("embedding").alias("x")
     )
     u = v.select("vec_id", F.posexplode("x").alias("pos0", "val")).select(
         "vec_id", (F.col("pos0") + 1).alias("pos"), "val"
@@ -1231,11 +1243,12 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu_arr = F.array(*[F.lit(float(m)) for m in mu])
 
     def _power_step(vec: list[float]) -> list[float]:
-        varr = F.array(*[F.lit(float(x)) for x in vec])
         mu_dot_v = _fold_dot(mu, vec)
         sc = v.select(
             "vec_id",
-            (dot(F.col("x"), varr) - F.lit(float(mu_dot_v))).alias("sc"),
+            (
+                dot("x", array_literal(vec)) - F.lit(float(mu_dot_v))
+            ).alias("sc"),
         )
         a = {
             int(r["pos"]): int(r["s"])
@@ -1596,7 +1609,7 @@ def embedding_alignment_by_label(
     d = 64
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("x")
+        "vec_id", "label", as_double("embedding").alias("x")
     )
     u = v.select(
         "label", F.posexplode("x").alias("pos0", "val")

@@ -943,7 +943,7 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wilayah_aceh_etl_spark.functions import vectors as V
 
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", V.as_double(F.col("embedding")).alias("e"))
+    v = emb.select("vec_id", V.as_double("embedding").alias("e"))
     sub = spark.range(4).select(F.col("id").cast("int").alias("s"))
     seg = lambda col, s: F.slice(col, s * 16 + 1, 16)  # noqa: E731
 
@@ -2221,7 +2221,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wilayah_aceh_etl_spark.functions import vectors as V
 
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", V.as_double(F.col("embedding")).alias("e"))
+    v = emb.select("vec_id", V.as_double("embedding").alias("e"))
     px = v.select(
         F.element_at("e", 1).alias("ci"),
         F.posexplode("e").alias("dim0", "val"),
@@ -2364,7 +2364,7 @@ def embedding_cluster_silhouette(
     from wilayah_aceh_etl_spark.functions import vectors as V
 
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", V.as_double(F.col("embedding")).alias("e"))
+    v = emb.select("vec_id", V.as_double("embedding").alias("e"))
     cent = v.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("centroid_id"), F.col("e").alias("ce")
     )

@@ -2216,7 +2216,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = S.brute_force_topk(emb, q, k=8).select(
         "query_id", "vec_id", F.col("cos_sim").alias("rel")
     )
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("e"))
+    vecs = emb.select("vec_id", as_double("embedding").alias("e"))
     pv = cand.join(vecs, "vec_id").select("query_id", "vec_id", "e")
     pa = pv.select(
         "query_id", F.col("vec_id").alias("a"), F.col("e").alias("ea")
@@ -2231,7 +2231,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "a",
             "b",
-            F.round(cosine(F.col("ea"), F.col("eb")), 6).alias("s"),
+            F.round(cosine("ea", "eb"), 6).alias("s"),
         )
     )
     w1 = Window.partitionBy("query_id").orderBy(

@@ -3875,7 +3875,7 @@ def embedding_kmeans_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Q = 16777216
     e = load_table(spark, sf_dir, "embeddings")
-    v = e.select("vec_id", V.as_double(F.col("embedding")).alias("e"))
+    v = e.select("vec_id", V.as_double("embedding").alias("e"))
     u = v.select("vec_id", F.posexplode("e").alias("pos0", "val")).select(
         "vec_id", (F.col("pos0") + 1).alias("pos"), "val"
     )

@@ -1211,10 +1211,9 @@ def pipeline_quality_classifier_filter(
             lr=4.0,
             vec_col="x",
         )
-        from wilayah_aceh_etl_spark.functions.vectors import dot
+        from wilayah_aceh_etl_spark.functions.vectors import array_literal, dot
 
-        warr = F.array(*[F.lit(float(v)) for v in w])
-        score = dot(F.col("x"), warr) + F.lit(float(b))
+        score = dot("x", array_literal(w)) + F.lit(float(b))
         return (
             feat.groupBy("lang")
             .agg(
@@ -1503,7 +1502,11 @@ def pipeline_training_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixture weight is what a data-curation run reports. Every stage
     is a previously-gated operator; the composition adds three
     narrow joins and zero extra corpus shuffles beyond its stages."""
-    from wilayah_aceh_etl_spark.functions.vectors import cosine, dot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        cosine,
+        dot,
+    )
     from wilayah_aceh_etl_spark.operators import similarity as SIM
     from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit
     from pyspark.sql.window import Window
@@ -1535,8 +1538,7 @@ def pipeline_training_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         feat.unpersist()
-    warr = F.array(*[F.lit(float(v)) for v in w])
-    score = dot(F.col("x"), warr) + F.lit(float(b))
+    score = dot("x", array_literal(w)) + F.lit(float(b))
     scored = docs.join(
         feat.select("doc_id", "x"), "doc_id"
     ).withColumn("_keep_q", score > 0)
@@ -1561,7 +1563,7 @@ def pipeline_training_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     contaminated = (
         vb.filter(F.col("vec_id") >= 50)
         .join(F.broadcast(test), F.col("bucket") == F.col("t_bucket"))
-        .filter(cosine(F.col("vec"), F.col("t_vec")) >= 0.2)
+        .filter(cosine("vec", "t_vec") >= 0.2)
         .select("vec_id")
         .distinct()
         .withColumn("_dirty", F.lit(True))

@@ -543,13 +543,13 @@ def similarity_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wilayah_aceh_etl_spark.functions import vectors as V
 
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", V.as_double(F.col("embedding")).alias("e"))
+    v = emb.select("vec_id", V.as_double("embedding").alias("e"))
     cc = F.broadcast(
         v.filter(F.col("vec_id") < 16).select(
             F.col("vec_id").alias("ccid"), F.col("e").alias("ce")
         )
     )
-    diff = F.zip_with(F.col("e"), F.col("ce"), lambda x, y: x - y)
+    diff = "zip_with(e, ce, (x, y) -> x - y)"
     ad = v.join(cc).select(
         "vec_id", "ccid", V.dot(diff, diff).alias("d2")
     )
@@ -559,7 +559,7 @@ def similarity_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     resid = (
         assign.join(v, "vec_id")
         .join(cc, F.col("centroid") == F.col("ccid"))
-        .select("vec_id", "centroid", diff.alias("r"))
+        .select("vec_id", "centroid", F.expr(diff).alias("r"))
     )
     sub = F.broadcast(
         spark.range(4).select(F.col("id").cast("int").alias("s"))
@@ -579,7 +579,7 @@ def similarity_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rs = resid.join(sub).select(
         "vec_id", "centroid", "s", seg(F.col("r")).alias("rv")
     )
-    sd = F.zip_with(F.col("rv"), F.col("cb"), lambda x, y: x - y)
+    sd = "zip_with(rv, cb, (x, y) -> x - y)"
     codes = (
         rs.join(F.broadcast(pqc), "s")
         .select("vec_id", "centroid", "s", "cbid", V.dot(sd, sd).alias("d2"))
@@ -598,7 +598,7 @@ def similarity_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrs = (
         probes.join(v, probes.query_id == v.vec_id)
         .join(cc, F.col("centroid") == F.col("ccid"))
-        .select("query_id", "centroid", diff.alias("r"))
+        .select("query_id", "centroid", F.expr(diff).alias("r"))
         .join(sub)
         .select("query_id", "centroid", "s", seg(F.col("r")).alias("rv"))
     )

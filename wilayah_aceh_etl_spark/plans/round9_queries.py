@@ -2593,7 +2593,10 @@ def corpus_quality_classifier_serving(
     (disjoint planted vocabularies -> every holdout doc on the right
     side of the threshold), DSIR-style."""
     from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit
-    from wilayah_aceh_etl_spark.functions.vectors import dot as vdot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        dot as vdot,
+    )
 
     docs0 = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -2605,8 +2608,7 @@ def corpus_quality_classifier_serving(
         train, n_iter=3, lr=0.5, id_col="doc_id", vec_col="x"
     )
     # serving: broadcast weights as a literal expression, zero joins
-    warr = F.array(*[F.lit(float(wj)) for wj in w])
-    m = vdot(F.col("x"), warr) + F.lit(float(b))
+    m = vdot("x", array_literal(w)) + F.lit(float(b))
     return xv.select(
         "doc_id",
         F.round(m * 16777216).cast("long").alias("logit_q"),
@@ -2778,7 +2780,10 @@ def data_pruning_el2n_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact. The oracle pins equivalence to the definitional global
     rank."""
     from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit
-    from wilayah_aceh_etl_spark.functions.vectors import dot as vdot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        dot as vdot,
+    )
 
     docs0 = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -2787,11 +2792,8 @@ def data_pruning_el2n_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     xv = _qc_feature_vectors(spark, sf_dir)
     v = xv.join(docs0, "doc_id").filter(F.col("doc_id") % 5 != 0)
     w, b = logreg_fit(v, n_iter=3, lr=0.5, id_col="doc_id", vec_col="x")
-    warr = F.array(*[F.lit(float(wj)) for wj in w])
-    logit_q = (
-        F.round((vdot(F.col("x"), warr) + F.lit(float(b))) * 16777216)
-        .cast("long")
-    )
+    m = vdot("x", array_literal(w)) + F.lit(float(b))
+    logit_q = F.round(m * 16777216).cast("long")
     h = v.select(
         "doc_id",
         "y",
@@ -2924,7 +2926,10 @@ def labels_confident_learning_noise(
     set is EXACTLY the planted flips, each with the clean label
     suggested."""
     from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit
-    from wilayah_aceh_etl_spark.functions.vectors import dot as vdot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        dot as vdot,
+    )
 
     y_clean = F.when(F.col("lang") == "en", 1).otherwise(0)
     docs0 = load_table(spark, sf_dir, "documents").select(
@@ -2936,11 +2941,8 @@ def labels_confident_learning_noise(
     xv = _qc_feature_vectors(spark, sf_dir)
     v = xv.join(docs0, "doc_id")
     w, b = logreg_fit(v, n_iter=3, lr=0.5, id_col="doc_id", vec_col="x")
-    warr = F.array(*[F.lit(float(wj)) for wj in w])
-    m_q = (
-        F.round((vdot(F.col("x"), warr) + F.lit(float(b))) * 16777216)
-        .cast("long")
-    )
+    m = vdot("x", array_literal(w)) + F.lit(float(b))
+    m_q = F.round(m * 16777216).cast("long")
     scored = v.select("doc_id", "y", m_q.alias("m_q"))
     th = scored.agg(
         F.sum(F.when(F.col("y") == 1, F.col("m_q")).otherwise(0))
@@ -3124,7 +3126,11 @@ def data_cartography_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round9_ops.py::test_cartography_flipped_labels_are_hard
     pins the paper's headline use (planted label flips land in the
     low-confidence region)."""
-    from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        as_double,
+        dot,
+    )
     from wilayah_aceh_etl_spark.operators.ml_train import (
         logreg_fit_trajectory_cached,
     )
@@ -3138,12 +3144,11 @@ def data_cartography_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, cache_key=sf_dir, n_iter=3, lr=float(_TD_LR)
     )
     v = emb.select(
-        "vec_id", as_double(F.col("embedding")).alias("x"), "y"
+        "vec_id", as_double("embedding").alias("x"), "y"
     )
     ps, accs = [], []
     for w, b in traj:
-        warr = F.array(*[F.lit(float(x)) for x in w])
-        m = dot(F.col("x"), warr) + F.lit(float(b))
+        m = dot("x", array_literal(w)) + F.lit(float(b))
         sig = F.lit(0.5) + m / (F.lit(2.0) * (F.lit(1.0) + F.abs(m)))
         ps.append(F.when(F.col("y") == 1, sig).otherwise(F.lit(1.0) - sig))
         accs.append(((m > 0) == (F.col("y") == 1)).cast("int"))
@@ -3243,7 +3248,11 @@ def data_pruning_forgetting_events(
     training, then ONE corpus scan with three literal-weight dots
     per row; zero joins, zero shuffles, no global state. Probed
     non-vacuous at all three SFs (20-205 forgetting events)."""
-    from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        as_double,
+        dot,
+    )
     from wilayah_aceh_etl_spark.operators.ml_train import (
         logreg_fit_trajectory_cached,
     )
@@ -3257,12 +3266,11 @@ def data_pruning_forgetting_events(
         emb, cache_key=sf_dir, n_iter=3, lr=float(_TD_LR)
     )
     v = emb.select(
-        "vec_id", as_double(F.col("embedding")).alias("x"), "y"
+        "vec_id", as_double("embedding").alias("x"), "y"
     )
     accs = []
     for w, b in traj:
-        warr = F.array(*[F.lit(float(x)) for x in w])
-        m = dot(F.col("x"), warr) + F.lit(float(b))
+        m = dot("x", array_literal(w)) + F.lit(float(b))
         accs.append(((m > 0) == (F.col("y") == 1)).cast("int"))
     acc = v.select(
         "vec_id",
@@ -3364,7 +3372,11 @@ def data_selection_rho_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero joins. tests/test_round9_ops.py::test_rho_loss_selects_learnable_not_noise
     pins the paper's semantics on a planted corpus (label-noise
     points rank below clean not-yet-learnt points)."""
-    from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        as_double,
+        dot,
+    )
     from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -3377,12 +3389,11 @@ def data_selection_rho_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     wm, bm = logreg_fit(train, n_iter=3, lr=float(_TD_LR))
     wi, bi = logreg_fit(holdout, n_iter=3, lr=float(_TD_LR))
     v = train.select(
-        "vec_id", as_double(F.col("embedding")).alias("x"), "y"
+        "vec_id", as_double("embedding").alias("x"), "y"
     )
 
     def _p(w: list[float], b: float):
-        warr = F.array(*[F.lit(float(x)) for x in w])
-        m = dot(F.col("x"), warr) + F.lit(float(b))
+        m = dot("x", array_literal(w)) + F.lit(float(b))
         sig = F.lit(0.5) + m / (F.lit(2.0) * (F.lit(1.0) + F.abs(m)))
         return F.when(F.col("y") == 1, sig).otherwise(F.lit(1.0) - sig)
 
@@ -4028,13 +4039,17 @@ def data_selection_kcenter_coreset(
     is sample-then-refine coresets (e.g. Bachem et al.'s lightweight
     coresets: one uniform/importance sample pass, then greedy on
     the sample), trading the 2-approximation for one scan."""
-    from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        as_double,
+        dot,
+    )
 
     k = 8
     v = (
         load_table(spark, sf_dir, "embeddings")
         .select(
-            "vec_id", as_double(F.col("embedding")).alias("e")
+            "vec_id", as_double("embedding").alias("e")
         )
         .persist()
     )
@@ -4044,10 +4059,10 @@ def data_selection_kcenter_coreset(
         out = [(1, centers[0][0], None)]  # radius filled engine-side
 
         def _d2(cv: list[float]):
-            carr = F.array(*[F.lit(float(x)) for x in cv])
+            carr = array_literal(cv)
             return F.greatest(
                 dot("e", "e")
-                - 2 * dot(F.col("e"), carr)
+                - 2 * dot("e", carr)
                 + dot(carr, carr),
                 F.lit(0.0),
             )
@@ -4452,7 +4467,11 @@ def data_attribution_tracin_self(
     tests/test_round9_ops.py::test_tracin_flags_flipped_labels pins
     the paper's use: planted label flips land in the high-self-
     influence tail."""
-    from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        as_double,
+        dot,
+    )
     from wilayah_aceh_etl_spark.operators.ml_train import (
         logreg_fit_trajectory_cached,
     )
@@ -4466,13 +4485,12 @@ def data_attribution_tracin_self(
         emb, cache_key=sf_dir, n_iter=3, lr=float(_TD_LR)
     )
     v = emb.select(
-        "vec_id", as_double(F.col("embedding")).alias("x"), "y"
+        "vec_id", as_double("embedding").alias("x"), "y"
     )
     xx = dot("x", "x")
     terms = []
     for w, b in traj:
-        warr = F.array(*[F.lit(float(x)) for x in w])
-        m = dot(F.col("x"), warr) + F.lit(float(b))
+        m = dot("x", array_literal(w)) + F.lit(float(b))
         e = (
             F.lit(0.5)
             + m / (F.lit(2.0) * (F.lit(1.0) + F.abs(m)))
@@ -4945,16 +4963,20 @@ def embedding_jl_projection_audit(
     aggregate a consumer would add on top is one map-side-combined
     summary. tests pin the JL property itself (mean distortion ~ 1,
     all positive, concentration within the lemma's envelope)."""
-    from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        as_double,
+        dot,
+    )
 
     k = 16
     cols = _jl_signs(64, k)
     v = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
+        "vec_id", as_double("embedding").alias("e")
     )
     ys = [
         (
-            dot(F.col("e"), F.array(*[F.lit(float(s)) for s in c]))
+            dot("e", array_literal(c))
             / F.lit(4.0)
         ).alias(f"y{i}")
         for i, c in enumerate(cols)

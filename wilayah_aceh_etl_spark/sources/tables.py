@@ -49,10 +49,10 @@ _SCHEMA_MEMO: dict[str, tuple[int, int, "object"]] = {}
 # spread()'s partition-count probe memo: (plan semanticHash, goal)
 # → (SparkContext, observed scan partition count). Metadata only
 # (see spread's docstring); a stale entry can only change a
-# repartition decision. The context rides in the VALUE (r12 advice,
-# same contract as _FRAG_MEMO) so a restarted driver — whose new
-# context may have a different defaultParallelism and different
-# scan splits — never reuses counts probed under the old one;
+# repartition decision. The context rides in the VALUE (r12 advice)
+# so a restarted driver — whose new context may have a different
+# defaultParallelism and different scan splits — never reuses
+# counts probed under the old one;
 # dead-context entries are swept whenever a rebuild happens.
 _SPREAD_MEMO: dict[tuple[int, int], tuple[object, int]] = {}
 

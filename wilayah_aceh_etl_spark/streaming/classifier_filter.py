@@ -41,13 +41,16 @@ def classifier_filter_stream(
     raw batch to (doc_id, x) feature vectors; it is injected by the
     caller so this module stays import-independent of the plan
     layer. Returns the unstarted writeStream."""
-    from wilayah_aceh_etl_spark.functions.vectors import dot as vdot
+    from wilayah_aceh_etl_spark.functions.vectors import (
+        array_literal,
+        dot as vdot,
+    )
 
-    warr = F.array(*[F.lit(float(wj)) for wj in w])
+    warr = array_literal(w)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         xv = featurize(batch_df)
-        m = vdot(F.col("x"), warr) + F.lit(float(b))
+        m = vdot("x", warr) + F.lit(float(b))
         xv.select(
             "doc_id",
             F.round(m * 16777216).cast("long").alias("logit_q"),
