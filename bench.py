@@ -18,12 +18,12 @@ headline total drifts +3% and the probe drifts +3%, that's load; if
 the total moves and the probe doesn't, that's a real plan change.
 `value_over_calibration` pre-divides for convenience.
 
-COLD figures (r13, measurement-bug fix declared in
-OPTIMIZATION_r13.md): several query functions `persist()`
-intermediates, and the trained-quantizer memos keep model floats on
-the driver, so under min-of-3-after-warmup the timed runs of those
-queries read the warmup run's materialization instead of executing —
-the warm number measures a cache read. Each query is therefore ALSO
+COLD figures (added in r13 as a measurement-bug fix): several
+query functions `persist()` intermediates, and the trained-quantizer
+memos keep model floats on the driver, so under
+min-of-3-after-warmup the timed runs of those queries read the
+warmup run's materialization instead of executing — the warm
+number measures a cache read. Each query is therefore ALSO
 timed cold: before every cold iteration `clear_computed_caches`
 drops the session CacheManager entries and the trained-model float
 memos (metadata memos — schemas and partition probes — stay; they

@@ -1,17 +1,27 @@
-"""The SQL-text expression builders (functions/vectors.py and
-functions/text.py::word_shingles) against pure-Python references:
-bit-identical doubles for the folds, exact literal round-trips, and
-shingles for documents shorter than, equal to and longer than n."""
+"""The SQL-text expression builders (functions/vectors.py,
+functions/text.py::word_shingles and token_quality_metrics,
+operators/text_analysis.py::gopher_rule_flags) against pure-Python
+references: bit-identical doubles for the folds, exact literal
+round-trips, shingles for documents shorter than, equal to and
+longer than n, and the per-document text signals."""
 
 from __future__ import annotations
 
 import math
 import random
+import re
 import struct
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 
-from wilayah_aceh_etl_spark.functions.text import word_shingles
+from wilayah_aceh_etl_spark.functions.text import (
+    EN_STOPWORDS,
+    token_quality_metrics,
+    word_shingles,
+)
+from wilayah_aceh_etl_spark.operators.text_analysis import gopher_rule_flags
 from wilayah_aceh_etl_spark.functions.vectors import (
     array_literal,
     as_double,
@@ -115,3 +125,79 @@ def test_word_shingles_match_python(spark, n):
     assert [list(r["sh"]) for r in expr_sh] == [
         _py_shingles(d.upper(), n) for d in docs
     ]
+
+
+def _round4(x: float) -> float:
+    """Spark's round(x, 4): HALF_UP on the shortest decimal repr."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+def _text_docs(seed: int) -> list[tuple[int, str | None]]:
+    # stopwords, mixed case, digits and empty tokens (double spaces);
+    # lengths on both sides of the Gopher 50-word bound
+    rng = random.Random(seed)
+    vocab = ["the", "The", "a", "of", "and", "is", "be", "to", "that",
+             "have", "with", "cat", "sat", "mat", "x1", "42", "zebra",
+             "verylongwordhere", ""]
+    docs = [(0, ""), (1, None), (2, "a"), (3, "the  cat")]
+    for i in range(4, 40):
+        n = rng.choice([1, 3, 10, 49, 50, 51, 120])
+        docs.append((i, " ".join(rng.choice(vocab) for _ in range(n))))
+    return docs
+
+
+def test_token_quality_metrics_match_python(spark):
+    docs = _text_docs(7)
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    m = token_quality_metrics("text")
+    got = {
+        r["doc_id"]: r.asDict()
+        for r in df.select(
+            "doc_id", *[c.alias(k) for k, c in m.items()]
+        ).collect()
+    }
+    for doc_id, text in docs:
+        r = got.pop(doc_id)
+        if text is None:
+            assert all(r[k] is None for k in m), r
+            continue
+        w = text.split(" ")
+        n = len(w)
+        assert r["n_tokens"] == n and r["n_distinct"] == len(set(w))
+        assert r["distinct_ratio"] == _round4(len(set(w)) / n)
+        assert r["avg_token_len"] == _round4(sum(map(len, w)) / n)
+        n_stop = sum(t in EN_STOPWORDS for t in w)
+        assert r["stopword_ratio"] == _round4(n_stop / n)
+    assert not got
+
+
+def _py_gopher(text: str) -> dict[str, int]:
+    w = text.split(" ")
+    wc, chars = len(w), len(text) - len(w) + 1
+    alpha = sum(bool(re.fullmatch("[a-z]+", t)) for t in w)
+    stop = sum(
+        t in ("the", "be", "to", "of", "and", "that", "have", "with")
+        for t in w
+    )
+    top = max(Counter(w).values())
+    return {
+        "r_wc": int(50 <= wc <= 100000),
+        "r_mwl": int(3 * wc <= chars <= 10 * wc),
+        "r_alpha": int(5 * alpha >= 4 * wc),
+        "r_stop": int(stop >= 2),
+        "r_rep": int(5 * top <= wc),
+    }
+
+
+def test_gopher_rule_flags_match_python(spark):
+    docs = _text_docs(11)
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {
+        r["doc_id"]: {k: v for k, v in r.asDict().items() if k != "doc_id"}
+        for r in gopher_rule_flags(df).collect()
+    }
+    # a null text has no words, so the top-word join drops it
+    want = {i: _py_gopher(t) for i, t in docs if t is not None}
+    assert got == want
+    flags = [f for v in want.values() for f in v.values()]
+    assert 0 in flags and 1 in flags

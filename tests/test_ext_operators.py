@@ -322,21 +322,54 @@ def test_cms_heavy_hitters_error_bounds(spark):
         assert r.est_n - r.exact_n <= max(1, int(0.001 * n_total)), r
 
 
-def test_mapside_near_dup_matches_persisted_path(spark, docs):
-    """The two pipeline shapes (persisted shingle relation vs
-    map-side signatures + candidate-scoped verify) must be
-    output-identical — the choice between them is a shuffle-budget
-    trade, never a semantics change."""
-    a = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in D.verified_near_dup_pairs(docs, threshold=0.5).collect()
+def test_array_verify_matches_exploded_reference(spark):
+    """The array verify (shingle_arrays + jaccard_for_pair_arrays)
+    against the exploded reference (distinct_shingles +
+    jaccard_for_pairs) on the edge cases: documents shorter than n
+    words, empty and null text, repeated shingles, and a pair sharing
+    no shingle, which the exploded join drops and the array verify
+    reads as 0.0."""
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c d e"),
+            (2, "a b c d x"),
+            (3, "a b c a b c a b c"),  # each shingle three times
+            (4, "a b c a b c"),
+            (5, "p q r s"),  # shares no shingle with 1-4
+            (6, "a b"),  # shorter than n
+            (7, ""),
+            (8, None),
+        ],
+        "doc_id long, text string",
     )
-    b = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in D.verified_near_dup_pairs_mapside(docs, threshold=0.5).collect()
+    pairs = spark.createDataFrame(
+        [(a, b) for a in range(1, 9) for b in range(a + 1, 9)],
+        "doc_a long, doc_b long",
     )
-    assert a == b
-    assert len(a) > 0
+    arrays = D.shingle_arrays(docs)
+    assert {
+        r.doc_id: sorted(r._sh) for r in arrays.collect()
+    } == {
+        1: ["a b c", "b c d", "c d e"],
+        2: ["a b c", "b c d", "c d x"],
+        3: ["a b c", "b c a", "c a b"],
+        4: ["a b c", "b c a", "c a b"],
+        5: ["p q r", "q r s"],
+    }
+    ref = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in D.jaccard_for_pairs(
+            pairs, D.distinct_shingles(docs, "doc_id")
+        ).collect()
+    }
+    got = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in D.jaccard_for_pair_arrays(pairs, arrays).collect()
+    }
+    assert {p: j for p, j in got.items() if j > 0} == ref
+    assert ref[(1, 2)] == 0.5 and ref[(3, 4)] == 1.0 and ref[(1, 3)] == 0.2
+    assert got[(1, 5)] == 0.0 and (1, 5) not in ref
+    assert all(a <= 5 and b <= 5 for a, b in got)
 
 
 def test_python_cms_reader_matches_jvm(spark):

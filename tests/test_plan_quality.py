@@ -2,7 +2,8 @@
 introduce scale anti-patterns (tools/explain_audit.py as a test).
 
 Whitelisted exceptions are the documented brute-force baselines and
-the IVF centroid-assignment broadcast product (SCALE.md §4).
+the IVF centroid-assignment broadcast product (SCALE.md §4). No
+lambda body may re-split a column per array element.
 """
 
 from __future__ import annotations
@@ -269,10 +270,75 @@ GLOBAL_WINDOW_ALLOWED = {
 }
 
 
+# Queries allowed a lambda body that calls split/regexp_* on a column
+# bound outside the lambda: Spark interprets lambda bodies, so the
+# call re-runs once per array element (bind it once instead:
+# `transform(array(split(...)), w -> ...)[0]`). name -> one-line
+# reason. The set may only shrink: LAMBDA_SPLIT_ALLOWED_MAX is lowered
+# with every entry that goes and never raised.
+LAMBDA_SPLIT_ALLOWED: dict[str, str] = {}
+LAMBDA_SPLIT_ALLOWED_MAX = 0
+
+
 def _walk_logical(node):
     yield node
     for i in range(node.children().size()):
         yield from _walk_logical(node.children().apply(i))
+
+
+_SPLIT_OR_REGEXP = {
+    "StringSplit",
+    "RLike",
+    "RegExpReplace",
+    "RegExpExtract",
+    "RegExpExtractAll",
+    "RegExpCount",
+    "RegExpSubStr",
+    "RegExpInStr",
+}
+
+
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _plan_nodes(plan):
+    """Every node of `plan`, including the plans of persisted
+    relations (an InMemoryRelation is a leaf that hides its plan)."""
+    for node in _walk_logical(plan):
+        yield node
+        kind = node.getClass().getSimpleName()
+        if kind == "InMemoryRelation":
+            yield from _plan_nodes(node.cachedPlan())
+        elif kind == "AdaptiveSparkPlanExec":
+            yield from _plan_nodes(node.inputPlan())
+
+
+def _lambda_splits_outer_column(df) -> set[str]:
+    """The split/regexp_* calls inside lambda bodies of the optimized
+    plan whose operands read a column (an AttributeReference — lambda
+    variables are NamedLambdaVariables)."""
+    jvm = df.sparkSession._jvm
+    lam = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.LAMBDA_FUNCTION()
+    found: set[str] = set()
+
+    def visit(e):
+        if not e.containsPattern(lam):
+            return
+        if e.getClass().getSimpleName() == "LambdaFunction":
+            for x in _walk_logical(e.function()):
+                if x.getClass().getSimpleName() in _SPLIT_OR_REGEXP and any(
+                    a.getClass().getSimpleName() == "AttributeReference"
+                    for a in _walk_logical(x)
+                ):
+                    found.add(x.sql())
+        for c in _seq(e.children()):
+            visit(c)
+
+    for node in _plan_nodes(df._jdf.queryExecution().optimizedPlan()):
+        for e in _seq(node.expressions()):
+            visit(e)
+    return found
 
 
 def _global_window_over_raw_input(df) -> bool:
@@ -323,6 +389,43 @@ def test_no_plan_antipatterns(spark, name):
             "first, partition the window, or whitelist with a bounded-"
             "input justification"
         )
+    resplit = _lambda_splits_outer_column(df)
+    if name in LAMBDA_SPLIT_ALLOWED:
+        assert resplit, f"{name}: fixed — drop it from LAMBDA_SPLIT_ALLOWED"
+    else:
+        assert not resplit, (
+            f"{name}: a lambda body re-runs {sorted(resplit)} per array "
+            "element; bind the split once outside the lambda"
+        )
+
+
+def test_lambda_split_whitelist_only_shrinks():
+    assert len(LAMBDA_SPLIT_ALLOWED) <= LAMBDA_SPLIT_ALLOWED_MAX
+
+
+def test_lambda_split_rule_catches_a_resplit(spark):
+    """The rule flags a split of a column inside a lambda, also under
+    a persisted relation, and passes word_shingles, which binds the
+    split once."""
+    from pyspark.sql import functions as F
+
+    from wilayah_aceh_etl_spark.functions.text import word_shingles
+
+    df = spark.createDataFrame([("a b c d",)], "text string")
+    resplit = df.select(
+        F.expr(
+            "transform(sequence(1, size(split(text, ' ')) - 1), "
+            "i -> element_at(split(text, ' '), i)) AS w"
+        )
+    )
+    want = {"split(text, ' ', -1)"}
+    assert _lambda_splits_outer_column(resplit) == want
+    cached = resplit.persist()
+    try:
+        assert _lambda_splits_outer_column(cached.select("w")) == want
+    finally:
+        cached.unpersist()
+    assert not _lambda_splits_outer_column(df.select(word_shingles("text", 2)))
 
 
 def test_aqe_splits_skewed_join_partition(spark, tmp_path):

@@ -90,10 +90,10 @@ def test_spread_memo_same_decision_as_probe(spark):
 
 
 def test_minhash_array_form_matches_exploded_pipeline(spark):
-    """r12: verified_near_dup_pairs switched to the array-persisted
-    form (map-side array_min signatures, size(_sh) denominators).
-    Pin bit-identity against the original exploded pipeline, built
-    here from the still-exported helpers."""
+    """verified_near_dup_pairs runs on per-doc shingle arrays
+    (map-side array_min signatures, array_intersect verify). Pin
+    bit-identity against the exploded pipeline, built here from the
+    still-exported helpers."""
     from pyspark.sql import functions as F
 
     import wilayah_aceh_etl_spark.operators.dedup as D
@@ -171,9 +171,9 @@ def test_array_form_signatures_match_oracle_family(spark):
 
 
 def test_minhash_repeat_runs_reuse_cache_entries(spark):
-    """r12: repeated verified_near_dup_pairs builds must canonicalize
-    to the same plans — CacheManager dedupes to 2 entries (shingle
-    array + candidates), not +2 per call."""
+    """Repeated verified_near_dup_pairs builds must canonicalize to
+    the same plan — CacheManager keeps its one entry (the shingle
+    array relation), not +1 per call."""
     import wilayah_aceh_etl_spark.operators.dedup as D
 
     docs = T.load_table(spark, SF, "documents")
@@ -184,23 +184,30 @@ def test_minhash_repeat_runs_reuse_cache_entries(spark):
     assert after == before
 
 
-def test_jaccard_for_pairs_precomputed_sizes_identical(spark):
-    """The optional `sizes` arg must not change any jaccard value."""
-    from pyspark.sql import functions as F
+def test_minhash_lsh_pairs_job_count(spark):
+    """dedup_minhash_lsh_pairs at sf0.01 from an empty cache runs at
+    most 11 Spark jobs (statusTracker): one shingle-array cache
+    build, one band grouping, no shingle explode in the verify."""
+    import uuid
 
-    import wilayah_aceh_etl_spark.operators.dedup as D
+    from tests.conftest import SF_CORRECT
+    from wilayah_aceh_etl_spark.plans.registry import all_specs
 
-    docs = T.load_table(spark, SF, "documents")
-    sh = D.distinct_shingles(docs, "doc_id")
-    cands = D.lsh_candidate_pairs(
-        D.lsh_band_hashes(D.minhash_signatures(sh, D.DEFAULT_K))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sorted(map(tuple, D.jaccard_for_pairs(cands, sh).collect()))
-    b = sorted(
-        map(tuple, D.jaccard_for_pairs(cands, sh, sizes=sizes).collect())
-    )
-    assert a == b
+    T.load_table(spark, SF_CORRECT, "documents")  # schema outside the count
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = f"minhash_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = all_specs()["dedup_minhash_lsh_pairs"].fn(
+            spark, SF_CORRECT
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.catalog.clearCache()
+    assert len(rows) == 25
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
 
 
 def test_trained_centroid_df_memo_dedupes_cache_entries(spark):

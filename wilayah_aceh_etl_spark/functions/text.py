@@ -30,22 +30,27 @@ def word_shingles(text: str, n: int = 3) -> Column:
     `text` is SQL text (a column name or an expression) and the
     result is ONE `F.expr`: built through the Column API with a
     Python lambda this measured ~38 ms of py4j per build, parsed
-    from SQL text ~1.5 ms (4-vCPU VM). The lambda body reads the
-    text operand, so its variable carries a name no caller column is
-    expected to have (a column of that name would be shadowed inside
-    the lambda).
+    from SQL text ~1.5 ms (4-vCPU VM). The lambda variables carry
+    names no caller column is expected to have (a column of that
+    name would be shadowed inside the lambda).
 
-    transform over an index sequence keeps this fully vectorized;
-    at 100 TB this is a per-row expression, no shuffle, no Python.
-    Spark's sequence(1, 0) counts DOWN, so documents shorter than
-    `n` short-circuit to an empty array instead.
+    The document is split ONCE: `transform(array(split(...)), w ->
+    ...)[0]` binds the word array to a lambda variable, so the
+    per-position lambda slices that array instead of re-splitting
+    the whole text at every position (O(words) per doc, not
+    O(words²)); Spark's ArrayTransform is interpreted, not codegen'd,
+    so whatever a lambda body reads is paid per element. At 100 TB
+    this is a per-row expression, no shuffle, no Python. Spark's
+    sequence(1, 0) counts DOWN, so documents shorter than `n`
+    short-circuit to an empty array instead.
     """
-    w = f"split({text}, ' ')"
     return F.expr(
-        f"CASE WHEN size({w}) >= {n} THEN "
-        f"transform(sequence(1, size({w}) - {n - 1}), "
-        f"shingle_pos__ -> concat_ws(' ', slice({w}, shingle_pos__, {n}))) "
-        "ELSE CAST(array() AS array<string>) END"
+        f"transform(array(split({text}, ' ')), shingle_words__ -> "
+        f"CASE WHEN size(shingle_words__) >= {n} THEN "
+        f"transform(sequence(1, size(shingle_words__) - {n - 1}), "
+        "shingle_pos__ -> concat_ws(' ', "
+        f"slice(shingle_words__, shingle_pos__, {n}))) "
+        "ELSE CAST(array() AS array<string>) END)[0]"
     )
 
 
@@ -68,18 +73,20 @@ def hex4_to_int(hex4: Column) -> Column:
     return out
 
 
-def token_quality_metrics(text: Column) -> dict[str, Column]:
+def token_quality_metrics(text: str) -> dict[str, Column]:
     """Deterministic quality signals: token counts, distinct ratio,
     mean token length, stopword ratio. All integer-derived → exact
-    division, stable across engines."""
-    w = words(text)
-    n_tokens = F.size(w)
-    n_distinct = F.size(F.array_distinct(w))
-    total_len = F.aggregate(
-        F.transform(w, F.length), F.lit(0), lambda acc, x: acc + x
+    division, stable across engines. `text` is SQL text, and each
+    higher-order function is parsed from SQL text (the Python-lambda
+    form cost ~58 ms of py4j per build)."""
+    w = f"split({text}, ' ')"
+    stop = ", ".join(f"'{s}'" for s in EN_STOPWORDS)
+    n_tokens = F.expr(f"size({w})")
+    n_distinct = F.expr(f"size(array_distinct({w}))")
+    total_len = F.expr(f"aggregate({w}, 0, (acc, t) -> acc + length(t))")
+    n_stop = F.expr(
+        f"size(filter({w}, t -> array_contains(array({stop}), t)))"
     )
-    stop_arr = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    n_stop = F.size(F.filter(w, lambda t: F.array_contains(stop_arr, t)))
     return {
         "n_tokens": n_tokens,
         "n_distinct": n_distinct,

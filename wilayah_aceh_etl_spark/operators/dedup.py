@@ -6,8 +6,8 @@ Five strategies, all shuffle-conscious:
   fingerprint  — md5 of sorted distinct tokens: catches reordered copies.
   minhash+LSH  — shingle → k-minhash → banded buckets → candidate
                  pairs → exact-Jaccard verify. The only all-pairs-free
-                 near-dup path that scales: the self-join is on band
-                 hashes (tiny buckets), never on documents.
+                 near-dup path that scales: pairs form inside band-
+                 hash buckets (tiny), never across all documents.
   simhash      — 16-bit majority fingerprint; hamming-≤r pairs.
   ngram-jaccard— exact Jaccard via shingle equi-join (ground truth /
                  verifier for the approximate paths).
@@ -16,11 +16,16 @@ Every step is built-in Catalyst expressions (no UDFs); the hash
 family is md5-based so the DuckDB oracles compute the identical
 signatures (plans/ext_queries.py).
 
-At 100 TB: explode(shingles) is the big intermediate — it pipelines
-into the partial min-aggregation map-side, so the shuffle carries
-only (doc, k signatures). Band self-join keys are md5 strings with
-near-uniform distribution — no skew salting needed; AQE handles
-stragglers.
+At 100 TB: the near-dup pipeline (verified_near_dup_pairs) keeps
+one distinct-shingle ARRAY per document, built map-side and
+persisted once; signatures are per-row array_min expressions over
+it, so the only corpus-wide shuffle groups (doc, band, 32-char
+hash) rows into buckets, and the verify joins just the candidate
+pairs back to their arrays (array_intersect, no explode). Bucket
+keys are md5 strings with near-uniform distribution — no skew
+salting needed; AQE handles stragglers. The exploded
+(doc, shingle) relation stays for the exact all-pairs ground truth
+and the incremental filter.
 """
 
 from __future__ import annotations
@@ -100,6 +105,27 @@ def _mh_comp(seed: int) -> "Column":
     )
 
 
+def shingle_arrays(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
+) -> DataFrame:
+    """(doc_id, _sh): each document's DISTINCT shingle array, one row
+    per document of at least `n` words — the per-row twin of
+    distinct_shingles (array_distinct needs no shuffle). The size
+    filter reads the split, not `_sh`: the optimizer pushes a filter
+    below the projection, so `size(_sh) > 0` would evaluate the
+    whole shingle expression twice."""
+    from wilayah_aceh_etl_spark.sources.tables import spread
+
+    return (
+        spread(df.select(F.col(id_col).alias("doc_id"), F.col(text_col)))
+        .filter(F.expr(f"size(split({text_col}, ' ')) >= {n}"))
+        .select(
+            "doc_id",
+            F.array_distinct(word_shingles(text_col, n)).alias("_sh"),
+        )
+    )
+
+
 def minhash_signatures_from_docs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -107,22 +133,14 @@ def minhash_signatures_from_docs(
     n: int = 3,
     k: int = DEFAULT_K,
 ) -> DataFrame:
-    """Same signatures with ZERO shuffles: the shingle set stays an
-    array column and each component is array_min(transform(...)) —
-    a per-row expression, so signature computation is map-side only
-    and parallelizes with input splits. Identical output to
+    """Same signatures with ZERO shuffles: each component is
+    array_min(transform(_sh, ...)) over shingle_arrays — a per-row
+    expression, so signature computation is map-side only and
+    parallelizes with input splits. Identical output to
     minhash_signatures∘distinct_shingles (docs with no shingles are
-    dropped there by the explode, hence the size filter here)."""
-    from wilayah_aceh_etl_spark.sources.tables import spread
-
-    sh_arr = F.array_distinct(word_shingles(text_col, n))
+    dropped there by the explode, here by the word-count filter)."""
     comps = [_mh_comp(seed) for seed in range(k)]
-    return (
-        spread(df.select(F.col(id_col).alias("doc_id"), F.col(text_col)))
-        .select("doc_id", sh_arr.alias("_sh"))
-        .filter(F.size("_sh") > 0)
-        .select("doc_id", *comps)
-    )
+    return shingle_arrays(df, id_col, text_col, n).select("doc_id", *comps)
 
 
 def lsh_band_hashes(
@@ -145,19 +163,25 @@ def lsh_band_hashes(
 
 
 def lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
-    """Docs sharing any band bucket. Self-join on (band_id, hash):
-    bucket sizes are tiny for non-duplicates, so the join output is
-    ~O(duplicate pairs), not O(n²)."""
-    a = bands.alias("a")
-    b = bands.alias("b")
+    """Docs sharing any band bucket: each (band_id, band_hash) bucket
+    collects its doc ids and pairs them inside the bucket (doc_a <
+    doc_b), then pairs found in several bands collapse. Bucket sizes
+    are tiny for non-duplicates, so the output is ~O(duplicate
+    pairs), not O(n²). Unlike a self-join on the bucket key, the
+    band relation — and the signatures under it — is computed and
+    shuffled once."""
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        bands.groupBy("band_id", "band_hash")
+        .agg(F.collect_set("doc_id").alias("ids"))
+        .filter(F.size("ids") > 1)
+        .select(
+            F.expr(
+                "explode(flatten(transform(ids, a -> transform("
+                "filter(ids, b -> a < b), "
+                "b -> named_struct('doc_a', a, 'doc_b', b))))) AS p"
+            )
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .select("p.doc_a", "p.doc_b")
         .distinct()
     )
 
@@ -199,41 +223,26 @@ def jaccard_pairs(
     )
 
 
-def jaccard_for_pairs(
-    pairs: DataFrame, shingles: DataFrame, sizes: DataFrame | None = None
-) -> DataFrame:
-    """Exact Jaccard computed ONLY for the given (doc_a, doc_b) pairs.
+def jaccard_for_pairs(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
+    """Exact Jaccard computed ONLY for the given (doc_a, doc_b) pairs
+    over the exploded (doc_id, shingle) relation; pairs sharing no
+    shingle are absent.
 
-    This is the verify step after candidate generation: the pair set
-    is tiny (≈ O(true duplicates)), so Catalyst broadcasts it into
-    the shingle scan and the intersection count touches only shingles
-    of candidate docs — never the all-co-shingle-pairs blowup that
-    `jaccard_pairs` materializes (1.1M pairs vs 640 candidates at
-    sf0.1).
-
-    When `sizes` is None (the standalone form), the denominator
-    sizes are candidates-only: the shingle relation is semi-joined
-    to the pair docs (broadcast — the pair set is tiny by
-    construction) before the count aggregation, so no corpus-wide
-    aggregation survives in the verify stage.
-
-    `sizes` (optional): a precomputed (doc_id, n_sh) relation. When
-    the caller already holds the per-doc shingle arrays (the r12
-    array-persisted pipeline), `size(_sh)` IS the distinct-shingle
-    count — passing it skips the scoped explode + count aggregation
-    (one Exchange + two HashAggregates) entirely. Note the passed
-    relation MAY be corpus-wide (one short row per doc off the
-    already-persisted arrays — a projection, not an aggregation);
-    the inner joins on doc_a/doc_b restrict it to candidates, and
-    at scale the tiny `inter` side broadcasts into it."""
-    if sizes is None:
-        cand_ids = (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .union(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        scoped = shingles.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-        sizes = scoped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    The pair set is tiny (≈ O(true duplicates)), so Catalyst
+    broadcasts it into the shingle scan and the intersection count
+    touches only shingles of candidate docs — never the
+    all-co-shingle-pairs blowup that `jaccard_pairs` materializes
+    (1.1M pairs vs 640 candidates at sf0.1). The denominator sizes
+    are candidates-only as well: the shingle relation is semi-joined
+    to the pair docs (broadcast) before the count aggregation, so no
+    corpus-wide aggregation survives in the verify stage."""
+    cand_ids = (
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .union(pairs.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
+    scoped = shingles.join(F.broadcast(cand_ids), "doc_id", "left_semi")
+    sizes = scoped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
@@ -258,6 +267,25 @@ def jaccard_for_pairs(
     )
 
 
+def jaccard_for_pair_arrays(pairs: DataFrame, arrays: DataFrame) -> DataFrame:
+    """jaccard_for_pairs over shingle_arrays: each pair joins its two
+    (doc_id, _sh) rows and the counts are sizes of those arrays —
+    `size(array_intersect(sa, sb))` over `size(sa) + size(sb)` — so
+    no explode, no shuffle of shingles and no count aggregation. The
+    same `round(…, 4)` of the same integers; a pair sharing no
+    shingle reads 0.0 here where jaccard_for_pairs drops it."""
+    sa = arrays.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("sa"))
+    sb = arrays.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("sb"))
+    return pairs.join(sa, "doc_a").join(sb, "doc_b").select(
+        "doc_a",
+        "doc_b",
+        F.expr(
+            "round(size(array_intersect(sa, sb)) / (size(sa) + size(sb)"
+            " - size(array_intersect(sa, sb))), 4) AS jaccard"
+        ),
+    )
+
+
 def verified_near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -273,123 +301,44 @@ def verified_near_dup_pairs(
     shingles can never reach a positive threshold, so restricting to
     LSH candidates loses nothing).
 
-    The persisted relation is the per-doc DISTINCT SHINGLE ARRAY
-    (r12 optimization round): `array_distinct` replaces the exploded
-    relation's corpus-wide `.distinct()` (one Exchange + two
-    HashAggregates — dedup within a doc never needed a shuffle), the
-    signatures become map-side `array_min(transform(...))` per-row
-    expressions instead of a `min(string)×k` aggregation — which
-    Spark can only run as Sort+SortAggregate, a var-length buffer
-    cannot use HashAggregate — and the verify-side sizes are
-    `size(_sh)` instead of a count aggregation. Plan diff at sf0.1:
-    the cached-relation build drops from
-    Exchange+HashAgg×2+Generate+Exchange to Generate-free
-    scan+project (zero shuffles), and the signature path loses
-    Sort+Exchange+SortAggregate×2. Whole-query A/B at sf0.1 /
-    local[32], min-of-3 after warmup, fresh session each, identical
-    256-pair output: 2.07–2.21 s → 1.48–1.60 s (−28%). The array
-    relation feeds all six consuming subtrees (signatures; both
-    explode sides of the verify; sizes ×2) — at 100 TB still ONE
-    corpus pass, and the cache holds one array row per doc instead
-    of ~|shingles| exploded rows.
-
-    (The round-11 A/B that measured the map-side-signature pipeline
-    at 5.78 s vs 1.81 s persisted conflated the signature form with
-    dropping the cache: recomputing the text scan + shingling twice
-    dominated. With the array CACHED, map-side signatures win —
-    the md5 count is identical, the sort/shuffle is gone. The
-    uncached single-corpus-wide-shuffle shape remains available as
-    verified_near_dup_pairs_mapside for the memory-starved regime.)"""
+    Every step reads ONE persisted relation, each document's
+    distinct-shingle array (shingle_arrays): the signatures are
+    map-side `array_min(transform(...))` per-row expressions (a
+    `min(string)×k` aggregation could only run as
+    Sort+SortAggregate), and the verify joins the candidate pairs to
+    both documents' arrays and counts with array_intersect
+    (jaccard_for_pair_arrays) — no explode, no count aggregation.
+    Three subtrees consume the array (signatures, both verify sides),
+    so at 100 TB the corpus is still read and shingled ONCE, and the
+    cache holds one array row per doc instead of ~|shingles| exploded
+    rows. The candidate pairs feed the verify once and are not
+    cached. The exploded pipeline (distinct_shingles,
+    minhash_signatures, jaccard_for_pairs) stays as the reference
+    the tests compare against."""
     from pyspark import StorageLevel
 
-    from wilayah_aceh_etl_spark.functions.text import word_shingles
-    from wilayah_aceh_etl_spark.sources.tables import spread
-
-    sh_arr = (
-        spread(df.select(F.col(id_col).alias("doc_id"), F.col(text_col)))
-        .select(
-            "doc_id",
-            F.array_distinct(word_shingles(text_col, n)).alias("_sh"),
-        )
-        .filter(F.size("_sh") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sh_arr = shingle_arrays(df, id_col, text_col, n).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     sigs = sh_arr.select("doc_id", *[_mh_comp(seed) for seed in range(k)])
-    # candidate pairs are tiny (≈ O(true duplicates)) and feed three
-    # verify subtrees (broadcast size scope + the inter join) —
-    # persist so the band self-join runs once
-    cands = lsh_candidate_pairs(lsh_band_hashes(sigs, k, bands)).persist()
-    sh = sh_arr.select("doc_id", F.explode("_sh").alias("shingle"))
-    sizes = sh_arr.select(
-        "doc_id", F.size("_sh").cast("long").alias("n_sh")
-    )
+    cands = lsh_candidate_pairs(lsh_band_hashes(sigs, k, bands))
     out = (
-        jaccard_for_pairs(cands, sh, sizes=sizes)
+        jaccard_for_pair_arrays(cands, sh_arr)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    # Cache-lifetime contract (r12 verdict ask #5, mirroring
-    # semantic_dedup._ranked_cache): the persisted shingle-array
-    # relation is CORPUS-SIZED and Spark's CacheManager never evicts
-    # entries, so a long-lived driver deduping many distinct corpora
-    # would pin one MEMORY_AND_DISK relation per corpus forever. The
-    # caller owns release — materialize the result, then
-    # `out._shingle_cache.unpersist()` (and `_cands_cache`, tiny).
-    # Short-lived gate/bench processes may skip it; the memory-starved
-    # at-scale form is verified_near_dup_pairs_mapside (no corpus
-    # cache at all).
+    # Cache-lifetime contract (mirroring semantic_dedup._ranked_cache):
+    # the persisted shingle-array relation is CORPUS-SIZED and feeds
+    # three subtrees (signatures, both verify sides). Spark's
+    # CacheManager never evicts entries, so a long-lived driver
+    # deduping many distinct corpora would pin one MEMORY_AND_DISK
+    # relation per corpus forever. The caller owns release:
+    # materialize the result, then `out._shingle_cache.unpersist()`.
+    # The handle is a plain attribute of `out` — a DataFrame derived
+    # from `out` does not carry it. Short-lived gate/bench processes
+    # may skip the release.
     out._shingle_cache = sh_arr
-    out._cands_cache = cands
     return out
-
-
-def verified_near_dup_pairs_mapside(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    n: int = 3,
-    k: int = DEFAULT_K,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """Same output as verified_near_dup_pairs, different shuffle
-    budget — the shape that wins when the corpus dwarfs executor
-    memory (the 100 TB case):
-
-      1. signatures map-side (array_min over the per-row shingle
-         array; ZERO shuffles, nothing cached),
-      2. band self-join over the tiny (doc, band, hash) relation —
-         the only corpus-wide shuffle carries k×32 chars per doc,
-         never the exploded shingles,
-      3. exact-Jaccard verify on a shingle relation SEMI-JOINED to
-         candidate doc ids first, so the explode+distinct shuffle
-         covers only candidate docs (≈ O(true duplicates)), not the
-         corpus.
-
-    The candidate pair set is persisted (tiny: it feeds the semi-join
-    and the verify join). Versus the persisted-relation form: no
-    corpus-sized cache, one corpus-wide shuffle instead of two —
-    the trade is recomputing the text scan twice (signatures +
-    scoped verify), which at scale is cheaper than caching the
-    ~10× larger exploded shingle relation."""
-    docs = df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-    sigs = minhash_signatures_from_docs(df, id_col, text_col, n, k)
-    cands = lsh_candidate_pairs(
-        lsh_band_hashes(sigs, k, bands)
-    ).persist()
-    cand_docs = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .union(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh_cand = distinct_shingles(
-        docs.join(cand_docs, "doc_id", "left_semi"), "doc_id", text_col, n
-    )
-    return (
-        jaccard_for_pairs(cands, sh_cand)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
 
 
 def connected_components(
@@ -631,12 +580,10 @@ def segment_dedup_stats(
         F.col(id_col).alias("doc_id"),
         F.posexplode(
             F.expr(
-                "transform("
-                f"  sequence(0, CAST((size(split({text_col}, ' ')) - 1) "
-                f"                   / {seg_tokens} AS INT)),"
-                f"  i -> array_join(slice(split({text_col}, ' '),"
-                f"                        i * {seg_tokens} + 1, {seg_tokens}),"
-                "                   ' '))"
+                f"transform(array(split({text_col}, ' ')), w -> transform("
+                f"  sequence(0, CAST((size(w) - 1) / {seg_tokens} AS INT)),"
+                f"  i -> array_join(slice(w, i * {seg_tokens} + 1, {seg_tokens}),"
+                "                   ' ')))[0]"
             )
         ).alias("seg_idx", "seg"),
     ).select("doc_id", "seg_idx", F.md5(F.col("seg")).alias("h"))

@@ -87,15 +87,14 @@ def gopher_rule_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         F.size(w).alias("wc"),
         (F.length(text_col) - F.size(w) + 1).alias("chars"),
-        F.size(F.filter(w, lambda x: x.rlike("^[a-z]+$"))).alias("alpha_wc"),
-        F.size(
-            F.filter(
-                w,
-                lambda x: x.isin(
-                    "the", "be", "to", "of", "and", "that", "have", "with"
-                ),
-            )
-        ).alias("stop_wc"),
+        F.expr(
+            f"size(filter(split({text_col}, ' '), x -> x rlike '^[a-z]+$'))"
+            " AS alpha_wc"
+        ),
+        F.expr(
+            f"size(filter(split({text_col}, ' '), x -> x IN ('the', 'be',"
+            " 'to', 'of', 'and', 'that', 'have', 'with'))) AS stop_wc"
+        ),
     )
     top_word = (
         df.select("doc_id", F.explode(w).alias("u"))

@@ -352,7 +352,7 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-scoring pass: all integer-derived ratios, exact
     division — deterministic across engines."""
     docs = load_table(spark, sf_dir, "documents")
-    m = token_quality_metrics(F.col("text"))
+    m = token_quality_metrics("text")
     return docs.select(
         "doc_id",
         m["n_tokens"].alias("n_tokens"),
@@ -1772,11 +1772,11 @@ def text_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     bigrams = F.expr(
-        "CASE WHEN size(split(text, ' ')) >= 2 THEN "
-        "transform(sequence(1, size(split(text, ' ')) - 1), "
-        "i -> concat(element_at(split(text, ' '), i), ' ', "
-        "element_at(split(text, ' '), i + 1))) "
-        "ELSE array() END"
+        "transform(array(split(text, ' ')), w -> "
+        "CASE WHEN size(w) >= 2 THEN "
+        "transform(sequence(1, size(w) - 1), "
+        "i -> concat(element_at(w, i), ' ', element_at(w, i + 1))) "
+        "ELSE array() END)[0]"
     )
     return (
         spread(docs.select("text"))

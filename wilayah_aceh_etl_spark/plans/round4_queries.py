@@ -248,14 +248,15 @@ def dedup_duplicate_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame
     tiny minority by construction). At 100 TB both shuffles hash on
     the digest, which is uniform by construction — no skew."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    t = F.split(F.lower("text"), r"\s+")
-    spans = F.when(
-        F.size(t) >= 8,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 7),
-            lambda i: F.md5(F.array_join(F.slice(t, i, 8), " ")),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    # the word array is bound once, so the per-span lambda slices it
+    # instead of re-running lower + regex split for every span
+    spans = F.expr(
+        r"transform(array(split(lower(text), '\\s+')), t -> "
+        "CASE WHEN size(t) >= 8 THEN "
+        "transform(sequence(1, size(t) - 7), "
+        "i -> md5(array_join(slice(t, i, 8), ' '))) "
+        "ELSE CAST(array() AS array<string>) END)[0]"
+    )
     sh = docs.select("doc_id", F.explode(spans).alias("h"))
     # One pass over the spans: collapse to (h, doc) with a multiplicity,
     # count distinct docs per h with a window over the already-h-
