@@ -949,19 +949,56 @@ def _packed_centroids(df):
     )
 
 
-def test_kmeans_assign_form_crossover(spark):
-    """The derived-C ceiling fix (r8 verdict, What's wrong #1): past
-    C=256 kmeans_centroids trains via the broadcast-join
-    _assign_nearest argmax instead of embedding C literal centroid
-    arrays in one greatest-of-structs expression (which dies at plan
-    build in the 10⁴–10⁶-C range the derived-C SemDeDup default
-    produces). Pins: (a) literal and join forms are BIT-IDENTICAL at
-    the same C — straddling the crossover so auto picks each form
-    once; (b) auto at C ≥ 512 (the join form) trains a full-width
-    quantizer on a synthetic corpus."""
-    # deterministic synthetic corpus: 600 DISTINCT well-separated
-    # vectors (Knuth-multiplier hash per dimension, distinct prime
-    # moduli — no shared period), d=4, strictly positive
+def _fold_dot(a, b):
+    """The engine's sequential-fold dot: (((0.0 + a1·b1) + a2·b2) + …)."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def _py_lloyd(rows, n_centroids, n_iter):
+    """Pure-Python spherical Lloyd with kmeans_centroids' contract:
+    seeds are the first C vectors by id, each vector goes to the max
+    of (cosine, -cid) — ties to the low cid — and each coordinate is
+    the mean of HALF_UP round(v·2²⁴) integers over 2²⁴."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    Q = 1 << 24
+    d = len(rows[0][1])
+    cents = sorted(rows)[:n_centroids]
+    for _ in range(n_iter):
+        cnrm = {cid: math.sqrt(_fold_dot(c, c)) for cid, c in cents}
+        sums: dict[int, list[int]] = {}
+        for _, v in rows:
+            nrm = math.sqrt(_fold_dot(v, v))
+            _, ncid = max(
+                (_fold_dot(v, c) / (nrm * cnrm[cid]), -cid) for cid, c in cents
+            )
+            acc = sums.setdefault(-ncid, [0] * (d + 1))
+            acc[d] += 1
+            for j in range(d):
+                acc[j] += int(
+                    Decimal(v[j] * Q).quantize(Decimal(1), ROUND_HALF_UP)
+                )
+        cents = sorted(
+            (cid, [float(acc[j]) / acc[d] / Q for j in range(d)])
+            for cid, acc in sums.items()
+        )
+    return cents
+
+
+def test_kmeans_matches_python_lloyd(spark):
+    """kmeans_centroids trains every C through the one _assign_nearest
+    kernel; its centroids are byte-for-byte those of a pure-Python
+    Lloyd (_py_lloyd) at a small C, and at C = 300 and 512, where
+    assignment once needed a different plan form."""
+    import struct
+
+    # 600 DISTINCT well-separated vectors (Knuth-multiplier hash per
+    # dimension, distinct prime moduli — no shared period), d=4,
+    # strictly positive
     n, d = 600, 4
     mods = (4093, 4099, 4111, 4127)
     rows = [
@@ -975,34 +1012,98 @@ def test_kmeans_assign_form_crossover(spark):
         for i in range(n)
     ]
     v = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    # (a) bit-identity of the two forms at a C on EACH side of the
-    # crossover (auto == literal at 256, auto == join at 300)
-    for c in (256, 300):
-        lit_form = _packed_centroids(
-            S.kmeans_centroids(v, c, n_iter=2, assign_form="literal")
+    for c in (16, 300, 512):
+        want = sorted(
+            (cid, struct.pack(f"<{d}d", *cvec))
+            for cid, cvec in _py_lloyd(rows, c, 2)
         )
-        join_form = _packed_centroids(
-            S.kmeans_centroids(v, c, n_iter=2, assign_form="join")
-        )
-        auto_form = _packed_centroids(
-            S.kmeans_centroids(v, c, n_iter=2, assign_form="auto")
-        )
-        assert lit_form == join_form, f"form divergence at C={c}"
-        assert auto_form == lit_form, f"auto diverged at C={c}"
+        got = _packed_centroids(S.kmeans_centroids(v, c, n_iter=2))
+        assert got == want, f"C={c}"
 
-    # (b) C ≥ 512 via auto (join form): full-width training succeeds
-    big = S.kmeans_centroids(v, 512, n_iter=2)
-    got = _packed_centroids(big)
-    assert 0 < len(got) <= 512
-    # each of the 512 seed cells keeps (at least) its own seed vector
-    # (own-cosine 1.0 beats every distinct non-colinear centroid), so
-    # the surviving quantizer is WIDER than the literal-form ceiling —
-    # the width the join form exists to handle
-    assert len(got) > S._LITERAL_ASSIGN_MAX_C
 
-    with pytest.raises(ValueError):
-        S.kmeans_centroids(v, 16, assign_form="bogus")
+def _join_form_assign(c, cent):
+    """The former _assign_nearest: a broadcast product of vectors and
+    centroid rows, then max(struct(cos, -cid)) grouped by vec_id."""
+    from wilayah_aceh_etl_spark.functions.vectors import dot, l2_norm
+
+    c = c.withColumn("nrm", l2_norm("vec"))
+    cent = cent.withColumn("cnrm", l2_norm("cvec"))
+    return (
+        c.join(F.broadcast(cent))
+        .select(
+            "vec_id",
+            "vec",
+            "nrm",
+            "cid",
+            (dot("vec", "cvec") / (F.col("nrm") * F.col("cnrm"))).alias("_cos"),
+        )
+        .groupBy("vec_id")
+        .agg(
+            F.max(F.struct(F.col("_cos"), (-F.col("cid")).alias("_ncid"))).alias(
+                "_m"
+            ),
+            F.first("vec").alias("vec"),
+            F.first("nrm").alias("nrm"),
+        )
+        .select(
+            "vec_id",
+            "vec",
+            "nrm",
+            (-F.col("_m._ncid")).cast("long").alias("centroid"),
+            F.col("_m._cos").alias("_cent_cos"),
+        )
+    )
+
+
+def test_assign_nearest_matches_join_form(spark):
+    """The map-side kernel assigns what the groupBy(vec_id) join form
+    assigned, to the byte: a centroid duplicated under two cids
+    takes its vectors to the lower cid, a vector with a NaN component
+    (NaN cosine to every centroid) goes to the lowest cid with a NaN
+    cosine, and so does a zero vector, whose cosine 0/0 is NULL with
+    ANSI mode off (under ANSI mode it raises in both forms)."""
+    import math
+    import struct
+
+    cents = [
+        (3, [1.0, 0.0, 0.5]),
+        (7, [0.0, 1.0, -0.25]),
+        (9, [1.0, 0.0, 0.5]),  # duplicate of cid 3
+        (12, [-0.5, -0.5, 2.0]),
+    ]
+    vecs = [
+        (0, [0.0, 0.0, 0.0]),
+        (1, [2.0, 0.0, 1.0]),
+        (2, [0.1, 0.9, -0.2]),
+        (3, [-1.0, -1.0, 4.0]),
+        (4, [0.3, -0.0, 0.15]),
+        (5, [5e-324, 1.0, 0.0]),
+        (6, [float("nan"), 1.0, 0.0]),
+    ]
+
+    def packed(df):
+        return sorted(
+            (
+                r.vec_id,
+                r.centroid,
+                None if r._cent_cos is None else struct.pack("<d", r._cent_cos),
+            )
+            for r in df.collect()
+        )
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        c = spark.createDataFrame(vecs, "vec_id long, vec array<double>")
+        cent = spark.createDataFrame(cents, "cid long, cvec array<double>")
+        got = packed(S._assign_nearest(c, cent))
+        assert got == packed(_join_form_assign(c, cent))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    by_id = {vid: (cid, cos) for vid, cid, cos in got}
+    assert by_id[0] == (3, None)
+    assert by_id[1][0] == 3 and by_id[4][0] == 3
+    assert by_id[6][0] == 3 and math.isnan(struct.unpack("<d", by_id[6][1])[0])
 
 
 def test_contrastive_mining_drops_false_negatives(spark, tmp_path):

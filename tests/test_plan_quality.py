@@ -23,15 +23,9 @@ NLJ_ALLOWED = {
     # brute-force shape with the label inequality fused into the
     # non-equi join condition (re-rank stage after the ANN path)
     "embedding_hard_negatives",
-    "similarity_ivf_topk",
-    # same 16-row broadcast centroid build, Lloyd-trained quantizer
-    "similarity_ivf_kmeans_topk",
-    # same shape, memoized trained centroids (the benched serving path)
-    "similarity_ivf_trained_topk",
-    # same probe shape over the stored centroid table (16 rows)
-    "similarity_ivf_partitioned_topk",
-    # composes the two shapes above (BF ground truth × IVF), so it
-    # inherits both documented broadcast products
+    # BF ground truth × IVF: inherits the brute-force broadcast
+    # product (IVF assignment and probes read the centroids as one
+    # scalar-subquery array, no join)
     "similarity_ivf_recall",
     # same composition, trained quantizer + seed-disjoint queries
     # (20-row broadcast side vs corpus — the definitional BF truth)
@@ -150,30 +144,11 @@ NLJ_ALLOWED = {
     # to-terms trick; corpus rows never enter the quadratic side
     "eval_levenshtein_battery",
     # --- round 7 ---
-    # 16-row centroid broadcast (the kmeans assignment shape); the
-    # near-dup pair join itself is an EQUI-join on the cluster id —
-    # pinned cluster-scoped by test_semantic_dedup_pair_join_is_equi
-    "dedup_semantic_clusters",
-    # same 16-row centroid broadcast for the incoming-batch
-    # assignment; the stored-corpus comparison is an equi-join on the
-    # cluster id over a PARTITION-PRUNED scan (pinned by
-    # test_semantic_admission_prunes_partitions)
-    "dedup_semantic_admission_pruned",
     # 1-row corpus-total broadcast onto the 256-row feature
     # distribution (the lam relation); scoring join is an equi-join
     # on the hashed bucket with an O(256) broadcast build side
     "data_selection_dsir_topk",
-    # --- round 8 ---
-    # the inherited _ivf_search probe shape: NLJ only against the
-    # 16-row trained-centroid build side; the mining stages after
-    # retrieval are equi-joins with O(Q·k) broadcast build sides
-    "embedding_contrastive_mining",
     # --- round 9 ---
-    # inverted multi-index: NLJ only against the TWO 4-row half-
-    # space centroid broadcasts (training + assignment + probes);
-    # the candidate scan is an equi-join on the (ca, cb) cell pair
-    # with an O(Q · n_probe²)-row broadcast build side
-    "similarity_imi_topk",
     # inherits text_bigram_lm_logprob's 1-row corpus-token-total
     # broadcast (the LM interpolation denominator)
     "corpus_perplexity_buckets_ccnet",
@@ -183,8 +158,8 @@ NLJ_ALLOWED = {
     # 1-row class-threshold aggregate (s1,n1,s0,n0) broadcast onto
     # the scored corpus
     "labels_confident_learning_noise",
-    # EL2N's device on the quantized prototype cosine: 16-row trained
-    # centroid broadcast (assignment) + two 1-row broadcasts
+    # EL2N's device on the quantized prototype cosine: two 1-row
+    # broadcasts
     # (k = (2n) div 10 and the histogram threshold+quota row)
     "data_pruning_ssl_prototypes",
     # 1-row bigram-TYPE-total broadcast (the KN continuation
@@ -202,11 +177,6 @@ NLJ_ALLOWED = {
     # plus the 1-row sketch/exact summary cross join
     "approx_f2_ams_audit",
     # --- round 10 ---
-    # inherits dedup_semantic_clusters' 16-row centroid-assignment
-    # broadcast (same semantic_dedup pipeline under the audit)
-    "dedup_semantic_chain_audit",
-    # same pipeline at derived C (≤125 at test SFs; O(C) build side)
-    "dedup_semantic_clusters_derived_c",
     # 5-row prefix-grid non-equi broadcast (doc_id % 16 < width)
     "data_scaling_unigram_nll_curve",
     # 3-row context-length grid broadcast product
@@ -214,30 +184,15 @@ NLJ_ALLOWED = {
     # 4-row vocab-size grid non-equi broadcast + 1-row total cross
     "tokenizer_vocab_coverage_curve",
     # --- round 11 ---
-    # the chain audit at derived C: inherits the clusters-derived-c
-    # O(C) centroid-assignment broadcast (≤125 at test SFs)
-    "dedup_semantic_chain_audit_derived_c",
-    # inherits dedup_semantic_clusters' 16-row centroid-assignment
-    # broadcast (same semantic_dedup parent); its own totals ride a
-    # 4-row window, not a join
-    "dedup_policy_agreement_audit",
     # 3-row context grid × 1-row GNS-scalar broadcast (both bounded),
     # plus the GNS parent's 1-row scalar cross
     "training_critical_batch_schedule",
     # 4-row model-scale grid × 1-row corpus-token-total cross
     "training_chinchilla_data_budget",
     # --- round 12 ---
-    # the policy audit at derived C: inherits the clusters-derived-c
-    # O(C) centroid-assignment broadcast (≤125 at test SFs); its own
-    # totals ride a 4-row window, not a join
-    "dedup_policy_agreement_audit_derived_c",
-    # inherits the derived-C policy cells' NLJ parents; its own
-    # additions are a ≤4-row cells × 4-row policy-literal OR-join
-    # and a 4-row scale-grid broadcast cross (all bounded)
+    # a ≤4-row cells × 4-row policy-literal OR-join and a 4-row
+    # scale-grid broadcast cross (all bounded)
     "curation_funnel_data_budget",
-    # inherits the clusters-derived-c O(C) centroid-assignment
-    # broadcast (semantic_dedup parent); the bigram side adds no NLJ
-    "text_distinct2_semdedup_crosscheck",
 }
 
 
@@ -492,8 +447,7 @@ def test_semantic_dedup_pair_join_is_equi(spark):
     """SemDeDup's whole point is that near-dup candidates are
     cluster-scoped: the pair join must compile to an EQUI-join on
     the cluster id (Σ|cluster|² comparisons), never a cartesian /
-    nested-loop all-pairs product. The only NLJ allowed in the plan
-    is the 16-row centroid-assignment broadcast."""
+    nested-loop all-pairs product."""
     import re
 
     from wilayah_aceh_etl_spark.operators.similarity import semantic_dedup

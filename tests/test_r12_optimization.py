@@ -210,6 +210,37 @@ def test_minhash_lsh_pairs_job_count(spark):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
 
 
+def test_ivf_trained_topk_serves_map_side(spark):
+    """A warm similarity_ivf_trained_topk serve (sf0.001): the trained
+    centroids are a LocalRelation, not a LogicalRDD over a PythonRDD;
+    assignment runs map-side, with no exchange on vec_id; and the
+    serve runs at most 5 Spark jobs (statusTracker) — 8 when the
+    centroids were broadcast, the assignment a groupBy(vec_id) and
+    the probe a window."""
+    import re
+    import uuid
+
+    from wilayah_aceh_etl_spark.plans.registry import all_specs
+
+    fn = all_specs()["similarity_ivf_trained_topk"].fn
+    fn(spark, SF).collect()  # trains, or finds the memo
+    sc = spark.sparkContext
+    group = f"ivf_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = fn(spark, SF)
+        assert len(df.collect()) == 50
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    qe = df._jdf.queryExecution()
+    assert "LogicalRDD" not in qe.optimizedPlan().toString()
+    assert not re.search(
+        r"Exchange hashpartitioning\(vec_id", qe.executedPlan().toString()
+    )
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+
+
 def test_trained_centroid_df_memo_dedupes_cache_entries(spark):
     """r12: kmeans_centroids_cached returns the SAME DataFrame per
     (key, session), so repeated semantic_dedup calls canonicalize to

@@ -35,6 +35,7 @@ from wilayah_aceh_etl_spark.functions.vectors import (
     as_double,
     dot,
 )
+from wilayah_aceh_etl_spark.session import local_frame
 
 Q = 16777216  # 2^24 — the repo-wide quantization for exact reduces
 
@@ -155,7 +156,8 @@ def logreg_train_quantized(
             out_rows.append(
                 (it, int(n_correct), int(chk["b_q"]), int(chk["w_checksum"]))
             )
-        return v.sparkSession.createDataFrame(
+        return local_frame(
+            v.sparkSession,
             out_rows,
             "iter int, n_correct bigint, b_q bigint, w_checksum bigint",
         )
@@ -251,7 +253,8 @@ def perceptron_train_integer(
             w = [w[j] + int(sums.get(j + 1, 0)) for j in range(d)]
             b = b + int(stats["s"] or 0)
             out_rows.append((it, int(n_mis), int(b), int(sum(w))))
-        return v.sparkSession.createDataFrame(
+        return local_frame(
+            v.sparkSession,
             out_rows,
             "iter int, n_misclassified bigint, b bigint, w_checksum bigint",
         )
@@ -540,8 +543,8 @@ def doremi_domain_weights(
         # SQL half-away semantics on both sides
         rows = [(dm, dn[dm], *alphas[dm]) for dm in doms]
         acols = ", ".join(f"a{t} double" for t in range(1, n_iter + 1))
-        out = v.sparkSession.createDataFrame(
-            rows, f"dom string, n_docs bigint, {acols}"
+        out = local_frame(
+            v.sparkSession, rows, f"dom string, n_docs bigint, {acols}"
         )
         abar = sum(
             [F.col(f"a{t}") for t in range(2, n_iter + 1)],
@@ -659,7 +662,8 @@ def logreg_sgd_minibatch(
                     int(chk["wc"]),
                 )
             )
-        return v.sparkSession.createDataFrame(
+        return local_frame(
+            v.sparkSession,
             out_rows,
             "step int, batch_tag int, n_batch bigint, n_correct bigint,"
             " b_q bigint, w_checksum bigint",
@@ -779,8 +783,10 @@ def rank_perceptron_train_integer(
             out_rows.append((it, int(n_mis), int(sum(w))))
         n_mis_final = margins(w).filter(F.col("m") <= 0).count()
         out_rows.append((n_iter + 1, int(n_mis_final), int(sum(w))))
-        return df.sparkSession.createDataFrame(
-            out_rows, "iter int, n_misranked bigint, w_checksum bigint"
+        return local_frame(
+            df.sparkSession,
+            out_rows,
+            "iter int, n_misranked bigint, w_checksum bigint",
         )
     finally:
         u.unpersist()

@@ -16,17 +16,19 @@ hash-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import math
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wilayah_aceh_etl_spark.functions.vectors import (
-    array_literal,
     as_double,
     dot,
     dot_sql,
     l2_norm,
     sign_lsh_bucket,
 )
+from wilayah_aceh_etl_spark.session import local_frame
 
 
 def _prep(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -182,81 +184,151 @@ def ivf_topk(
     `centroid` the table's physical partition key so a probe reads
     n_probe/n_centroids of the corpus; the query plan is unchanged.
 
-    Work: assignment is one broadcast pass O(N·C); search touches
+    Work: assignment is one map-side pass O(N·C); search touches
     only probed lists, O(Q · n_probe · N/C) instead of O(Q · N).
 
-    Assignment uses max(struct(cos, -cid)) per vector rather than a
-    row_number window: the aggregate partial-combines MAP-SIDE, so
-    the assignment shuffle carries N rows instead of the window
-    form's N·C — 16× less at the default C, and the gap is the whole
-    point at 1000 executors. (`first(vec)` in that aggregate is
-    deterministic: vec is functionally dependent on the group key.)
-    A/B at sf0.1/local[32], identical 50-row output: agg 2.35 s vs
-    window 2.79 s.
+    Assignment (_assign_nearest) folds max(struct(cos, -cid)) per
+    row over ONE array value holding every centroid: no join and no
+    assignment exchange (a groupBy(vec_id) max shuffled N rows).
 
-    (Measured alternative, rejected: folding the centroid table into
-    one array row and assigning via transform+array_max — a map-side
-    expression with no shuffle at all — benched 2.3 s vs 1.5 s for
-    the flat join forms at sf0.1/local[32]. Nested HOF lambdas
-    evaluate interpreted per element, while the expanded join runs
-    whole-stage-codegen'd on flat rows; prefer the flat form until
-    Spark codegens lambda bodies.)"""
+    (Measured alternative, once rejected, now adopted: the one-array
+    fold. As transform+array_max over a broadcast row it benched
+    2.3 s against 1.5 s for the flat join at sf0.1/local[32]. As an
+    aggregate+greatest fold read through a scalar subquery, the
+    probe set sorted from the same array, on a 4-vCPU VM, local[3]:
+    perfbench llm_curation's fresh trained-IVF op costs 22.5 CPU-s
+    against 27.8 and a repeat 3.8 against 5.4 (median of 10; a cold
+    JVM compiles no join, exchange or probe window and starts no
+    Python worker); warm min-of-5 wall at sf0.1 is 1.35–1.92 s
+    against 1.82–2.31 s here; at sf1 this query and the trained one
+    are within noise, and ivf_kmeans_topk is 5–8 % slower, its Lloyd
+    passes having lost a codegen'd literal argmax that only scaled
+    to C ≤ 256.)"""
     c = _prep(corpus, id_col, vec_col)
-    cent = F.broadcast(
-        c.filter(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("cid"), F.col("vec").alias("cvec")
-        )
+    cent = c.filter(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cid"), F.col("vec").alias("cvec")
     )
     q = _prep(queries, id_col, vec_col)
     return _ivf_search(c, cent, q, k, n_probe)
 
 
-def _assign_nearest(c: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment shared by every coarse-quantizer
-    consumer (_ivf_search's inverted lists, semantic_dedup's cluster
-    ids): one broadcast-product pass, argmax cosine with tie → low
-    cid encoded as max of (cos, -cid) so a single partial-combining
-    aggregate carries both the winner and the tiebreak. Returns
-    (vec_id, vec, nrm, centroid, _cent_cos) — the ONE copy of this
-    tie-break-sensitive encoding that every oracle must mirror.
+_CENTROID_SCHEMA = "cid long, cvec array<double>"
+_CS_SCHEMA = "_cs array<struct<cid: bigint, cvec: array<double>, cnrm: double>>"
 
-    Norms are hoisted out of the N×C product: sqrt(dot(v,v)) depends
-    only on one side, and sqrt/division are IEEE-exact, so
-    dot/(nrm·cnrm) is the bitwise-same double as cosine(v,c) — the
-    per-pair work drops from three interpreted HOF folds to one.
-    The per-vector `nrm` rides along in the output so downstream
-    candidate scans reuse it."""
-    if "nrm" not in c.columns:
-        c = c.withColumn("nrm", l2_norm("vec"))
+
+def _score_sql(vec: str, nrm: str, k: str) -> str:
+    """SQL text of struct(c = cosine of `vec` to centroid `k`,
+    n = -cid): the (cos, -cid) encoding whose struct maximum is the
+    nearest centroid with ties to the low cid. Norms are hoisted:
+    sqrt/division are IEEE-exact, so dot/(nrm·cnrm) is the
+    bitwise-same double as cosine with one fold per pair, not
+    three."""
+    return (
+        f"named_struct('c', {dot_sql(vec, k + '.cvec')} / ({nrm} * {k}.cnrm),"
+        f" 'n', -CAST({k}.cid AS BIGINT))"
+    )
+
+
+def _local_centroid_row(spark: SparkSession, cents) -> DataFrame:
+    """The one-row `_cs` relation (array<struct<cid, cvec, cnrm>>)
+    over driver-held (cid, floats) centroids, as a LocalRelation —
+    no rows when there are no centroids, so assignment yields none.
+    cnrm is the sequential fold of l2_norm run in Python: the same
+    IEEE operations in the same order, so the same double."""
+
+    def norm(v):
+        acc = 0.0
+        for x in v:
+            acc = acc + x * x
+        return math.sqrt(acc)
+
+    cs = [{"cid": cid, "cvec": v, "cnrm": norm(v)} for cid, v in cents]
+    return local_frame(spark, [(cs,)] if cs else [], _CS_SCHEMA)
+
+
+def _centroid_row(cent: DataFrame) -> DataFrame:
+    """`cent` as the one-row `_cs` relation: passed through when it
+    already is one, else a (cid, cvec[, cnrm]) relation folded by one
+    tiny aggregate (a relation-held centroid table — first-C seeds,
+    a stored `_centroids` table). A relation without rows folds to
+    no row, not to an empty array."""
+    if "_cs" in cent.columns:
+        return cent
     if "cnrm" not in cent.columns:
         cent = cent.withColumn("cnrm", l2_norm("cvec"))
+    return cent.agg(
+        F.expr("collect_list(struct(cid, cvec, cnrm)) AS _cs")
+    ).filter("size(_cs) > 0")
+
+
+def _with_centroids(
+    df: DataFrame, cent: DataFrame, name: str = "_cs"
+) -> DataFrame:
+    """df plus column `name`: the centroid array of _centroid_row(cent),
+    read through a scalar subquery. Spark evaluates it once per query,
+    and over a LocalRelation without a Spark job, where a broadcast of
+    the row ran one and put a nested-loop join in the plan. With no
+    centroids there are no rows, as with the former inner join."""
+    cs = _centroid_row(cent).select("_cs").scalar()
+    return df.select("*", cs.alias(name)).where(F.col(name).isNotNull())
+
+
+def _nearest(vec: str, nrm: str, cs: str = "_cs") -> Column:
+    """The nearest-centroid kernel: max of (cos, -cid) over the `_cs`
+    array of the row, as struct(c, n). One fold per row, map-side.
+
+    Callers generate its fields (`inline(array(...))`) rather than
+    project them: an equi-join on the centroid downstream infers
+    `isnotnull(centroid)`, and the optimizer pushes that filter
+    through a Project, below it — the fold then runs twice per row —
+    but not through a Generate."""
+    return F.expr(
+        f"aggregate({cs}, CAST(NULL AS STRUCT<c: DOUBLE, n: BIGINT>), "
+        f"(best, k) -> greatest(best, {_score_sql(vec, nrm, 'k')}))"
+    )
+
+
+def _assign_nearest(c: DataFrame, cent: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment shared by every coarse-quantizer
+    consumer (Lloyd training, _ivf_search's inverted lists,
+    semantic_dedup's cluster ids, prototypes, write_ivf_layout):
+    argmax cosine with ties to the low cid, the max of (cos, -cid) —
+    the ONE copy of this tie-break-sensitive encoding that every
+    oracle must mirror. `cent` is anything _centroid_row takes.
+    Returns (vec_id, vec, nrm, centroid, _cent_cos), one row per
+    input row, folded map-side (_nearest): no join, no exchange. The
+    per-vector `nrm` rides along for downstream candidate scans."""
+    if "nrm" not in c.columns:
+        c = c.withColumn("nrm", l2_norm("vec"))
     return (
-        c.join(cent)
+        _with_centroids(c, cent)
         .select(
-            "vec_id",
-            "vec",
-            "nrm",
-            "cid",
-            (
-                dot("vec", "cvec")
-                / (F.col("nrm") * F.col("cnrm"))
-            ).alias("_cos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("_cos"), (-F.col("cid")).alias("_ncid"))
-            ).alias("_m"),
-            F.first("vec").alias("vec"),
-            F.first("nrm").alias("nrm"),
+            "vec_id", "vec", "nrm", F.inline(F.array(_nearest("vec", "nrm")))
         )
         .select(
             "vec_id",
             "vec",
             "nrm",
-            (-F.col("_m._ncid")).cast("long").alias("centroid"),
-            F.col("_m._cos").alias("_cent_cos"),
+            (-F.col("n")).alias("centroid"),
+            F.col("c").alias("_cent_cos"),
         )
+    )
+
+
+def _probes(
+    q: DataFrame, cent: DataFrame, vec: str, nrm: str, n_probe: int
+) -> DataFrame:
+    """q's columns plus `centroid`, one row for each of the `n_probe`
+    centroids nearest `vec` in (cos desc, cid) order — the kernel's
+    scores sorted in place, so no window and no exchange."""
+    top = F.expr(
+        f"slice(sort_array(transform(_cs, k -> {_score_sql(vec, nrm, 'k')}),"
+        f" false), 1, {n_probe})"
+    )
+    return (
+        _with_centroids(q, cent)
+        .select(*q.columns, F.explode(top).alias("_p"))
+        .select(*q.columns, (-F.col("_p.n")).alias("centroid"))
     )
 
 
@@ -264,43 +336,26 @@ def _ivf_search(
     c: DataFrame, cent: DataFrame, q: DataFrame, k: int, n_probe: int
 ) -> DataFrame:
     """The IVF read path, independent of how the coarse quantizer
-    was trained: `cent` is any broadcastable (cid, cvec) relation —
-    first-C-by-id (ivf_topk) or Lloyd-trained (ivf_kmeans_topk) —
-    and the plan is byte-identical either way."""
+    was trained: `cent` is any centroid relation _centroid_row
+    accepts — first-C-by-id (ivf_topk) or Lloyd-trained
+    (ivf_kmeans_topk) — and the plan is the same either way."""
     from pyspark.sql.window import Window
 
+    cs = _centroid_row(cent)
     # inverted lists: nearest centroid per corpus vector (carries
     # the hoisted per-vector norm for the candidate scan below)
-    lists = _assign_nearest(c, cent).drop("_cent_cos")
-
-    # probe set: n_probe nearest centroids per query — query norm
-    # hoisted once per query (cosine = dot/(qnrm·cnrm) is the
-    # bitwise-same double; see _assign_nearest)
-    if "cnrm" not in cent.columns:
-        cent = cent.withColumn("cnrm", l2_norm("cvec"))
-    q = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        l2_norm("vec").alias("qnrm"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("cid")
-    )
-    probes = (
-        q.join(cent)
-        .select(
-            "query_id",
-            "qvec",
-            "qnrm",
-            "cid",
-            (
-                dot("qvec", "cvec")
-                / (F.col("qnrm") * F.col("cnrm"))
-            ).alias("_cos"),
-        )
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= n_probe)
-        .select("query_id", "qvec", "qnrm", F.col("cid").alias("centroid"))
+    lists = _assign_nearest(c, cs).drop("_cent_cos")
+    # probe set: n_probe nearest centroids per query
+    probes = _probes(
+        q.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("vec").alias("qvec"),
+            l2_norm("vec").alias("qnrm"),
+        ),
+        cs,
+        "qvec",
+        "qnrm",
+        n_probe,
     )
 
     # exact cosine, probed lists only — one HOF fold per candidate
@@ -325,17 +380,55 @@ def _ivf_search(
     )
 
 
-# Assignment-form crossover for kmeans_centroids: at or below this C
-# the per-iteration argmax is a LITERAL map-side greatest-of-structs
-# expression (no shuffle before the sums aggregate); above it, the
-# literal expression itself becomes the bottleneck — C embedded
-# d-float arrays make a tens-of-MB plan tree that dies at plan build
-# / codegen long before runtime (r8 verdict, What's wrong #1) — so
-# training switches to the broadcast-join _assign_nearest form:
-# identical tie-break encoding, bit-identical centroids (pinned by
-# tests/test_ext_operators.py::test_kmeans_assign_form_crossover),
-# one extra N-row shuffle per iteration.
-_LITERAL_ASSIGN_MAX_C = 256
+def _lloyd(
+    v: DataFrame, n_centroids: int, n_iter: int
+) -> list[tuple[int, list[float]]]:
+    """kmeans_centroids' training on a prepared (vec_id, vec)
+    relation: the driver-held (cid, floats) centroids, ascending by
+    cid."""
+    Q = 16777216
+    # centroids live on the driver, keyed by their ORIGINAL cid so
+    # tie-breaks stay aligned with the SQL oracle even if a cluster
+    # empties mid-training. Seeds are the first C vectors by id RANK
+    # (orderBy+limit → TakeOrdered), not by id VALUE: identical on
+    # the dense 0-based corpora every oracle assumes (rank-k == id<C
+    # there), but a filtered/offset corpus — the derived-C path's
+    # audience — still gets its full C seeds instead of however many
+    # ids happen to fall below C (possibly zero). The seeds also give
+    # d, so no dimension probe runs.
+    cents = [
+        (int(r["vec_id"]), list(r["vec"]))
+        for r in v.orderBy("vec_id").limit(n_centroids).collect()
+    ]
+    d = len(cents[0][1]) if cents else 0
+    spark = v.sparkSession
+    # per-row vector norm hoisted out of the C-way argmax
+    vn = v.withColumn("nrm", l2_norm("vec"))
+    for _ in range(n_iter):
+        assigned = _assign_nearest(
+            vn, _local_centroid_row(spark, cents)
+        ).select(F.col("centroid").alias("cid"), "vec")
+        sums = (
+            assigned.groupBy("cid")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("_n"),
+                *[
+                    F.expr(
+                        f"CAST(sum(CAST(round(element_at(vec, {j + 1}) * {Q})"
+                        f" AS BIGINT)) AS BIGINT) AS _s{j}"
+                    )
+                    for j in range(d)
+                ],
+            )
+            .collect()
+        )
+        # empty clusters simply have no row, exactly like GROUP BY
+        # on the oracle side
+        cents = sorted(
+            (int(r["cid"]), [float(r[f"_s{j}"]) / r["_n"] / Q for j in range(d)])
+            for r in sums
+        )
+    return cents
 
 
 def kmeans_centroids(
@@ -344,7 +437,6 @@ def kmeans_centroids(
     n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_form: str = "auto",
 ) -> DataFrame:
     """Lloyd-trained coarse quantizer for IVF: (cid, cvec) after
     `n_iter` k-means iterations, seeded with the first `n_centroids`
@@ -365,127 +457,21 @@ def kmeans_centroids(
 
     Scale: the MLlib shape — centroids live on the DRIVER (C×d
     doubles, collected once per iteration: the driver-memory bound is
-    O(C·d) — 256×64 ≈ 128 KB at the crossover, ~49 MB at C=10⁵/d=64;
-    past ~10⁶·d doubles a two-level quantizer — coarse C₁≈√C then
-    per-cell C₂ — is the published next step) and the per-iteration
-    assignment picks its form by C (`assign_form="auto"`):
-
-    * C ≤ 256 (`"literal"`): centroids embedded as literal arrays in
-      a pure MAP-SIDE argmax expression (greatest-of-structs, no
-      join, no shuffle before the sums aggregate).
-    * C > 256 (`"join"`): the literal expression tree is itself the
-      bottleneck — C d-float literal arrays are tens of MB of plan at
-      the C=10⁴–10⁶ the derived-C SemDeDup default produces, dying at
-      plan build before a single row moves (r8 verdict) — so
-      assignment runs through the broadcast-join _assign_nearest
-      form: same (cos, -cid) max-struct tie-break encoding, so the
-      trained centroids are BIT-IDENTICAL to the literal form's
-      (pinned by test_kmeans_assign_form_crossover), at the cost of
-      one N-row shuffle per iteration for the per-vec_id argmax.
-
-    Either way the mean recompute is ONE aggregate keyed by cid whose
-    d quantized column-sums partial-combine map-side, so the
-    trainer's reduce-side shuffle per iteration is partitions × C ×
-    (d+1) longs — independent of N. (First version joined an exploded
-    (vec_id, pos, val) relation against the assignment —
-    tools/shuffle_audit measured ~140 KB/iteration extra even at
-    500×64; at 10⁹ vectors that join is the difference between a
-    KB-scale and a TB-scale iteration. The residual movement the
-    audit shows for similarity_ivf_kmeans_topk is the SEARCH stage's
-    inverted-lists aggregate, the form ivf_topk's docstring
-    A/B-justifies.)"""
-    Q = 16777216
-    v = _prep(corpus, id_col, vec_col)
-    d = len(v.select("vec").first()["vec"])
-    import math
-
-    def _py_dot(a, b):
-        # engine-identical sequential fold: (((0+a0*b0)+a1*b1)+...)
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
-    # centroids live on the driver, keyed by their ORIGINAL cid so
-    # tie-breaks stay aligned with the SQL oracle even if a cluster
-    # empties mid-training. Seeds are the first C vectors by id RANK
-    # (orderBy+limit → TakeOrdered), not by id VALUE: identical on
-    # the dense 0-based corpora every oracle assumes (rank-k == id<C
-    # there), but a filtered/offset corpus — the derived-C path's
-    # audience — still gets its full C seeds instead of however many
-    # ids happen to fall below C (possibly zero, which would crash
-    # the argmax)
-    cents = {
-        int(r["vec_id"]): list(r["vec"])
-        for r in v.orderBy("vec_id").limit(n_centroids).collect()
-    }
-    spark = corpus.sparkSession
-    if assign_form not in ("auto", "literal", "join"):
-        raise ValueError(f"unknown assign_form: {assign_form!r}")
-    use_join = assign_form == "join" or (
-        assign_form == "auto" and n_centroids > _LITERAL_ASSIGN_MAX_C
-    )
-    # per-row vector norm hoisted OUT of the C-way argmax: the same
-    # sqrt(dot(v,v)) double used C times per row is computed once
-    # (bitwise-identical — sqrt and the division are IEEE-exact), so
-    # assignment does C+1 HOF folds per row instead of 2C. Named
-    # `nrm` so the join form's _assign_nearest reuses it directly.
-    vn = v.withColumn("nrm", l2_norm("vec"))
-    for _ in range(n_iter):
-        if use_join:
-            # broadcast-join argmax (the _assign_nearest encoding —
-            # max of struct(cos, -cid), tie -> low cid, the SAME
-            # tie-break as the literal form below). cnrm is a
-            # Spark-side l2_norm over the createDataFrame'd floats:
-            # the identical left fold (incl. the leading 0.0 +) as
-            # the literal form's Python-computed sqrt(_py_dot), so
-            # every cosine is the bitwise-same double either way.
-            cent_df = F.broadcast(
-                spark.createDataFrame(
-                    [(cid, cents[cid]) for cid in sorted(cents)],
-                    "cid long, cvec array<double>",
-                )
-            )
-            assigned = _assign_nearest(vn, cent_df).select(
-                F.col("centroid").alias("cid"), "vec"
-            )
-        else:
-            # map-side assignment: argmax cosine, tie -> low cid
-            choices = ", ".join(
-                f"struct({dot_sql('vec', array_literal(cents[cid]))} / "
-                f"(nrm * {math.sqrt(_py_dot(cents[cid], cents[cid]))!r}D)"
-                f" AS c, CAST({-cid} AS BIGINT) AS n)"
-                for cid in sorted(cents)
-            )
-            assigned = vn.select(
-                F.expr(f"CAST(-(greatest({choices}).n) AS BIGINT) AS cid"),
-                "vec",
-            )
-        sums = (
-            assigned.groupBy("cid")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("_n"),
-                *[
-                    F.expr(
-                        f"CAST(sum(CAST(round(element_at(vec, {j + 1}) * {Q})"
-                        f" AS BIGINT)) AS BIGINT) AS _s{j}"
-                    )
-                    for j in range(d)
-                ],
-            )
-            .collect()
-        )
-        # empty clusters simply have no row, exactly like GROUP BY
-        # on the oracle side
-        cents = {
-            int(r["cid"]): [
-                float(r[f"_s{j}"]) / r["_n"] / Q for j in range(d)
-            ]
-            for r in sums
-        }
-    return spark.createDataFrame(
-        [(cid, cents[cid]) for cid in sorted(cents)],
-        "cid long, cvec array<double>",
+    O(C·d) — ~49 MB at C=10⁵/d=64; past ~10⁶·d doubles a two-level
+    quantizer, imi_topk, is the published next step). Each iteration
+    ships them to the JVM as one local `_cs` row and assigns with
+    _assign_nearest, the same kernel for every C: the plan holds C
+    centroids as data, not as C literal expressions, so it stays one
+    fold per row at the 10⁴–10⁶ C the derived-C SemDeDup default
+    produces, and no assignment exchange runs. The mean recompute is
+    ONE aggregate keyed by cid whose d quantized column-sums
+    partial-combine map-side, so the trainer's only shuffle per
+    iteration is partitions × C × (d+1) longs — independent of N.
+    The result is a LocalRelation (session.local_frame)."""
+    return local_frame(
+        corpus.sparkSession,
+        _lloyd(_prep(corpus, id_col, vec_col), n_centroids, n_iter),
+        _CENTROID_SCHEMA,
     )
 
 
@@ -511,11 +497,10 @@ def ivf_kmeans_topk(
     outside the training seed. The read path is _ivf_search,
     byte-identical to ivf_topk's."""
     c = _prep(corpus, id_col, vec_col)
-    cent = F.broadcast(
-        kmeans_centroids(corpus, n_centroids, n_iter, id_col, vec_col)
+    cs = _local_centroid_row(
+        corpus.sparkSession, _lloyd(c, n_centroids, n_iter)
     )
-    q = _prep(queries, id_col, vec_col)
-    return _ivf_search(c, cent, q, k, n_probe)
+    return _ivf_search(c, cs, _prep(queries, id_col, vec_col), k, n_probe)
 
 
 # Trained coarse quantizers are BUILD artifacts: a real IVF system
@@ -529,20 +514,13 @@ def ivf_kmeans_topk(
 # keeps on the driver between Lloyd iterations.
 _TRAINED_CENTROID_CACHE: dict[tuple, list[tuple[int, list[float]]]] = {}
 
-# The centroid DATAFRAME per (key, session) — not just the floats
-# (r12 optimization round). createDataFrame builds a new LogicalRDD
-# each call, and two LogicalRDDs over different RDD ids never
-# canonicalize equal, so every plan embedding a fresh centroid
-# relation is a NEW plan to Spark's CacheManager: semantic_dedup's
-# persist() was re-materializing (and LEAKING) one ranked-relation
-# cache entry per call — measured 1 entry/run at sf0.1, each paying
-# the full assignment+window rebuild (~0.9 s/run). Handing every
-# caller the SAME DataFrame object makes downstream plans
-# canonicalize equal, so CacheManager dedupes and run 2+ reads the
-# one materialized entry. Values hold (session, df); the session is
-# identity-checked on lookup so a restarted driver never receives a
-# DataFrame bound to a dead session.
-_TRAINED_CENTROID_DF_CACHE: dict[tuple, tuple[object, DataFrame]] = {}
+# The centroid DataFrames per (key, session) — the (cid, cvec)
+# relation and its one-row `_cs` fold — built once from the floats,
+# so every caller gets the SAME objects and serves rebuild nothing.
+# Values hold (session, frames); the session is identity-checked on
+# lookup so a restarted driver never receives a DataFrame bound to a
+# dead session.
+_TRAINED_CENTROID_DF_CACHE: dict[tuple, tuple] = {}
 
 
 def _corpus_fingerprint(df: DataFrame) -> str | None:
@@ -643,8 +621,8 @@ def kmeans_centroids_cached(
 ) -> DataFrame:
     """kmeans_centroids with per-(corpus, config) memoization of the
     driver-side centroid values. First call trains (n_iter Lloyd
-    passes over the corpus); later calls rebuild the tiny (cid, cvec)
-    relation from the cached floats. Determinism is unaffected: the
+    passes over the corpus); later calls in the same session return
+    the same (cid, cvec) LocalRelation. Determinism is unaffected: the
     cached values ARE the quantized-mean training output, so a cold
     and a warm call return bit-identical centroids.
 
@@ -664,19 +642,43 @@ def kmeans_centroids_cached(
     file fingerprint, because a silent collision drops the wrong
     rows downstream (Connect callers wanting the memo can collect
     centroids once and rebuild the tiny relation themselves)."""
+    return _trained_frames(
+        corpus, cache_key, n_centroids, n_iter, id_col, vec_col
+    )[0]
+
+
+def _trained_frames(
+    corpus: DataFrame,
+    cache_key: str,
+    n_centroids: int,
+    n_iter: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """kmeans_centroids_cached's (cid, cvec) relation and its one-row
+    `_cs` relation, both LocalRelations built once per (memo key,
+    session) from the memo's floats: a warm serve runs no job to
+    build or broadcast its centroids."""
     cfg = (cache_key, n_centroids, n_iter, id_col, vec_col)
     fp = _corpus_fingerprint(corpus)
     pd_ = _plan_digest(corpus)
+    v = _prep(corpus, id_col, vec_col)
+    sess = corpus.sparkSession
+
+    def frames(cents):
+        return (
+            local_frame(sess, cents, _CENTROID_SCHEMA),
+            _local_centroid_row(sess, cents),
+        )
+
     if fp is None or pd_ is None:
         # no observable corpus identity (in-memory source, or no JVM
         # plan surface under Connect): train fresh rather than risk
         # serving another corpus's centroids
-        return kmeans_centroids(corpus, n_centroids, n_iter, id_col, vec_col)
+        return frames(_lloyd(v, n_centroids, n_iter))
     key = (*cfg, fp, pd_)
     if key not in _TRAINED_CENTROID_CACHE:
-        rows = kmeans_centroids(
-            corpus, n_centroids, n_iter, id_col, vec_col
-        ).collect()
+        cents = _lloyd(v, n_centroids, n_iter)
         # evict superseded FILE fingerprints of the same (config,
         # plan) so a long-lived driver training per micro-batch over
         # a mutating table holds ONE entry per logical corpus, not
@@ -690,10 +692,7 @@ def kmeans_centroids_cached(
         ]:
             del _TRAINED_CENTROID_CACHE[stale]
             _TRAINED_CENTROID_DF_CACHE.pop(stale, None)
-        _TRAINED_CENTROID_CACHE[key] = [
-            (int(r["cid"]), [float(x) for x in r["cvec"]]) for r in rows
-        ]
-    sess = corpus.sparkSession
+        _TRAINED_CENTROID_CACHE[key] = cents
     hit = _TRAINED_CENTROID_DF_CACHE.get(key)
     if hit is not None and hit[0] is sess:
         return hit[1]
@@ -705,11 +704,9 @@ def kmeans_centroids_cached(
         k for k, v in _TRAINED_CENTROID_DF_CACHE.items() if v[0] is not sess
     ]:
         del _TRAINED_CENTROID_DF_CACHE[k]
-    df = sess.createDataFrame(
-        _TRAINED_CENTROID_CACHE[key], "cid long, cvec array<double>"
-    )
-    _TRAINED_CENTROID_DF_CACHE[key] = (sess, df)
-    return df
+    hit = (sess, frames(_TRAINED_CENTROID_CACHE[key]))
+    _TRAINED_CENTROID_DF_CACHE[key] = hit
+    return hit[1]
 
 
 def ivf_trained_topk(
@@ -731,46 +728,15 @@ def ivf_trained_topk(
     build rather than per-query work, which is what a bench of the
     serving path should measure. Trained recall@10 on seed-disjoint
     queries: 0.55 vs 0.40 seeded (tests/test_round5_ops.py)."""
-    c = _prep(corpus, id_col, vec_col)
-    cent = F.broadcast(
-        kmeans_centroids_cached(
-            corpus, cache_key, n_centroids, n_iter, id_col, vec_col
-        )
-    )
-    q = _prep(queries, id_col, vec_col)
-    return _ivf_search(c, cent, q, k, n_probe)
-
-
-def _probe_half(
-    q: DataFrame, cent: DataFrame, half_expr, out_cid: str, n_probe: int
-) -> DataFrame:
-    """Top-`n_probe` centroids of ONE half-space quantizer per query:
-    the same (cos desc, cid) ranking _ivf_search uses for its probe
-    set, on the sliced half-vector. Norms hoisted per side (bitwise-
-    identical to cosine; see _assign_nearest)."""
-    from pyspark.sql.window import Window
-
-    if "cnrm" not in cent.columns:
-        cent = cent.withColumn("cnrm", l2_norm("cvec"))
-    qh = q.select(
-        F.col("vec_id").alias("query_id"), half_expr.alias("qh")
-    ).withColumn("qhnrm", l2_norm("qh"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("cid")
-    )
-    return (
-        qh.join(cent)
-        .select(
-            "query_id",
-            "cid",
-            (
-                dot("qh", "cvec")
-                / (F.col("qhnrm") * F.col("cnrm"))
-            ).alias("_cos"),
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n_probe)
-        .select("query_id", F.col("cid").alias(out_cid))
+    cs = _trained_frames(
+        corpus, cache_key, n_centroids, n_iter, id_col, vec_col
+    )[1]
+    return _ivf_search(
+        _prep(corpus, id_col, vec_col),
+        cs,
+        _prep(queries, id_col, vec_col),
+        k,
+        n_probe,
     )
 
 
@@ -785,8 +751,9 @@ def imi_train_halves(
     """Train the inverted multi-index's TWO half-space quantizers
     (Babenko & Lempitsky 2012): spherical Lloyd on each 32-d half,
     same seeding/tie-break as every quantizer here. Returns
-    (cent_a, cent_b) as (cid, cvec) relations — the INDEX-BUILD
-    artifact; broadcast them at every use (O((C₁+C₂)·d) floats).
+    (cent_a, cent_b) as (cid, cvec) LocalRelations — the INDEX-BUILD
+    artifact; each use folds each into one `_cs` array
+    (O((C₁+C₂)·d) floats).
     Extracted from imi_topk (r10) so the streaming admission twin
     trains once batch-side and serves the same centroids. `d` skips
     the dimension-probe job when the caller already knows it."""
@@ -814,9 +781,10 @@ def imi_cell_assignments(
 ) -> DataFrame:
     """Two-level inverted lists: each vector keyed by its half-space
     assignment PAIR — returns (vec_id, vec, nrm, ca, cb). At 100 TB
-    (ca, cb) is the write-time partition key; here the two map-side-
-    combined argmax aggregates (the _assign_nearest shuffle form)
-    join back on vec_id. The ONE copy of the cell-pair pipeline —
+    (ca, cb) is the write-time partition key; here both half argmaxes
+    (the _nearest kernel over one `_cs` array per half) run in
+    one projection over the corpus — no join back on vec_id, no
+    exchange. The ONE copy of the cell-pair pipeline —
     imi_topk's index build and the streaming admission probe both
     call it, so their assignments cannot drift.
 
@@ -835,20 +803,28 @@ def imi_cell_assignments(
             )
         d = len(row["vec"])
     dh = d // 2
-    va = full.select("vec_id", F.slice(F.col("vec"), 1, dh).alias("vec"))
-    vb = full.select(
-        "vec_id", F.slice(F.col("vec"), dh + 1, d - dh).alias("vec")
-    )
-    a_cells = _assign_nearest(va, F.broadcast(cent_a)).select(
-        "vec_id", F.col("centroid").alias("ca")
-    )
-    b_cells = _assign_nearest(vb, F.broadcast(cent_b)).select(
-        "vec_id", F.col("centroid").alias("cb")
-    )
+    halves = full.select(
+        "vec_id",
+        "vec",
+        l2_norm("vec").alias("nrm"),
+        F.slice(F.col("vec"), 1, dh).alias("_va"),
+        F.slice(F.col("vec"), dh + 1, d - dh).alias("_vb"),
+    ).select("*", l2_norm("_va").alias("_na"), l2_norm("_vb").alias("_nb"))
     return (
-        full.withColumn("nrm", l2_norm("vec"))
-        .join(a_cells, "vec_id")
-        .join(b_cells, "vec_id")
+        _with_centroids(_with_centroids(halves, cent_a, "_csa"), cent_b, "_csb")
+        .select(
+            "vec_id",
+            "vec",
+            "nrm",
+            F.inline(
+                F.array(
+                    F.struct(
+                        (-_nearest("_va", "_na", "_csa")["n"]).alias("ca"),
+                        (-_nearest("_vb", "_nb", "_csb")["n"]).alias("cb"),
+                    )
+                )
+            ),
+        )
     )
 
 
@@ -870,11 +846,10 @@ def imi_topk(
     each, spherical Lloyd, same seeding/tie-break as every quantizer
     here) and index each vector by the PAIR (ca, cb) of its half
     assignments. The effective cell grid is C₁·C₂ cells from only
-    C₁+C₂ trained centroids — 10⁶ cells cost 2·10³ broadcast rows,
+    C₁+C₂ trained centroids — 10⁶ cells cost 2·10³ centroids,
     which is why the multi-index is how billion-vector IVF systems
-    keep both the broadcast and the per-row argmax small (each half
-    argmax is O(C_half) = O(√C_eff) work, and past 256 per half the
-    kmeans_centroids crossover applies automatically).
+    keep both the centroid state and the per-row argmax small (each half
+    argmax is O(C_half) = O(√C_eff) work).
 
     Search probes the CARTESIAN grid of each query's `n_probe_half`
     best A-cells × best B-cells (probe set = n_probe_half² cells),
@@ -883,9 +858,9 @@ def imi_topk(
     uses, with the same (cos desc, vec_id) tie-break and self-match
     exclusion.
 
-    Scale shape: training moves O((C₁+C₂)·d) floats; half
-    assignments are two map-side-combined aggregates (the
-    _assign_nearest shuffle form); at write time (ca, cb) is the
+    Scale shape: training moves O((C₁+C₂)·d) floats; both half
+    assignments run in one map-side projection (the _nearest
+    kernel, no exchange); at write time (ca, cb) is the
     natural two-level partition key — a probe then reads
     n_probe_half²/(C₁·C₂) of the data files, the multi-index analog
     of ivf_partitioned_layout's pruning. Output schema matches
@@ -907,25 +882,25 @@ def imi_topk(
     )
 
     dh = d // 2
-    half_a = F.slice(F.col("vec"), 1, dh)
-    half_b = F.slice(F.col("vec"), dh + 1, d - dh)
-    cent_a = F.broadcast(cent_a)
-    cent_b = F.broadcast(cent_b)
-
-    q = _prep(queries, id_col, vec_col)
-    probes = _probe_half(q, cent_a, half_a, "ca", n_probe_half).join(
-        _probe_half(q, cent_b, half_b, "cb", n_probe_half), "query_id"
-    )
-    qv = q.select(
+    q = _prep(queries, id_col, vec_col).select(
         F.col("vec_id").alias("query_id"),
         F.col("vec").alias("qvec"),
         l2_norm("vec").alias("qnrm"),
-    )
+        F.slice(F.col("vec"), 1, dh).alias("qa"),
+        F.slice(F.col("vec"), dh + 1, d - dh).alias("qb"),
+    ).select("*", l2_norm("qa").alias("qna"), l2_norm("qb").alias("qnb"))
+    # the probe grid: each query's best A-cells, each crossed with its
+    # best B-cells
+    grid = _probes(q, cent_a, "qa", "qna", n_probe_half)
+    grid = _probes(
+        grid.withColumnRenamed("centroid", "ca"), cent_b, "qb", "qnb",
+        n_probe_half,
+    ).withColumnRenamed("centroid", "cb")
     w_topk = Window.partitionBy("query_id").orderBy(
         F.col("_cos").desc(), F.col("vec_id")
     )
     return (
-        F.broadcast(probes.join(qv, "query_id"))
+        F.broadcast(grid.select("query_id", "qvec", "qnrm", "ca", "cb"))
         .join(lists, ["ca", "cb"])
         .filter(F.col("query_id") != F.col("vec_id"))
         .select(
@@ -961,16 +936,19 @@ def prototype_assignments(
     policy on top (drop the easiest fraction when data is abundant)
     lives in plans/round9_queries.py::data_pruning_ssl_prototypes.
 
-    Composition is the whole point: training is kmeans_centroids
-    (any-magnitude C since r9), assignment is the broadcast-join
-    _assign_nearest — the same (cos, -cid) max-struct tie-break
-    every oracle mirrors — so this adds zero new numeric code paths.
-    Scale shape: one broadcast of C centroids, one map-side-combined
-    argmax per vector; no corpus self-join, no global state."""
-    cent = F.broadcast(
-        kmeans_centroids(corpus, n_centroids, n_iter, id_col, vec_col)
+    Composition is the whole point: training is kmeans_centroids,
+    assignment is _assign_nearest — the same (cos, -cid) max-struct
+    tie-break every oracle mirrors — so this adds zero new numeric
+    code paths. Scale shape: one array of C centroids, one
+    map-side argmax per vector; no corpus self-join, no exchange, no
+    global state."""
+    c = _prep(corpus, id_col, vec_col)
+    a = _assign_nearest(
+        c,
+        _local_centroid_row(
+            corpus.sparkSession, _lloyd(c, n_centroids, n_iter)
+        ),
     )
-    a = _assign_nearest(_prep(corpus, id_col, vec_col), cent)
     return a.select(
         "vec_id",
         F.col("centroid").alias("cid"),
@@ -1042,10 +1020,9 @@ def semantic_dedup(
     the derived value sits at the sweep's flat floor. Sizing costs
     one count() pass; the oracle-gated registry queries keep an
     EXPLICIT C because the DuckDB oracle re-derives Lloyd training
-    at the same C. Derived C of ANY magnitude is safe (r9): past
-    C=256 kmeans_centroids switches to the broadcast-join assignment
-    form, bit-identical to the literal expression (see its
-    docstring).
+    at the same C. Derived C of ANY magnitude is safe: the centroids
+    ride as data in one array value, not as plan expressions (see
+    kmeans_centroids).
     """
     from pyspark.sql.window import Window
 
@@ -1056,14 +1033,13 @@ def semantic_dedup(
         # exactly (floor would let it creep just past the target)
         n_centroids = max(16, -(-n // target_cluster_size))
     if cache_key is not None:
-        trained = kmeans_centroids_cached(
+        cent = _trained_frames(
             corpus, cache_key, n_centroids, n_iter, id_col, vec_col
-        )
+        )[1]
     else:
-        trained = kmeans_centroids(
-            corpus, n_centroids, n_iter, id_col, vec_col
+        cent = _local_centroid_row(
+            corpus.sparkSession, _lloyd(c, n_centroids, n_iter)
         )
-    cent = F.broadcast(trained)
     # nearest centroid + its cosine per vector — the shared
     # _assign_nearest encoding (one copy of the tie-break-sensitive
     # argmax that the oracle mirrors)
@@ -1084,7 +1060,7 @@ def semantic_dedup(
     # the ranked relation feeds three subtrees (both sides of the
     # pair join share its cid-exchange, but the final keep-verdict
     # join re-shuffles on vec_id and would recompute the whole
-    # broadcast-argmax assignment). Persisting computes the
+    # map-side argmax assignment). Persisting computes the
     # assignment once — measured 2.14 s → 1.36 s at sf0.1/local[32],
     # identical output. Lifetime (r8 advice — the earlier "until LRU
     # eviction" claim was WRONG: Spark's CacheManager never evicts
@@ -1184,11 +1160,11 @@ def semantic_admission_pruned(
     never the corpus."""
     from pyspark import StorageLevel
 
-    cent = F.broadcast(spark.read.parquet(path + "/_centroids"))
+    cent = spark.read.parquet(path + "/_centroids")
     # persist the assigned batch: it is consumed three times (the
     # touched-cluster collect, the scored-join build side, and the
     # final left join) — without the cache each consumer would
-    # re-scan the incoming source and re-run the broadcast argmax
+    # re-scan the incoming source and re-run the argmax
     q = (
         _assign_nearest(_prep(incoming, id_col, vec_col), cent)
         .select(
@@ -1266,7 +1242,7 @@ def semantic_admission_pruned(
         # corrupt layout) — otherwise each failed micro-batch leaks
         # one MEMORY_AND_DISK entry for the driver lifetime
         q.unpersist()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 def quantize_int8(
@@ -1351,12 +1327,16 @@ def write_ivf_layout(
     three)."""
     c = _prep(corpus, id_col, vec_col)
     if trained:
-        cent = kmeans_centroids(corpus, n_centroids, n_iter, id_col, vec_col)
+        cent = local_frame(
+            corpus.sparkSession,
+            _lloyd(c, n_centroids, n_iter),
+            _CENTROID_SCHEMA,
+        )
     else:
         cent = c.filter(F.col("vec_id") < n_centroids).select(
             F.col("vec_id").alias("cid"), F.col("vec").alias("cvec")
         )
-    assigned = _assign_nearest(c, F.broadcast(cent)).drop("_cent_cos")
+    assigned = _assign_nearest(c, cent).drop("_cent_cos")
     assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
     # centroid norms are build artifacts too — stored once so serving
     # paths never recompute them
@@ -1388,31 +1368,12 @@ def ivf_partitioned_topk(
     cent_raw = spark.read.parquet(path + "/_centroids")
     if "cnrm" not in cent_raw.columns:  # pre-cnrm layout: derive
         cent_raw = cent_raw.withColumn("cnrm", l2_norm("cvec"))
-    cent = F.broadcast(cent_raw)
     q = _prep(queries, id_col, vec_col).select(
         F.col("vec_id").alias("query_id"),
         F.col("vec").alias("qvec"),
         l2_norm("vec").alias("qnrm"),
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("cid")
-    )
-    probes = (
-        q.join(cent)
-        .select(
-            "query_id",
-            "qvec",
-            "qnrm",
-            "cid",
-            (
-                dot("qvec", "cvec")
-                / (F.col("qnrm") * F.col("cnrm"))
-            ).alias("_cos"),
-        )
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= n_probe)
-        .select("query_id", "qvec", "qnrm", F.col("cid").alias("centroid"))
-    )
+    probes = _probes(q, cent_raw, "qvec", "qnrm", n_probe)
     probed_cids = [
         int(r["centroid"])
         for r in probes.select("centroid").distinct().collect()

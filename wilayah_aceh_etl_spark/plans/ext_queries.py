@@ -3870,7 +3870,7 @@ def similarity_imi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged: effective C grows as the PRODUCT of two small
     quantizers, so 10⁶ cells broadcast 2·10³ centroid rows instead
     of 10⁶ (operators/similarity.py::imi_topk documents the scale
-    arithmetic; SCALE.md round-9 update ties it to the crossover).
+    arithmetic; SCALE.md's round-9 update ties it to derived C).
     The oracle re-derives BOTH half-space Lloyd trainings (two
     iterations each), both assignments, the per-query 2×2 probe
     grid, and the exact-cosine rerank — the full two-level pipeline

@@ -2119,10 +2119,11 @@ def streaming_imi_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, micro-batch routing, AND the order-dependent
     admission verdicts at once.
 
-    Scale shape: per batch one broadcast of C₁+C₂ centroid rows,
-    two map-side argmax aggregates, and a cell-pair EQUI-join
-    against the standing index (at 100 TB the admitted table is
-    partitioned by (ca, cb) — the probe reads 1/(C₁·C₂) of it);
+    Scale shape: per batch one broadcast row per half quantizer,
+    both half argmaxes in one map-side projection, and a cell-pair
+    EQUI-join against the standing index (at 100 TB the admitted
+    table is partitioned by (ca, cb) — the probe reads 1/(C₁·C₂) of
+    it);
     never all-pairs, no cross-batch driver state."""
     import os
     import shutil
@@ -2136,20 +2137,9 @@ def streaming_imi_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
+    # the index artifact: trained once, held as two LocalRelations
+    # (C₁+C₂ = 8 centroids) that every micro-batch reuses
     cent_a, cent_b = S.imi_train_halves(emb, c_half=4, n_iter=2)
-    # materialize the index artifact ONCE (C₁+C₂ = 8 rows) and serve
-    # it as literal relations — the trained-quantizer analog of the
-    # classifier filter's literal weights; without this every
-    # micro-batch would lazily re-run both Lloyd trainings. Python
-    # floats round-trip IEEE doubles exactly, so assignments are
-    # bit-identical to the lazy form.
-    cent_a, cent_b = (
-        spark.createDataFrame(
-            [(int(r["cid"]), list(r["cvec"])) for r in c.collect()],
-            "cid long, cvec array<double>",
-        )
-        for c in (cent_a, cent_b)
-    )
 
     base = scratch_dir("imiadm_src")
     for k in range(4):

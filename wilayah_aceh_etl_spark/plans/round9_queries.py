@@ -3483,7 +3483,7 @@ def data_pruning_ssl_prototypes(
     data you should keep the HARD (atypical) examples and drop the
     easy redundant core. Prototypes are the existing spherical
     quantized-mean k-means (2 Lloyd iterations, first-16 seeds);
-    assignment is the broadcast-join argmax with the (cos, -cid)
+    assignment is the map-side argmax with the (cos, -cid)
     tie-break every oracle mirrors
     (operators/similarity.py::prototype_assignments — pure
     composition, zero new numeric paths).

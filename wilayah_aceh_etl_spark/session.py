@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Conf that must be set before JVM start.
 #
@@ -125,3 +126,27 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return ensure_session_defaults(spark)
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over driver-held rows (tuples or Rows in schema
+    order) as a JVM-local relation. `createDataFrame(<list>)` makes a
+    LogicalRDD over a PythonRDD: reading it starts Python workers,
+    and two such frames over the same values never compare equal in
+    a plan. An Arrow table becomes a LocalRelation (below
+    `spark.sql.execution.arrow.localRelationThreshold`, 48 MB):
+    collected or read by a scalar subquery without a Spark job, with
+    no Python worker, and exact for -0.0, subnormals and the largest
+    double."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
