@@ -989,36 +989,178 @@ def _py_lloyd(rows, n_centroids, n_iter):
     return cents
 
 
-def test_kmeans_matches_python_lloyd(spark):
-    """kmeans_centroids trains every C through the one _assign_nearest
-    kernel; its centroids are byte-for-byte those of a pure-Python
-    Lloyd (_py_lloyd) at a small C, and at C = 300 and 512, where
-    assignment once needed a different plan form."""
-    import struct
-
-    # 600 DISTINCT well-separated vectors (Knuth-multiplier hash per
-    # dimension, distinct prime moduli — no shared period), d=4,
-    # strictly positive
-    n, d = 600, 4
-    mods = (4093, 4099, 4111, 4127)
-    rows = [
+def _hash_corpus(n, d):
+    """n distinct vectors of dimension d with signed components: a
+    Knuth-multiplier hash per (row, dimension), no shared period."""
+    return [
         (
             i,
             [
-                1.0 + ((i + 1) * 2654435761 % mods[j]) / mods[j]
+                ((i + 1) * 2654435761 * (2 * j + 1) % 8191) / 8191 - 0.5
                 for j in range(d)
             ],
         )
         for i in range(n)
     ]
-    v = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for c in (16, 300, 512):
-        want = sorted(
-            (cid, struct.pack(f"<{d}d", *cvec))
-            for cid, cvec in _py_lloyd(rows, c, 2)
+
+
+def test_kmeans_matches_python_lloyd(spark):
+    """kmeans_centroids trains every C through the one _assign_nearest
+    kernel and the one (cid, j) mean aggregate; its centroids are
+    byte-for-byte those of a pure-Python Lloyd (_py_lloyd) at d = 4
+    for a small C and at C = 300 and 512, where assignment once
+    needed a different plan form, and at d = 64 for C = 16 and 256."""
+    import struct
+
+    # 600 DISTINCT well-separated vectors (Knuth-multiplier hash per
+    # dimension, distinct prime moduli — no shared period), d=4,
+    # strictly positive
+    mods = (4093, 4099, 4111, 4127)
+    rows4 = [
+        (
+            i,
+            [1.0 + ((i + 1) * 2654435761 % mods[j]) / mods[j] for j in range(4)],
         )
-        got = _packed_centroids(S.kmeans_centroids(v, c, n_iter=2))
-        assert got == want, f"C={c}"
+        for i in range(600)
+    ]
+    for rows, cs in ((rows4, (16, 300, 512)), (_hash_corpus(400, 64), (16, 256))):
+        d = len(rows[0][1])
+        v = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        for c in cs:
+            want = sorted(
+                (cid, struct.pack(f"<{d}d", *cvec))
+                for cid, cvec in _py_lloyd(rows, c, 2)
+            )
+            got = _packed_centroids(S.kmeans_centroids(v, c, n_iter=2))
+            assert got == want, f"d={d} C={c}"
+
+
+def _column_lloyd(v, n_centroids, n_iter):
+    """The former Lloyd loop, whose mean step is one aggregate keyed
+    by cid with one quantized column-sum per dimension, each read
+    with element_at."""
+    from wilayah_aceh_etl_spark.functions.vectors import l2_norm
+
+    Q = 16777216
+    cents = [
+        (int(r["vec_id"]), list(r["vec"]))
+        for r in v.orderBy("vec_id").limit(n_centroids).collect()
+    ]
+    d = len(cents[0][1])
+    vn = v.withColumn("nrm", l2_norm("vec"))
+    for _ in range(n_iter):
+        sums = (
+            S._assign_nearest(vn, S._local_centroid_row(v.sparkSession, cents))
+            .select(F.col("centroid").alias("cid"), "vec")
+            .groupBy("cid")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("_n"),
+                *[
+                    F.expr(
+                        f"CAST(sum(CAST(round(element_at(vec, {j + 1}) * {Q})"
+                        f" AS BIGINT)) AS BIGINT) AS _s{j}"
+                    )
+                    for j in range(d)
+                ],
+            )
+            .collect()
+        )
+        cents = sorted(
+            (int(r["cid"]), [float(r[f"_s{j}"]) / r["_n"] / Q for j in range(d)])
+            for r in sums
+        )
+    return cents
+
+
+def test_kmeans_long_vector_trains_column_form_centroids(spark):
+    """A vector longer than the seeds' d contributes its first d
+    components to its cluster's mean: the centroids are byte-equal
+    to those of the d-column mean step."""
+    import struct
+
+    rows = _hash_corpus(200, 4)
+    rows[150] = (150, rows[150][1] + [7.25, -3.5])
+    v = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    want = sorted(
+        (cid, struct.pack("<4d", *cvec))
+        for cid, cvec in _column_lloyd(S._prep(v, "vec_id", "embedding"), 8, 2)
+    )
+    assert _packed_centroids(S.kmeans_centroids(v, 8, n_iter=2)) == want
+
+
+def test_kmeans_short_vector_raises(spark):
+    """A vector shorter than the seeds' d raises, as its missing
+    components did in the d-column mean step."""
+    rows = _hash_corpus(200, 4)
+    rows[150] = (150, rows[150][1][:3])
+    v = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="INVALID_ARRAY_INDEX_IN_ELEMENT_AT"):
+        S.kmeans_centroids(v, 8, n_iter=2).collect()
+
+
+def _physical_nodes(plan):
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _physical_nodes(children.apply(i))
+
+
+def _mean_step_plan(spark, d):
+    """The nodes of _mean_step's physical plan (before AQE) on a
+    d-dimensional corpus at C = 8."""
+    from wilayah_aceh_etl_spark.functions.vectors import l2_norm
+
+    rows = _hash_corpus(64, d)
+    vn = S._prep(
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>"),
+        "vec_id",
+        "embedding",
+    ).withColumn("nrm", l2_norm("vec"))
+    plan = S._mean_step(vn, rows[:8], d)._jdf.queryExecution().executedPlan()
+    return list(_physical_nodes(plan.initialPlan()))
+
+
+def test_lloyd_mean_step_plan_does_not_grow_with_d(spark):
+    """The mean step is one exchange over a partial aggregate keyed by
+    (cid, j), with no join, and holds as many aggregate functions at
+    d = 64 as at d = 4."""
+    n_functions = []
+    for d in (4, 64):
+        nodes = _mean_step_plan(spark, d)
+        kinds = [n.getClass().getSimpleName() for n in nodes]
+        assert not any("Join" in k for k in kinds), kinds
+        exchanges = [n for n in nodes if "Exchange" in n.getClass().getSimpleName()]
+        assert len(exchanges) == 1, kinds
+        partial = exchanges[0].child()
+        assert partial.getClass().getSimpleName() == "HashAggregateExec"
+        keys = partial.groupingExpressions()
+        assert [keys.apply(i).name() for i in range(keys.size())] == ["cid", "j"]
+        funcs = partial.aggregateExpressions()
+        assert {
+            funcs.apply(i).mode().toString() for i in range(funcs.size())
+        } == {"Partial"}
+        n_functions.append(funcs.size())
+    assert n_functions[0] == n_functions[1] == 2
+
+
+def test_kmeans_two_iterations_run_five_jobs(spark):
+    """kmeans_centroids(n_iter=2) runs 5 Spark jobs (statusTracker):
+    the seeds' TakeOrdered, then the shuffle map stage and the result
+    stage of each iteration's mean step."""
+    import uuid
+
+    v = spark.createDataFrame(
+        _hash_corpus(200, 64), "vec_id long, embedding array<double>"
+    )
+    sc = spark.sparkContext
+    group = f"kmeans_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        S.kmeans_centroids(v, 16, n_iter=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
 
 
 def _join_form_assign(c, cent):

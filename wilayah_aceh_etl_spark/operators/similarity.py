@@ -380,13 +380,49 @@ def _ivf_search(
     )
 
 
+# Lloyd's mean quantum: each coordinate is summed as the exact
+# integer round(x·2²⁴), so the mean is one division of exact ints
+_Q = 16777216
+
+
+def _mean_step(vn: DataFrame, cents, d: int) -> DataFrame:
+    """One Lloyd iteration before its collect: the vectors of `vn`
+    (vec_id, vec, nrm) assigned to the driver-held `cents`, as
+    (cid, j, n, s) rows — for each cid and 0-based dimension j, the
+    vector count n and the quantized sum s of component j.
+
+    ONE aggregate keyed by (cid, j), whose functions do not grow
+    with d: each assigned row is exploded over the positions
+    0 … d−1 in the assignment's map stage, and the partial aggregate
+    combines them before the exchange, which carries O(partitions ·
+    C · d) rows — not the O(N · d) exploded join. Component j is
+    read with element_at, as the d-column form did: a vector longer
+    than d contributes its first d components, a shorter one raises,
+    and a NULL vector is counted with no sum."""
+    return (
+        _assign_nearest(vn, _local_centroid_row(vn.sparkSession, cents))
+        .select(
+            F.col("centroid").alias("cid"),
+            "vec",
+            F.expr(f"explode(sequence(0, {d - 1}))").alias("j"),
+        )
+        .groupBy("cid", "j")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.expr(
+                f"CAST(sum(CAST(round(element_at(vec, j + 1) * {_Q})"
+                " AS BIGINT)) AS BIGINT) AS s"
+            ),
+        )
+    )
+
+
 def _lloyd(
     v: DataFrame, n_centroids: int, n_iter: int
 ) -> list[tuple[int, list[float]]]:
     """kmeans_centroids' training on a prepared (vec_id, vec)
     relation: the driver-held (cid, floats) centroids, ascending by
     cid."""
-    Q = 16777216
     # centroids live on the driver, keyed by their ORIGINAL cid so
     # tie-breaks stay aligned with the SQL oracle even if a cluster
     # empties mid-training. Seeds are the first C vectors by id RANK
@@ -401,33 +437,18 @@ def _lloyd(
         for r in v.orderBy("vec_id").limit(n_centroids).collect()
     ]
     d = len(cents[0][1]) if cents else 0
-    spark = v.sparkSession
     # per-row vector norm hoisted out of the C-way argmax
     vn = v.withColumn("nrm", l2_norm("vec"))
     for _ in range(n_iter):
-        assigned = _assign_nearest(
-            vn, _local_centroid_row(spark, cents)
-        ).select(F.col("centroid").alias("cid"), "vec")
-        sums = (
-            assigned.groupBy("cid")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("_n"),
-                *[
-                    F.expr(
-                        f"CAST(sum(CAST(round(element_at(vec, {j + 1}) * {Q})"
-                        f" AS BIGINT)) AS BIGINT) AS _s{j}"
-                    )
-                    for j in range(d)
-                ],
+        # fold the (cid, j, n, s) rows into per-cid coordinates; empty
+        # clusters simply have no row, exactly like GROUP BY on the
+        # oracle side
+        acc: dict[int, list[float]] = {}
+        for r in _mean_step(vn, cents, d).collect():
+            acc.setdefault(int(r["cid"]), [0.0] * d)[r["j"]] = (
+                float(r["s"]) / r["n"] / _Q
             )
-            .collect()
-        )
-        # empty clusters simply have no row, exactly like GROUP BY
-        # on the oracle side
-        cents = sorted(
-            (int(r["cid"]), [float(r[f"_s{j}"]) / r["_n"] / Q for j in range(d)])
-            for r in sums
-        )
+        cents = sorted(acc.items())
     return cents
 
 
@@ -463,11 +484,15 @@ def kmeans_centroids(
     _assign_nearest, the same kernel for every C: the plan holds C
     centroids as data, not as C literal expressions, so it stays one
     fold per row at the 10⁴–10⁶ C the derived-C SemDeDup default
-    produces, and no assignment exchange runs. The mean recompute is
-    ONE aggregate keyed by cid whose d quantized column-sums
-    partial-combine map-side, so the trainer's only shuffle per
-    iteration is partitions × C × (d+1) longs — independent of N.
-    The result is a LocalRelation (session.local_frame)."""
+    produces, and no assignment exchange runs. The mean recompute
+    (_mean_step) is ONE aggregate keyed by (cid, dimension) — a
+    count and one quantized sum, whatever d is — over each assigned
+    vector exploded by position in the map stage; it partial-combines
+    before the exchange, so the trainer's only shuffle per iteration
+    is partitions × C × d (cid, j, count, sum) rows — independent of
+    N. Its plan does not grow with d, so neither does the code a cold
+    JVM generates and JIT-compiles for it. The result is a
+    LocalRelation (session.local_frame)."""
     return local_frame(
         corpus.sparkSession,
         _lloyd(_prep(corpus, id_col, vec_col), n_centroids, n_iter),

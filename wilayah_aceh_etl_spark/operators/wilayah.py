@@ -44,6 +44,7 @@ from wilayah_aceh_etl_spark.functions.geometry import (
     geometry_struct,
     make_normalize_udf,
 )
+from wilayah_aceh_etl_spark.session import local_frame
 from wilayah_aceh_etl_spark.sources.geojson import read_features
 
 TABLE_SCHEMA = T.StructType(
@@ -286,8 +287,10 @@ def _affected_files(
         # keys on the streamed side: with an empty batch the scan stays
         # in the executed plan, so the batch's Observation still reports
         stats_df = F.broadcast(
-            spark.createDataFrame(
-                with_stats, "path string, level int, kmin string, kmax string"
+            local_frame(
+                spark,
+                with_stats,
+                "path string, level int, kmin string, kmax string",
             )
         )
         k = keys.select(F.col(_KODE).alias("_k"), F.col("level").alias("_lv"))
@@ -554,7 +557,7 @@ def read_table_version(
         root = os.path.dirname(os.path.dirname(path))
         by_root.setdefault(root, []).append(path)
     if not by_root:
-        return spark.createDataFrame([], TABLE_SCHEMA)
+        return local_frame(spark, [], TABLE_SCHEMA)
     parts = [_read(spark, r, files) for r, files in sorted(by_root.items())]
     return reduce(lambda a, b: a.unionByName(b), parts)
 
@@ -853,9 +856,7 @@ def search(table: DataFrame, q: str, limit: int = 10) -> DataFrame:
     order, top-10; query shorter than 3 chars → empty (F6 guard)."""
     spark = table.sparkSession
     if q is None or len(q) < 3:
-        return spark.createDataFrame(
-            [], "id string, name string, level int"
-        )
+        return local_frame(spark, [], "id string, name string, level int")
     return (
         table.filter(F.lower(F.col(_NAMA)).contains(q.lower()))
         .select(

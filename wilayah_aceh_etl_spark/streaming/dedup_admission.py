@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from wilayah_aceh_etl_spark.operators.dedup import (
     incremental_near_dup_filter,
 )
+from wilayah_aceh_etl_spark.session import local_frame
 
 VERDICT_SCHEMA = (
     "doc_id long, is_exact_dup boolean, near_dup_of long, kept boolean"
@@ -92,7 +93,7 @@ def apply_admission_batch(
             .select(*batch_df.columns)
         )
     else:
-        existing = spark.createDataFrame([], batch_df.schema)
+        existing = local_frame(spark, [], batch_df.schema)
     verdicts = incremental_near_dup_filter(
         existing, batch_df, threshold=threshold
     )

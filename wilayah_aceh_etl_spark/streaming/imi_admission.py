@@ -33,6 +33,7 @@ from wilayah_aceh_etl_spark.functions.vectors import dot
 from wilayah_aceh_etl_spark.operators.similarity import (
     imi_cell_assignments,
 )
+from wilayah_aceh_etl_spark.session import local_frame
 
 IMI_VERDICT_SCHEMA = (
     "vec_id long, ca long, cb long, n_cell_candidates bigint,"
@@ -131,7 +132,7 @@ def apply_imi_admission_batch(
             .select("vec_id", "vec", "nrm", "ca", "cb")
         )
     else:
-        existing = spark.createDataFrame([], _ADMITTED_SCHEMA)
+        existing = local_frame(spark, [], _ADMITTED_SCHEMA)
     q = assigned.select(
         F.col("vec_id").alias("q_id"),
         F.col("vec").alias("q_vec"),

@@ -35,6 +35,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wilayah_aceh_etl_spark.session import local_frame
+
 # staged-write fan-out; at scale size as merged_bytes / target_file_bytes
 MERGE_RANGE_PARTITIONS = 8
 
@@ -166,8 +168,8 @@ def _affected_by_key(
     if isinstance(sample, bool) or not isinstance(sample, (int, str)):
         return [p for p, _, _ in stats]  # unsupported key type: no pruning
     sql_t = "bigint" if isinstance(sample, int) else "string"
-    stats_df = spark.createDataFrame(
-        with_stats, f"path string, kmin {sql_t}, kmax {sql_t}"
+    stats_df = local_frame(
+        spark, with_stats, f"path string, kmin {sql_t}, kmax {sql_t}"
     )
     keys = batch.select(F.col(key_col).alias("_k")).distinct()
     hit = (
