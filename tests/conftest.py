@@ -63,6 +63,22 @@ def spark():
     yield spark
 
 
+def jobs_run(spark, fn):
+    """(fn(), the number of Spark jobs it ran, read from statusTracker
+    under a job group of its own)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_run_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -4,29 +4,14 @@ memos — so the next build of a trained query trains again."""
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_run
 from wilayah_aceh_etl_spark.cachectl import clear_computed_caches
 from wilayah_aceh_etl_spark.operators import ml_train as M
 from wilayah_aceh_etl_spark.operators import similarity as S
 from wilayah_aceh_etl_spark.plans.registry import all_specs
 from wilayah_aceh_etl_spark.sources.tables import load_table
-
-
-def _build_jobs(spark, build) -> int:
-    """Spark jobs (statusTracker) that `build()` runs."""
-    sc = spark.sparkContext
-    group = f"cachectl_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_clear_computed_caches_forces_retraining(spark):
@@ -36,7 +21,7 @@ def test_clear_computed_caches_forces_retraining(spark):
         return fn(spark, SF_SMOKE)
 
     build().collect()  # trains, or finds the memo
-    assert _build_jobs(spark, build) == 0  # a memo hit trains nothing
+    assert jobs_run(spark, build)[1] == 0  # a memo hit trains nothing
     emb = load_table(spark, SF_SMOKE, "embeddings").select(
         "vec_id",
         "embedding",
@@ -56,4 +41,4 @@ def test_clear_computed_caches_forces_retraining(spark):
 
     assert not any(memos) and cache_manager.isEmpty()
     # Lloyd's seed scan, then a map and a result stage per iteration
-    assert _build_jobs(spark, build) >= 5
+    assert jobs_run(spark, build)[1] >= 5

@@ -1098,6 +1098,18 @@ def test_kmeans_short_vector_raises(spark):
         S.kmeans_centroids(v, 8, n_iter=2).collect()
 
 
+def test_kmeans_zero_dimension_raises_empty_corpus_trains_nothing(spark):
+    """Seeds of dimension 0 raise on the driver, naming the empty
+    embedding (their zero norms leave no cosine to assign by); a
+    corpus without rows trains no centroids."""
+    schema = "vec_id long, embedding array<double>"
+    v = spark.createDataFrame([(i, []) for i in range(6)], schema)
+    with pytest.raises(ValueError, match="empty \\(dimension 0\\)"):
+        S.kmeans_centroids(v, 2, n_iter=1)
+    empty = spark.createDataFrame([], schema)
+    assert S.kmeans_centroids(empty, 2).collect() == []
+
+
 def _physical_nodes(plan):
     yield plan
     children = plan.children()
@@ -1147,20 +1159,13 @@ def test_kmeans_two_iterations_run_five_jobs(spark):
     """kmeans_centroids(n_iter=2) runs 5 Spark jobs (statusTracker):
     the seeds' TakeOrdered, then the shuffle map stage and the result
     stage of each iteration's mean step."""
-    import uuid
+    from tests.conftest import jobs_run
 
     v = spark.createDataFrame(
         _hash_corpus(200, 64), "vec_id long, embedding array<double>"
     )
-    sc = spark.sparkContext
-    group = f"kmeans_jobs_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        S.kmeans_centroids(v, 16, n_iter=2)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    _, jobs = jobs_run(spark, lambda: S.kmeans_centroids(v, 16, n_iter=2))
+    assert jobs == 5
 
 
 def _join_form_assign(c, cent):

@@ -188,26 +188,18 @@ def test_minhash_lsh_pairs_job_count(spark):
     """dedup_minhash_lsh_pairs at sf0.01 from an empty cache runs at
     most 11 Spark jobs (statusTracker): one shingle-array cache
     build, one band grouping, no shingle explode in the verify."""
-    import uuid
-
-    from tests.conftest import SF_CORRECT
+    from tests.conftest import SF_CORRECT, jobs_run
     from wilayah_aceh_etl_spark.plans.registry import all_specs
 
     T.load_table(spark, SF_CORRECT, "documents")  # schema outside the count
     spark.catalog.clearCache()
-    sc = spark.sparkContext
-    group = f"minhash_jobs_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
+    fn = all_specs()["dedup_minhash_lsh_pairs"].fn
     try:
-        rows = all_specs()["dedup_minhash_lsh_pairs"].fn(
-            spark, SF_CORRECT
-        ).collect()
+        rows, jobs = jobs_run(spark, lambda: fn(spark, SF_CORRECT).collect())
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
         spark.catalog.clearCache()
     assert len(rows) == 25
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
+    assert jobs <= 11
 
 
 def test_ivf_trained_topk_serves_map_side(spark):
@@ -218,27 +210,21 @@ def test_ivf_trained_topk_serves_map_side(spark):
     centroids were broadcast, the assignment a groupBy(vec_id) and
     the probe a window."""
     import re
-    import uuid
 
+    from tests.conftest import jobs_run
     from wilayah_aceh_etl_spark.plans.registry import all_specs
 
     fn = all_specs()["similarity_ivf_trained_topk"].fn
     fn(spark, SF).collect()  # trains, or finds the memo
-    sc = spark.sparkContext
-    group = f"ivf_jobs_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        df = fn(spark, SF)
-        assert len(df.collect()) == 50
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    df = fn(spark, SF)
+    rows, jobs = jobs_run(spark, df.collect)
+    assert len(rows) == 50
     qe = df._jdf.queryExecution()
     assert "LogicalRDD" not in qe.optimizedPlan().toString()
     assert not re.search(
         r"Exchange hashpartitioning\(vec_id", qe.executedPlan().toString()
     )
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+    assert jobs <= 5
 
 
 def test_trained_centroid_df_memo_dedupes_cache_entries(spark):

@@ -9,11 +9,11 @@ from __future__ import annotations
 import datetime
 import json
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import jobs_run
 from wilayah_aceh_etl_spark.operators import wilayah as W
 
 CLOCK = datetime.datetime(2026, 1, 1)
@@ -212,19 +212,6 @@ def test_envelope_part_order(spark, corpus, tmp_path, code, parts):
         assert ids == sorted(ids) and len(ids) == r["n_features"]
 
 
-def _jobs(spark, fn):
-    """(result, number of Spark jobs `fn` ran)."""
-    sc = spark.sparkContext
-    group = f"wilayah_table_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_job_counts(spark, corpus, table):
     """Reading the table resolves its files and schema without a
     Spark job; the envelope and a kabupaten sync run only the jobs
@@ -232,11 +219,15 @@ def test_job_counts(spark, corpus, table):
     geo, base = corpus
     W.sync(spark, geo, table, "11", clock=CLOCK)
     n = sum(k.startswith("11.71") for k in base)
-    got, jobs = _jobs(spark, lambda: W.sync(spark, geo, table, "11.71", clock=CLOCK))
+    got, jobs = jobs_run(
+        spark, lambda: W.sync(spark, geo, table, "11.71", clock=CLOCK)
+    )
     assert got == n and jobs <= 8
-    t, jobs = _jobs(spark, lambda: W.load_wilayah(spark, table))
+    t, jobs = jobs_run(spark, lambda: W.load_wilayah(spark, table))
     assert jobs == 0
-    env, jobs = _jobs(spark, lambda: W.geojson_envelope(t, "11.71").collect())
+    env, jobs = jobs_run(
+        spark, lambda: W.geojson_envelope(t, "11.71").collect()
+    )
     assert len(env) == 3 and jobs <= 2
-    assert _jobs(spark, lambda: W.read_table_version(spark, table, 0))[1] == 0
+    assert jobs_run(spark, lambda: W.read_table_version(spark, table, 0))[1] == 0
     assert W.load_wilayah(spark, table).filter(F.col("level") == 4).count() == 3
