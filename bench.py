@@ -26,8 +26,7 @@ warmup run's materialization instead of executing — the warm
 number measures a cache read. Each query is therefore ALSO
 timed cold: before every cold iteration `clear_computed_caches`
 drops the session CacheManager entries and the trained-model float
-memos (metadata memos — schemas and partition probes — stay; they
-cannot hold results), so every cold run pays the full computation
+memos, so every cold run pays the full computation
 from the parquet inputs, training included. `queries` / `value` keep
 the historical warm min-of-3 methodology (comparable with rounds
 1–12); `queries_cold` / `value_cold` are the honest execution

@@ -79,6 +79,27 @@ def jobs_run(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def write_star_table(df, sf_dir, name):
+    """Write `df` as star table `name` under `sf_dir` in its declared
+    schema: each column cast to its declared type, each declared
+    column `df` lacks written as NULLs and any other column dropped.
+    A planted table then carries only what its test reads, and
+    `load_table` still accepts it."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from wilayah_aceh_etl_spark.sources.tables import STAR_SCHEMAS
+
+    df.select(
+        *[
+            (F.col(f.name) if f.name in df.columns else F.lit(None))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in StructType.fromDDL(STAR_SCHEMAS[name]).fields
+        ]
+    ).write.mode("overwrite").parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, write_star_table
 from wilayah_aceh_etl_spark.operators import dedup as D
 from wilayah_aceh_etl_spark.operators import multimodal as M
 from wilayah_aceh_etl_spark.operators import similarity as S
@@ -236,7 +236,7 @@ def test_approx_sketches_within_error_bounds(spark):
     but their error IS checkable: HLL++ at rsd=0.01 must land within
     5% of exact counts, and GK quartiles within the rank tolerance
     (value between the exact neighbors ±2% of rank)."""
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import SF_SMOKE, write_star_table
     from wilayah_aceh_etl_spark.plans.analytics import (
         approx_distinct_lineitem_keys,
         approx_percentile_prices,
@@ -278,7 +278,7 @@ def test_hll_rollup_merge_equals_direct_and_bounds(spark):
     """HLL registers update by max(), so union-of-minute-sketches is
     EXACTLY the sketch of the hour (merge associativity) — and the
     estimate lands within 5% of the exact distinct count."""
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import SF_SMOKE, write_star_table
     from wilayah_aceh_etl_spark.plans.events_queries import events_hll_rollup
     from wilayah_aceh_etl_spark.sources.tables import load_table
 
@@ -1278,10 +1278,12 @@ def test_contrastive_mining_drops_false_negatives(spark, tmp_path):
     rows.append((21, [1.0, 0.001], 1))    # false negative: ~cos 1.0
     rows.append((22, [0.9, 0.3], 1))      # true hard negative
     rows.append((100, [1.0, 0.0], 0))     # the query
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{tmp_path}/embeddings.parquet"
+    write_star_table(
+        spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, label long"
+        ).coalesce(1),
+        str(tmp_path),
+        "embeddings",
     )
     got = embedding_contrastive_mining(spark, str(tmp_path)).collect()
     assert got, "mining must produce hard negatives on this geometry"

@@ -23,8 +23,6 @@ PKG = os.path.join(
 )
 
 EXPECTED = {
-    "tables._SCHEMA_MEMO",
-    "tables._SPREAD_MEMO",
     "similarity._TRAINED_CENTROID_CACHE",
     "similarity._TRAINED_CENTROID_DF_CACHE",
     "ml_train._TRAJECTORY_CACHE",

@@ -1,92 +1,167 @@
-"""Round-12 optimization round: focused tests for operator-internal
-changes (schema memo + spread probe memo in sources/tables.py).
+"""Focused tests for operator-internal plan choices: the declared
+star-table scan and the `spread` small-input guard in
+sources/tables.py, the array-form MinHash pipeline and the map-side
+IVF serve.
 
-Each optimization here is metadata-only; these tests pin the
-invariants that make it safe: identical schemas/rows with and
-without the memo, and memo invalidation when the file changes.
+`load_table` reads each star table under its declared DDL
+(`STAR_SCHEMAS`), so the tests pin that the DDL is what Spark infers
+from the files, that a scan runs no Spark job, and that a file which
+does not carry the declared columns is refused.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.sql.types import StructType, TimestampNTZType
+
+from tests.conftest import SF_CORRECT, SF_SMOKE, jobs_run
 from wilayah_aceh_etl_spark.sources import tables as T
 
 SF = "/root/testdata/sf0.001"
+SCALE_FACTORS = (SF_SMOKE, SF_CORRECT, T.DEFAULT_SF_DIR)
 
 
-def test_schema_memo_returns_identical_schema_and_rows(spark):
-    T._SCHEMA_MEMO.clear()
-    cold = T.load_table(spark, SF, "nation")
-    assert len(T._SCHEMA_MEMO) == 1  # cold path populated the memo
-    warm = T.load_table(spark, SF, "nation")
-    assert warm.schema == cold.schema
-    assert sorted(map(tuple, warm.collect())) == sorted(
-        map(tuple, cold.collect())
-    )
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
 
 
-def _write_parquet_file(spark, dest: str, expr: list[str]) -> None:
-    """Write a REGULAR parquet file at `dest` (not a directory): the
-    memoized path in load_table only engages for regular files — the
-    layout the real sf data uses — so the test must produce one
-    (r12 advice: the earlier directory-based version bypassed the
-    memo entirely and passed trivially)."""
+def test_declared_schemas_equal_inferred_schemas(spark, tmp_path):
+    """Every DDL is the schema Spark infers from the files: all ten
+    tables at three scale factors (sf0.001, sf0.01 and the default
+    sf0.1), and the `documents`/`embeddings`
+    files the benchmark's input generator writes with pyarrow."""
+    from perfbench import inputs
+
+    inputs.write_tables(inputs.make_tables(1), str(tmp_path))
+    paths = [(sf, name) for sf in SCALE_FACTORS for name in T.STAR_TABLES]
+    paths += [(str(tmp_path), name) for name in inputs.SIZES]
+    for sf, name in paths:
+        inferred = spark.read.parquet(os.path.join(sf, f"{name}.parquet"))
+        declared = StructType.fromDDL(T.STAR_SCHEMAS[name])
+        assert declared == inferred.schema, (sf, name)
+        assert T.load_table(spark, sf, name).schema == declared, (sf, name)
+
+
+def test_load_table_runs_no_job_and_repeats_rows(spark):
+    for name in T.STAR_TABLES:
+        _df, jobs = jobs_run(spark, lambda: T.load_table(spark, SF, name))
+        assert jobs == 0, name
+    inferred = spark.read.parquet(os.path.join(SF, "nation.parquet"))
+    first = _rows(T.load_table(spark, SF, "nation"))
+    assert first == _rows(inferred)
+    assert _rows(T.load_table(spark, SF, "nation")) == first
+
+
+def _write_nation(spark, src: str, exprs: list[str]) -> None:
+    """nation.parquet under `src` as ONE regular file, the layout of
+    the testdata tables."""
     import glob
     import shutil
     import tempfile
 
     with tempfile.TemporaryDirectory() as tmp:
-        spark.range(5).selectExpr(*expr).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmp, "out"))
+        spark.range(5).selectExpr(*exprs).coalesce(1).write.parquet(
+            os.path.join(tmp, "out")
+        )
         part = glob.glob(os.path.join(tmp, "out", "part-*.parquet"))[0]
-        shutil.copyfile(part, dest)
+        shutil.copyfile(part, os.path.join(src, "nation.parquet"))
 
 
-def test_schema_memo_invalidates_on_rewrite(spark, tmp_path):
+def test_load_table_serves_a_rewrite_not_a_stale_copy(spark, tmp_path):
     src = str(tmp_path)
-    dest = os.path.join(src, "nation.parquet")
-    _write_parquet_file(spark, dest, ["id AS a"])
-    T._SCHEMA_MEMO.clear()
+    cols = ["CAST(id AS INT) AS n_nationkey", "'n' || id AS n_name"]
+    _write_nation(spark, src, [*cols, "CAST(id AS INT) AS n_regionkey"])
     first = T.load_table(spark, src, "nation")
-    assert first.columns == ["a"]
-    # the regular-file path must actually populate the memo — this is
-    # the warm path the real sf layout exercises
-    assert dest in T._SCHEMA_MEMO
-    assert [f.name for f in T._SCHEMA_MEMO[dest][2].fields] == ["a"]
-    # rewrite with a different schema: the (mtime_ns, size) stamp
-    # must miss, so the new schema is inferred, not served stale —
-    # and the entry is REPLACED, not duplicated (path-keyed memo)
-    _write_parquet_file(spark, dest, ["id AS a", "id * 2 AS b"])
+    assert [r.n_regionkey for r in first.orderBy("n_nationkey").collect()] \
+        == [0, 1, 2, 3, 4]
+    _write_nation(spark, src, [*cols, "CAST(id * 2 AS INT) AS n_regionkey"])
     second = T.load_table(spark, src, "nation")
-    assert second.columns == ["a", "b"]
-    assert [f.name for f in T._SCHEMA_MEMO[dest][2].fields] == ["a", "b"]
-    assert len(T._SCHEMA_MEMO) == 1
+    assert [r.n_regionkey for r in second.orderBy("n_nationkey").collect()] \
+        == [0, 2, 4, 6, 8]
 
 
-def test_events_ts_normalization_survives_schema_memo(spark):
-    """The nanos→micros ts fixup keys on the INFERRED dtype; the memo
-    must hand back the same pre-fixup schema so the fixup still
-    fires on the warm path."""
-    T._SCHEMA_MEMO.clear()
-    cold = T.load_table(spark, SF, "events")
-    warm = T.load_table(spark, SF, "events")
-    assert cold.schema["ts"].dataType == warm.schema["ts"].dataType
-    assert "Timestamp" in str(cold.schema["ts"].dataType)
+@pytest.mark.parametrize(
+    "exprs, named",
+    [
+        # renamed: the undeclared name and the declared one it replaced
+        (["CAST(id AS INT) AS n_nationkey", "'n' || id AS n_name",
+          "CAST(id AS INT) AS n_region"], ["n_regionkey", "n_region"]),
+        # missing: a declared scan would read it as NULLs
+        (["CAST(id AS INT) AS n_nationkey", "'n' || id AS n_name"],
+         ["n_regionkey"]),
+    ],
+)
+def test_load_table_rejects_renamed_or_missing_column(
+    spark, tmp_path, exprs, named
+):
+    _write_nation(spark, str(tmp_path), exprs)
+
+    def load():
+        with pytest.raises(ValueError) as err:
+            T.load_table(spark, str(tmp_path), "nation")
+        return err
+
+    err, jobs = jobs_run(spark, load)
+    assert jobs == 0
+    assert "nation" in str(err.value)
+    for col in named:
+        assert repr(col) in str(err.value)
 
 
-def test_spread_memo_same_decision_as_probe(spark):
-    T._SPREAD_MEMO.clear()
-    df = T.load_table(spark, SF, "nation").select("n_nationkey")
-    cold = T.spread(df, target=4)
-    assert len(T._SPREAD_MEMO) == 1
-    warm = T.spread(T.load_table(spark, SF, "nation").select("n_nationkey"), target=4)
-    # same plan → same memoized count → same repartition decision
-    assert cold.rdd.getNumPartitions() == warm.rdd.getNumPartitions()
-    assert sorted(r[0] for r in warm.collect()) == sorted(
-        r[0] for r in df.collect()
+def test_load_table_reads_a_spark_written_directory(spark, tmp_path):
+    """A table written by Spark as a directory of part files (the
+    layout of `tools/make_sf1.py` output) loads with no job and the
+    source rows."""
+    src = T.load_table(spark, SF, "orders")
+    src.repartition(3).write.parquet(str(tmp_path / "orders.parquet"))
+    df, jobs = jobs_run(
+        spark, lambda: T.load_table(spark, str(tmp_path), "orders")
     )
+    assert jobs == 0
+    assert _rows(df) == _rows(src)
+
+
+def test_events_ts_is_timestamp_and_nanos_ts_raises_on_collect(
+    spark, tmp_path
+):
+    """events.ts is declared TIMESTAMP_NTZ, the microseconds the
+    files store. A file holding TIMESTAMP(NANOS) is not read as
+    anything else: its scan fails when it runs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    assert T.load_table(spark, SF, "events").schema["ts"].dataType \
+        == TimestampNTZType()
+    events = pa.table({
+        "event_id": pa.array([1], pa.int64()),
+        "ts": pa.array([1_700_000_000_000_000_123], pa.timestamp("ns")),
+        "user_id": pa.array([1], pa.int64()),
+        "event_type": ["click"],
+        "value": [1.0],
+        "props": ["{}"],
+    })
+    pq.write_table(events, str(tmp_path / "events.parquet"),
+                   coerce_timestamps=None, version="2.6")
+    df = T.load_table(spark, str(tmp_path), "events")
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        df.collect()
+
+
+def test_spread_repartitions_a_small_scan_to_target(spark):
+    df = T.load_table(spark, SF, "nation").select("n_nationkey")
+    assert df.rdd.getNumPartitions() == 1
+    out = T.spread(df, target=4)
+    assert out.rdd.getNumPartitions() == 4
+    assert _rows(out) == _rows(df)
+
+
+def test_spread_leaves_a_wide_scan_alone(spark):
+    df = T.load_table(spark, SF, "nation").select("n_nationkey")
+    assert T.spread(df, target=1) is df
+    wide = df.repartition(8)
+    assert T.spread(wide, target=4) is wide
 
 
 def test_minhash_array_form_matches_exploded_pipeline(spark):
@@ -188,10 +263,8 @@ def test_minhash_lsh_pairs_job_count(spark):
     """dedup_minhash_lsh_pairs at sf0.01 from an empty cache runs at
     most 11 Spark jobs (statusTracker): one shingle-array cache
     build, one band grouping, no shingle explode in the verify."""
-    from tests.conftest import SF_CORRECT, jobs_run
     from wilayah_aceh_etl_spark.plans.registry import all_specs
 
-    T.load_table(spark, SF_CORRECT, "documents")  # schema outside the count
     spark.catalog.clearCache()
     fn = all_specs()["dedup_minhash_lsh_pairs"].fn
     try:
@@ -211,7 +284,6 @@ def test_ivf_trained_topk_serves_map_side(spark):
     the probe a window."""
     import re
 
-    from tests.conftest import jobs_run
     from wilayah_aceh_etl_spark.plans.registry import all_specs
 
     fn = all_specs()["similarity_ivf_trained_topk"].fn
@@ -253,11 +325,3 @@ def test_trained_centroid_df_memo_dedupes_cache_entries(spark):
     assert rows1 == rows2
     assert after - before <= 1  # one entry for both runs, not one each
     r1._ranked_cache.unpersist()
-
-
-def test_spread_memo_keyed_by_goal(spark):
-    T._SPREAD_MEMO.clear()
-    df = T.load_table(spark, SF, "nation").select("n_nationkey")
-    T.spread(df, target=2)
-    T.spread(df, target=8)
-    assert len(T._SPREAD_MEMO) == 2  # (hash, goal) pairs are distinct

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, write_star_table
 
 
 def test_influence_dedup_audit_nonvacuous(spark):
@@ -180,9 +180,13 @@ def test_isotropy_audit_recovers_planted_direction(spark, tmp_path):
             ((i * 13 + j * 7) % 11 - 5) / 50.0 for j in range(d - 1)
         ]
         rows.append((i, vec, i % 10))
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    write_star_table(
+        spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, label int"
+        ),
+        str(tmp_path),
+        "embeddings",
+    )
     got = embedding_isotropy_audit(spark, str(tmp_path)).collect()[0]
     assert got.n_vectors == n
     # dim-0 variance is 25; the rest contribute ~64*0.003 — the top
@@ -200,9 +204,13 @@ def test_gns_zero_variance_corpus(spark, tmp_path):
 
     vec = [0.3] * 16 + [-0.2] * 48
     rows = [(i, list(vec), 2) for i in range(50)]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    write_star_table(
+        spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, label int"
+        ),
+        str(tmp_path),
+        "embeddings",
+    )
     got = training_gradient_noise_scale(spark, str(tmp_path)).collect()[0]
     assert got.n_examples == 50
     assert abs(got.b_simple) < 0.01, got
@@ -222,11 +230,15 @@ def test_token_savings_attributes_dup_to_later_source(spark, tmp_path):
         (10, "alpha beta gamma", "en", "srcB", 16),  # dup of doc 0
         (11, "zeta eta theta iota", "en", "srcB", 19),
     ]
-    spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string,"
-        " length long",
-    ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
+    write_star_table(
+        spark.createDataFrame(
+            rows,
+            "doc_id long, text string, lang string, source string,"
+            " length long",
+        ),
+        str(tmp_path),
+        "documents",
+    )
     got = {
         r.source: r
         for r in dedup_token_savings_by_source(
@@ -420,9 +432,13 @@ def test_alignment_closed_form_matches_bruteforce(spark, tmp_path):
             [((i * 7 + j * 3) % 9 - 4) / 4.0 for j in range(d)]
         )
     rows = [(i, vecs[i], 3) for i in range(n)]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    write_star_table(
+        spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, label int"
+        ),
+        str(tmp_path),
+        "embeddings",
+    )
     got = embedding_alignment_by_label(spark, str(tmp_path)).collect()
     assert len(got) == 1 and got[0].label == 3
 

@@ -12,11 +12,13 @@ from __future__ import annotations
 
 import datetime as dt
 
+from tests.conftest import write_star_table
+
 
 def _write(spark, tmp_path, name: str, rows, schema: str) -> str:
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{tmp_path}/{name}.parquet")
+    write_star_table(
+        spark.createDataFrame(rows, schema).coalesce(1), str(tmp_path), name
+    )
     return str(tmp_path)
 
 

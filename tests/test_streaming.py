@@ -23,8 +23,9 @@ from wilayah_aceh_etl_spark.streaming import (
 
 @pytest.fixture(scope="module")
 def event_files(spark, tmp_path_factory):
-    """Micros-normalized event files for streaming reads (the raw
-    testdata carries nano timestamps, normalized by load_table)."""
+    """Event files for streaming reads: a directory of part files,
+    which the streaming file source needs (the testdata holds one
+    file per table)."""
     path = str(tmp_path_factory.mktemp("events_stream"))
     load_table(spark, SF_SMOKE, "events").repartition(4).write.mode(
         "overwrite"

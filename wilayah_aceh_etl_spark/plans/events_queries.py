@@ -21,11 +21,11 @@ from wilayah_aceh_etl_spark.plans.registry import register
 from wilayah_aceh_etl_spark.sources.tables import load_table
 
 def _stage_events(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the events table as plain parquet files for streaming
-    reads (the streaming file source cannot apply load_table's nanos
-    normalization). Cached per (sf_dir, source mtime): regenerated
-    testdata invalidates the staged copy instead of being silently
-    shadowed by a stale one."""
+    """Stage the events table as a directory of plain parquet files
+    for streaming reads (the streaming file source reads a directory,
+    and the testdata holds one file per table). Cached per (sf_dir,
+    source mtime): regenerated testdata invalidates the staged copy
+    instead of being silently shadowed by a stale one."""
     import hashlib
     import os
     import tempfile
@@ -572,9 +572,9 @@ def streaming_tumbling_window_counts(
     windowed agg → memory sink, availableNow trigger) and returns its
     result table: the one registry entry whose execution path is
     Structured Streaming end-to-end, held to the same oracle as the
-    batch twin. Events are staged once per (session, sf_dir) with
-    timestamps micros-normalized (streaming file source can't apply
-    the nanos conf rewrite load_table does)."""
+    batch twin. Events are staged once per (sf_dir, source mtime) as a
+    directory of parquet files, the input the streaming file source
+    reads."""
     import uuid
 
     from wilayah_aceh_etl_spark.streaming import (

@@ -72,9 +72,6 @@ _RUNTIME_CONF = {
     # 64 MB broadcast threshold: every dim table in the star schema
     # broadcasts; at 100 TB only the fact tables shuffle.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
-    # default; read as long nanos, normalized to micros in load_table.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # let Python DataSources (sources/geojson_datasource.py) receive
     # pushFilters during planning
     "spark.sql.python.filterPushdown.enabled": "true",
