@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -77,6 +78,26 @@ def jobs_run(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
+def split_layout(spark):
+    """Staged table writes inside this block split into up to 8 range
+    files, as a table that outgrew one file per range does: AQE
+    partition coalescing is off and the shuffle width is fixed at 8,
+    whatever the core count. Both settings are restored on exit."""
+    conf = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "8",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def write_star_table(df, sf_dir, name):

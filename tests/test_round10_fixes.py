@@ -109,10 +109,14 @@ def test_best_of_n_excludes_short_prompts(spark, tmp_path):
     """A prompt with fewer than N=12 samples must be EXCLUDED, not
     silently deflated by the fixed C(12, n) denominator (r9 ADVICE).
     Planted: prompt 0 has 12 events, prompt 1 has 7."""
+    import datetime
+
+    from tests.conftest import write_star_table
     from wilayah_aceh_etl_spark.plans.round9_queries import (
         model_eval_best_of_n,
     )
 
+    t0 = datetime.datetime(2020, 9, 13, 12, 26, 40)
     rows = []
     eid = 0
     for pid, cnt in ((0, 12), (1, 7)):
@@ -120,7 +124,7 @@ def test_best_of_n_excludes_short_prompts(spark, tmp_path):
             rows.append(
                 (
                     eid,
-                    1_600_000_000_000_000 + eid,
+                    t0 + datetime.timedelta(microseconds=eid),
                     pid,
                     "reward",
                     float(j) / 10.0,
@@ -128,11 +132,15 @@ def test_best_of_n_excludes_short_prompts(spark, tmp_path):
                 )
             )
             eid += 1
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts long, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
+    write_star_table(
+        spark.createDataFrame(
+            rows,
+            "event_id long, ts timestamp_ntz, user_id long,"
+            " event_type string, value double, props string",
+        ),
+        str(tmp_path),
+        "events",
+    )
 
     got = model_eval_best_of_n(spark, str(tmp_path)).collect()
     prompts = {r["prompt_id"] for r in got}

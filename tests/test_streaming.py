@@ -8,7 +8,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, split_layout
 from wilayah_aceh_etl_spark.sources.tables import load_table
 from wilayah_aceh_etl_spark.streaming import (
     click_purchase_attribution,
@@ -485,7 +485,8 @@ def test_merge_last_wins_is_file_scoped(spark, tmp_path):
         F.lit(0).alias("ver"),
         (F.col("id") * 2).alias("v"),
     )
-    merge_last_wins(spark, path, base, ["k"], ["ver"])
+    with split_layout(spark):
+        merge_last_wins(spark, path, base, ["k"], ["ver"])
 
     def stats():
         return {
@@ -597,7 +598,8 @@ def test_merge_crashed_swap_is_recoverable(spark, tmp_path):
         F.lit(0).cast("long").alias("ver"),
         (F.col("id") * 2).alias("v"),
     )
-    S.merge_last_wins(spark, path, base, ["k"], ["ver"])
+    with split_layout(spark):
+        S.merge_last_wins(spark, path, base, ["k"], ["ver"])
 
     # crash DURING the swap: monkeypatch-free fault injection — run
     # the merge but blow up on the staged-files rename loop by
@@ -892,7 +894,8 @@ def test_crashed_compaction_rolls_back_staged_files(spark, tmp_path):
         F.lit(0).cast("long").alias("ver"),
         (F.col("id") * 3).alias("v"),
     )
-    S.merge_last_wins(spark, path, base, ["k"], ["ver"])
+    with split_layout(spark):
+        S.merge_last_wins(spark, path, base, ["k"], ["ver"])
     files = sorted(
         f for f in os.listdir(path) if f.endswith(".parquet")
     )
@@ -1114,7 +1117,8 @@ def test_merge_racing_compaction_never_duplicates(spark, tmp_path, monkeypatch):
         F.lit(0).cast("long").alias("ver"),
         F.lit(1).cast("long").alias("v"),
     )
-    S.merge_last_wins(spark, path, base, ["k"], ["ver"])
+    with split_layout(spark):
+        S.merge_last_wins(spark, path, base, ["k"], ["ver"])
     n_files = len([f for f in os.listdir(path) if f.endswith(".parquet")])
     assert n_files >= 4  # range layout split the table
 

@@ -12,6 +12,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import split_layout
 from wilayah_aceh_etl_spark.functions.geometry import (
     bounds_agg,
     normalize_geojson_str,
@@ -324,7 +325,8 @@ def test_upsert_file_scoped_rewrite(spark, tmp_path):
     byte-identical (Delta add-file pruning, sourced from Parquet
     footers)."""
     path = str(tmp_path / "file_scoped")
-    W.sync(spark, GEOJSON_DIR, path, code="11", clock=CLOCK)
+    with split_layout(spark):
+        W.sync(spark, GEOJSON_DIR, path, code="11", clock=CLOCK)
     before = _partition_file_stats(path)
     n_l4_files = len(before["level=4"])
     assert n_l4_files >= 2, "range layout should split level 4"
@@ -395,7 +397,8 @@ def test_compact_table_bin_packs_small_files(spark, tmp_path):
     merges exactly the small ones (content-invariant, kode-sorted),
     leaves at-size files alone, and a second run is a no-op."""
     path = str(tmp_path / "compact")
-    W.sync(spark, GEOJSON_DIR, path, code="11", clock=CLOCK)
+    with split_layout(spark):
+        W.sync(spark, GEOJSON_DIR, path, code="11", clock=CLOCK)
     keys = [
         r[0]
         for r in W.load_wilayah(spark, path)
@@ -470,7 +473,8 @@ def test_delete_keys_file_scoped(spark, tmp_path):
     only the files whose footer range contains them; the rest of the
     table — including sibling level-4 files — keeps its inodes."""
     path = str(tmp_path / "erasure")
-    W.sync(spark, GEOJSON_DIR, path, code="11", clock=CLOCK)
+    with split_layout(spark):
+        W.sync(spark, GEOJSON_DIR, path, code="11", clock=CLOCK)
     before = _partition_file_stats(path)
 
     victims = (

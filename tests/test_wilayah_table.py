@@ -9,11 +9,12 @@ from __future__ import annotations
 import datetime
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import jobs_run
+from tests.conftest import jobs_run, split_layout
 from wilayah_aceh_etl_spark.operators import wilayah as W
 
 CLOCK = datetime.datetime(2026, 1, 1)
@@ -210,6 +211,62 @@ def test_envelope_part_order(spark, corpus, tmp_path, code, parts):
         fc = json.loads(r["feature_collection"])
         ids = [f["properties"]["id"] for f in fc["features"]]
         assert ids == sorted(ids) and len(ids) == r["n_features"]
+
+
+def _data_files(table: str) -> dict[str, tuple[int, int, int]]:
+    """{level=N/file: (inode, mtime_ns, size)} for every live data file."""
+    out = {}
+    for d in sorted(os.listdir(table)):
+        if not d.startswith("level="):
+            continue
+        for f in os.listdir(os.path.join(table, d)):
+            if f.endswith(".parquet"):
+                st = os.stat(os.path.join(table, d, f))
+                out[f"{d}/{f}"] = (st.st_ino, st.st_mtime_ns, st.st_size)
+    return out
+
+
+def _files_per_level(table: str) -> Counter:
+    return Counter(rel.split("/", 1)[0] for rel in _data_files(table))
+
+
+def test_small_table_writes_one_file_per_level(spark, corpus, table):
+    """Staged writes are sized by bytes, not split into a fixed number
+    of ranges: the seed sync and a kabupaten re-sync each leave one
+    data file per level, so compaction finds nothing to do and runs no
+    Spark job."""
+    geo, base = corpus
+    one_each = {"level=1": 1, "level=2": 1, "level=3": 1, "level=4": 1}
+    W.sync(spark, geo, table, "11", clock=CLOCK)
+    assert _files_per_level(table) == one_each
+    later = CLOCK + datetime.timedelta(days=1)
+    n = sum(k.startswith("11.71") for k in base)
+    assert W.sync(spark, geo, table, "11.71", clock=later) == n
+    assert _files_per_level(table) == one_each
+    assert jobs_run(spark, lambda: W.compact_table(spark, table)) == ({}, 0)
+    assert set(_rows(W.load_wilayah(spark, table))) == set(base)
+
+
+def test_upsert_on_split_layout_keeps_sibling_files(spark, corpus, table):
+    """On a table whose levels hold several kode-ranged files, a
+    one-kecamatan upsert rewrites only the file whose range holds the
+    key, as one file: every other file keeps its inode, mtime and
+    size."""
+    geo, base = corpus
+    with split_layout(spark):
+        W.sync(spark, geo, table, "11", clock=CLOCK)
+    before = _data_files(table)
+    assert _files_per_level(table)["level=3"] >= 2
+    later = CLOCK + datetime.timedelta(days=1)
+    row = ("11.71.20", "Kec Lain", 3, json.dumps(_square(99, 9)), later, later)
+    assert W.upsert(spark, table, _batch(spark, [row]), clock=later) == 1
+    after = _data_files(table)
+    rewritten = [f for f in before if after.get(f) != before[f]]
+    assert len(rewritten) == 1 and rewritten[0].startswith("level=3/")
+    assert len(after) == len(before)
+    got = _rows(W.load_wilayah(spark, table))
+    assert set(got) == set(base)
+    assert got["11.71.20"] == ("Kec Lain", 3, CLOCK, later)
 
 
 def test_job_counts(spark, corpus, table):

@@ -161,7 +161,8 @@ def upsert(
       2. union the batch with ONLY the affected files, re-window
          last-wins (the same window carries the key's earliest
          existing created_at), and write replacement files
-         range-partitioned on (level, kode) so future merges prune
+         range-partitioned on (level, kode), sized by AQE's
+         post-shuffle partition size, so future merges prune
          tightly;
       3. swap at FILE granularity: retire the affected files, move
          the staged files in. Every other file in the table — even
@@ -218,21 +219,17 @@ def upsert(
         batch.unpersist()
 
 
-# Staged-write fan-out. At test scale this simply yields a handful of
-# kode-ranged files per level; at 100 TB size it as
-# ceil(merged_bytes / target_file_bytes) (e.g. 512 MB targets).
-UPSERT_RANGE_PARTITIONS = 8
-
-
 def _write_staged(out: DataFrame, tmp: str) -> None:
-    """The merge/delete write-stage layout: partition pruning on
+    """The merge/delete/seed write-stage layout: partition pruning on
     level; disjoint kode ranges per file + kode-sorted row groups, so
     both min/max pruning on prefix predicates AND the next merge's
-    file scoping stay tight."""
+    file scoping stay tight. The range exchange takes no count: it
+    starts at spark.sql.shuffle.partitions and AQE coalesces adjacent
+    ranges to its post-shuffle partition size, so files follow bytes
+    (one file per level for the 388-row Aceh table) and each merged
+    file still holds one disjoint kode range."""
     (
-        out.repartitionByRange(
-            UPSERT_RANGE_PARTITIONS, F.col("level"), F.col(_KODE)
-        )
+        out.repartitionByRange(F.col("level"), F.col(_KODE))
         .sortWithinPartitions("level", _KODE)
         .write.mode("overwrite")
         .partitionBy("level")

@@ -11,9 +11,12 @@ a replayed batch produces the same winners.
 Scale: like the wilayah MERGE, the generic merge is FILE-SCOPED —
 the table is kept range-sorted on the merge key, each batch reads
 only the files whose footer key-range intersects its keys, and only
-those files are replaced. A micro-batch therefore costs
-O(files-containing-its-keys), not O(table) — the property that makes
-a continuous upsert stream sustainable at 100 TB. (With a
+those files are replaced. The staged winners are range-partitioned
+with no fixed count: AQE coalesces adjacent ranges to its
+post-shuffle partition size, so file size follows bytes. A
+micro-batch therefore costs O(files-containing-its-keys), not
+O(table) — the property that makes a continuous upsert stream
+sustainable at 100 TB. (With a
 Delta/Iceberg table this whole module collapses to MERGE INTO — this
 is the storage-format-free equivalent.)
 
@@ -36,9 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wilayah_aceh_etl_spark.session import local_frame
-
-# staged-write fan-out; at scale size as merged_bytes / target_file_bytes
-MERGE_RANGE_PARTITIONS = 8
 
 # underscore prefix hides retired files from plain spark.read.parquet
 _RETIRED_DIR = "_retired"
@@ -315,7 +315,7 @@ def merge_last_wins(
                 .drop("_rn", "_prio")
             )
             (
-                winners.repartitionByRange(MERGE_RANGE_PARTITIONS, *keys)
+                winners.repartitionByRange(*keys)
                 .sortWithinPartitions(*keys)
                 .write.mode("overwrite")
                 .parquet(tmp)
