@@ -7,10 +7,10 @@ lists them by an AST scan of module-level assignments named
 changing with it.
 
 Driver-held rows: `session.local_frame` is the one constructor for a
-DataFrame over Python values in the engine's operator, source and
-streaming layers. `createDataFrame(<list>)` makes a LogicalRDD over a
-PythonRDD, which starts Python workers when read and never compares
-equal in a plan; the second test keeps it out of those layers."""
+DataFrame over Python values in the engine's operator, plan, source
+and streaming layers. `createDataFrame(<list>)` makes a LogicalRDD
+over a PythonRDD, which starts Python workers when read and never
+compares equal in a plan; the second test keeps it out of those layers."""
 
 from __future__ import annotations
 
@@ -22,11 +22,7 @@ PKG = os.path.join(
     "wilayah_aceh_etl_spark",
 )
 
-EXPECTED = {
-    "similarity._TRAINED_CENTROID_CACHE",
-    "similarity._TRAINED_CENTROID_DF_CACHE",
-    "ml_train._TRAJECTORY_CACHE",
-}
+EXPECTED = {"cachectl._MODEL_MEMO"}
 
 
 def _modules(top: str = PKG):
@@ -67,7 +63,7 @@ def test_module_level_memos_are_exactly_the_listed_ones():
 def test_driver_rows_go_through_local_frame():
     calls = [
         f"{os.path.relpath(path, PKG)}:{node.lineno}"
-        for layer in ("operators", "sources", "streaming")
+        for layer in ("operators", "plans", "sources", "streaming")
         for path, tree in _modules(os.path.join(PKG, layer))
         for node in ast.walk(tree)
         if isinstance(node, ast.Call)

@@ -300,16 +300,18 @@ def test_ivf_trained_topk_serves_map_side(spark):
 
 
 def test_trained_centroid_df_memo_dedupes_cache_entries(spark):
-    """r12: kmeans_centroids_cached returns the SAME DataFrame per
-    (key, session), so repeated semantic_dedup calls canonicalize to
-    one plan and CacheManager holds ONE ranked-relation entry instead
-    of leaking (and re-materializing) one per call."""
+    """r12: kmeans_centroids_cached builds its centroid LocalRelation
+    from the memo's floats on every call, and two such relations are
+    the same plan to Spark, so repeated semantic_dedup calls
+    canonicalize to one plan and CacheManager holds ONE
+    ranked-relation entry instead of leaking (and re-materializing)
+    one per call."""
     import wilayah_aceh_etl_spark.operators.similarity as S
 
     emb = T.load_table(spark, SF, "embeddings")
     c1 = S.kmeans_centroids_cached(emb, SF + "#memo-test", 8, 1)
     c2 = S.kmeans_centroids_cached(emb, SF + "#memo-test", 8, 1)
-    assert c1 is c2
+    assert c1.sameSemantics(c2)
     before = len(spark._jsc.sc().getRDDStorageInfo())
     r1 = S.semantic_dedup(
         emb, threshold=0.35, n_centroids=8, n_iter=1,

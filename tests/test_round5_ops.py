@@ -619,7 +619,7 @@ def test_bpe_trainer_learns_known_merges(spark, tmp_path):
 def test_trained_centroid_cache_invalidates_on_corpus_change(
     spark, tmp_path
 ):
-    """r6 advice: _TRAINED_CENTROID_CACHE keyed only on cache_key
+    """r6 advice: a centroid memo keyed only on cache_key
     would silently serve a stale quantizer if the files behind that
     key changed within one driver process. The fix folds a
     file-metadata fingerprint (uri, size, mtime_ns) into the memo
@@ -629,6 +629,7 @@ def test_trained_centroid_cache_invalidates_on_corpus_change(
     fingerprint's entry is EVICTED (a per-micro-batch trainer over a
     mutating table holds one entry per corpus identity, not one per
     historical file set)."""
+    from wilayah_aceh_etl_spark import cachectl as C
     from wilayah_aceh_etl_spark.operators import similarity as S
 
     def write(vals):
@@ -651,7 +652,7 @@ def test_trained_centroid_cache_invalidates_on_corpus_change(
             corpus1, key, n_centroids=2, n_iter=2
         ).collect()
     )
-    n_entries = len(S._TRAINED_CENTROID_CACHE)
+    n_entries = len(C._MODEL_MEMO)
 
     # warm path, unchanged corpus: memo hit, no new entry
     again = sorted(
@@ -660,7 +661,7 @@ def test_trained_centroid_cache_invalidates_on_corpus_change(
         ).collect()
     )
     assert again == first
-    assert len(S._TRAINED_CENTROID_CACHE) == n_entries
+    assert len(C._MODEL_MEMO) == n_entries
 
     # overwrite the SAME path with different data, same cache_key
     corpus2 = write([7, 8, 9, -50, -51, -52])
@@ -670,7 +671,7 @@ def test_trained_centroid_cache_invalidates_on_corpus_change(
         ).collect()
     )
     # replaced, not accumulated: stale fingerprint evicted on insert
-    assert len(S._TRAINED_CENTROID_CACHE) == n_entries
+    assert len(C._MODEL_MEMO) == n_entries
     assert second != first
     # and the retrained values match an uncached fresh training
     fresh = sorted(
@@ -689,6 +690,7 @@ def test_trained_centroid_cache_bypassed_for_non_file_corpora(spark):
     independently (pre-fix they collided on the degraded empty-list
     fingerprint, and semantic_dedup would drop rows based on another
     corpus's centroids), and nothing is inserted into the memo."""
+    from wilayah_aceh_etl_spark import cachectl as C
     from wilayah_aceh_etl_spark.operators import similarity as S
 
     def mem_corpus(vals):
@@ -700,7 +702,7 @@ def test_trained_centroid_cache_bypassed_for_non_file_corpora(spark):
             rows, "vec_id long, embedding array<double>"
         )
 
-    n_entries = len(S._TRAINED_CENTROID_CACHE)
+    n_entries = len(C._MODEL_MEMO)
     a = sorted(
         tuple(r) for r in S.kmeans_centroids_cached(
             mem_corpus([1, 2, 3, 100, 101, 102]), "memkey",
@@ -714,7 +716,7 @@ def test_trained_centroid_cache_bypassed_for_non_file_corpora(spark):
         ).collect()
     )
     assert a != b  # second corpus trained fresh, not served from memo
-    assert len(S._TRAINED_CENTROID_CACHE) == n_entries  # nothing memoized
+    assert len(C._MODEL_MEMO) == n_entries  # nothing memoized
     # each matches its own uncached training
     fresh_b = sorted(
         tuple(r) for r in S.kmeans_centroids(
@@ -739,6 +741,7 @@ def test_trained_centroid_cache_distinguishes_logical_corpora(
     (expr-id stripping works)."""
     from pyspark.sql import functions as F
 
+    from wilayah_aceh_etl_spark import cachectl as C
     from wilayah_aceh_etl_spark.operators import similarity as S
 
     rows = [
@@ -763,7 +766,7 @@ def test_trained_centroid_cache_distinguishes_logical_corpora(
             lo, key, n_centroids=2, n_iter=2
         ).collect()
     )
-    n_after_a = len(S._TRAINED_CENTROID_CACHE)
+    n_after_a = len(C._MODEL_MEMO)
     b = sorted(
         tuple(r)
         for r in S.kmeans_centroids_cached(
@@ -772,7 +775,7 @@ def test_trained_centroid_cache_distinguishes_logical_corpora(
     )
     assert a != b  # different logical corpora, same files, same key
     # both entries coexist — distinct plans don't evict each other
-    assert len(S._TRAINED_CENTROID_CACHE) == n_after_a + 1
+    assert len(C._MODEL_MEMO) == n_after_a + 1
     # each matches its own uncached training
     fresh_b = sorted(
         tuple(r)
@@ -784,7 +787,7 @@ def test_trained_centroid_cache_distinguishes_logical_corpora(
     )
     assert b == fresh_b
     # same logical corpus, rebuilt from a fresh scan: memo hit
-    n_entries = len(S._TRAINED_CENTROID_CACHE)
+    n_entries = len(C._MODEL_MEMO)
     a2 = sorted(
         tuple(r)
         for r in S.kmeans_centroids_cached(
@@ -792,7 +795,7 @@ def test_trained_centroid_cache_distinguishes_logical_corpora(
         ).collect()
     )
     assert a2 == a
-    assert len(S._TRAINED_CENTROID_CACHE) == n_entries  # no new entry
+    assert len(C._MODEL_MEMO) == n_entries  # no new entry
 
 
 def test_trained_centroid_cache_bypassed_without_plan_digest(
@@ -803,6 +806,7 @@ def test_trained_centroid_cache_bypassed_without_plan_digest(
     shared '' digest, or two filters over the same files would
     silently share centroids there (the exact aliasing the digest
     exists to prevent)."""
+    from wilayah_aceh_etl_spark import cachectl as C
     from wilayah_aceh_etl_spark.operators import similarity as S
 
     rows = [
@@ -815,15 +819,15 @@ def test_trained_centroid_cache_bypassed_without_plan_digest(
         f"{tmp_path}/emb.parquet"
     )
     corpus = spark.read.parquet(f"{tmp_path}/emb.parquet")
-    monkeypatch.setattr(S, "_plan_digest", lambda df: None)
-    n_entries = len(S._TRAINED_CENTROID_CACHE)
+    monkeypatch.setattr(C, "_plan_digest", lambda df: None)
+    n_entries = len(C._MODEL_MEMO)
     got = sorted(
         tuple(r)
         for r in S.kmeans_centroids_cached(
             corpus, str(tmp_path), n_centroids=2, n_iter=2
         ).collect()
     )
-    assert len(S._TRAINED_CENTROID_CACHE) == n_entries  # nothing memoized
+    assert len(C._MODEL_MEMO) == n_entries  # nothing memoized
     fresh = sorted(
         tuple(r)
         for r in S.kmeans_centroids(corpus, n_centroids=2, n_iter=2).collect()
@@ -839,7 +843,7 @@ def test_plan_digest_distinguishes_self_join_sides(spark, tmp_path):
     from a fresh scan must still digest identically."""
     from pyspark.sql import functions as F
 
-    from wilayah_aceh_etl_spark.operators import similarity as S
+    from wilayah_aceh_etl_spark import cachectl as C
 
     rows = [(i, [float(i), 1.0]) for i in range(6)]
     spark.createDataFrame(
@@ -859,12 +863,12 @@ def test_plan_digest_distinguishes_self_join_sides(spark, tmp_path):
             F.col(f"{side}.embedding").alias("embedding"),
         )
 
-    da, db = S._plan_digest(sided("a")), S._plan_digest(sided("b"))
+    da, db = C._plan_digest(sided("a")), C._plan_digest(sided("b"))
     if da is None:  # Spark Connect: no plan surface, bypass covers it
         return
     assert da != db
     # stability: rebuilt-from-fresh-scan plans digest identically
-    assert S._plan_digest(sided("a")) == da
+    assert C._plan_digest(sided("a")) == da
 
 
 def test_plan_digest_sees_past_tostring_truncation(spark):
@@ -874,10 +878,10 @@ def test_plan_digest_sees_past_tostring_truncation(spark):
     identically, recreating the memo-aliasing the digest exists to
     prevent (r8 advice, medium). The digest must render untruncated:
     40-column plans differing only in column 39 digest apart, and the
-    conf is restored afterwards."""
+    digest leaves the session conf unchanged."""
     from pyspark.sql import functions as F
 
-    from wilayah_aceh_etl_spark.operators import similarity as S
+    from wilayah_aceh_etl_spark import cachectl as C
 
     key = "spark.sql.debug.maxToStringFields"
     before = spark.conf.get(key, None)
@@ -890,11 +894,11 @@ def test_plan_digest_sees_past_tostring_truncation(spark):
         *[(F.col("id") + i).alias(f"c{i}") for i in range(39)],
         (F.col("id") + 200).alias("c39"),
     )
-    da, db = S._plan_digest(wide_a), S._plan_digest(wide_b)
+    da, db = C._plan_digest(wide_a), C._plan_digest(wide_b)
     if da is None:  # Spark Connect: bypass covers it
         return
     assert da != db, "digest blind past the toString truncation point"
-    assert spark.conf.get(key, None) == before, "conf not restored"
+    assert spark.conf.get(key, None) == before, "conf changed"
 
 
 def test_kmeans_seeds_by_rank_on_offset_ids(spark):

@@ -682,6 +682,7 @@ def test_trajectory_memo_bit_identity(spark):
     corpus over the same files (extra filter) trains its own entry
     rather than aliasing (the kmeans_centroids_cached contract)."""
     from tests.conftest import SF_SMOKE
+    from wilayah_aceh_etl_spark import cachectl as C
     from wilayah_aceh_etl_spark.operators import ml_train as M
     from wilayah_aceh_etl_spark.sources.tables import load_table
 
@@ -690,16 +691,16 @@ def test_trajectory_memo_bit_identity(spark):
         "embedding",
         F.when(F.col("label") < 5, 1).otherwise(0).alias("y"),
     )
-    M._TRAJECTORY_CACHE.clear()
+    C._MODEL_MEMO.clear()
     cold = M.logreg_fit_trajectory_cached(
         emb, cache_key="t", n_iter=3, lr=2.0
     )
-    assert len(M._TRAJECTORY_CACHE) == 1
+    assert len(C._MODEL_MEMO) == 1
     warm = M.logreg_fit_trajectory_cached(
         emb, cache_key="t", n_iter=3, lr=2.0
     )
     assert warm == cold
-    assert len(M._TRAJECTORY_CACHE) == 1
+    assert len(C._MODEL_MEMO) == 1
     plain = M.logreg_fit_trajectory(emb, n_iter=3, lr=2.0)
     assert plain == cold
     # a filtered corpus over the same files must NOT alias
@@ -707,9 +708,9 @@ def test_trajectory_memo_bit_identity(spark):
     other = M.logreg_fit_trajectory_cached(
         sub, cache_key="t", n_iter=3, lr=2.0
     )
-    assert len(M._TRAJECTORY_CACHE) == 2
+    assert len(C._MODEL_MEMO) == 2
     assert other != cold
-    M._TRAJECTORY_CACHE.clear()
+    C._MODEL_MEMO.clear()
 
 
 def test_mutual_information_control_and_ordering(spark):

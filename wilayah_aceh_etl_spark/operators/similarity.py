@@ -21,6 +21,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wilayah_aceh_etl_spark.cachectl import trained
 from wilayah_aceh_etl_spark.functions.vectors import (
     as_double,
     dot,
@@ -542,114 +543,6 @@ def ivf_kmeans_topk(
     return _ivf_search(c, cs, _prep(queries, id_col, vec_col), k, n_probe)
 
 
-# Trained coarse quantizers are BUILD artifacts: a real IVF system
-# trains the quantizer once when the index is built and serves every
-# query against it — training cost is amortized over the index
-# lifetime, exactly like ANN-benchmark practice (index build is
-# reported separately from search latency). This memo keys on
-# (cache_key, C, iters) so repeated reads of the same corpus pay
-# training once; the driver-side payload is C×d floats (16×64 ≈ 8 KB
-# at the defaults), the same O(C·d) state kmeans_centroids already
-# keeps on the driver between Lloyd iterations.
-_TRAINED_CENTROID_CACHE: dict[tuple, list[tuple[int, list[float]]]] = {}
-
-# The centroid DataFrames per (key, session) — the (cid, cvec)
-# relation and its one-row `_cs` fold — built once from the floats,
-# so every caller gets the SAME objects and serves rebuild nothing.
-# Values hold (session, frames); the session is identity-checked on
-# lookup so a restarted driver never receives a DataFrame bound to a
-# dead session.
-_TRAINED_CENTROID_DF_CACHE: dict[tuple, tuple] = {}
-
-
-def _corpus_fingerprint(df: DataFrame) -> str | None:
-    """Best-effort data fingerprint for the trained-centroid memo:
-    the (uri, size, mtime_ns) of every file backing the scan, hashed.
-    Pure driver-side file metadata — no Spark job, no data read — so
-    the warm path stays free. If the corpus files change under the
-    same cache_key, the fingerprint changes and the quantizer
-    retrains instead of silently serving a stale index.
-
-    Returns None when the corpus is NOT file-backed (createDataFrame,
-    in-memory views — inputFiles() empty or unavailable): such a
-    corpus has no observable identity, so the caller must BYPASS the
-    memo and train fresh rather than risk serving another corpus's
-    centroids — the failure mode matters because semantic_dedup
-    DROPS rows based on these centroids."""
-    import hashlib
-    import os
-
-    sig: list[tuple] = []
-    try:
-        for uri in sorted(df.inputFiles()):
-            path = uri[5:] if uri.startswith("file:") else uri
-            try:
-                st = os.stat(path)
-                sig.append((uri, st.st_size, st.st_mtime_ns))
-            except OSError:
-                sig.append((uri, -1, -1))
-    except Exception:
-        return None
-    if not sig:
-        return None
-    return hashlib.md5(repr(sig).encode()).hexdigest()
-
-
-def _plan_digest(df: DataFrame) -> str | None:
-    """Best-effort digest of the DataFrame's ANALYZED logical plan,
-    with per-session expression ids (`#123`) CANONICALIZED — each
-    distinct id replaced by its order of first appearance — so the
-    same logical corpus rebuilt from a fresh load hashes identically
-    (plan construction assigns fresh ids in the same deterministic
-    order). Canonicalizing rather than erasing matters: two corpora
-    that differ only in WHICH side of a self-join a column comes
-    from differ only in their id cross-references, which erasure
-    would collapse into one digest.
-
-    Why it exists (r7 advice): _corpus_fingerprint keys on backing
-    FILES only, so two logically different corpora derived from the
-    same files (different filters/projections) would otherwise share
-    a memo entry — dangerous, since semantic_dedup DROPS rows based
-    on the cached centroids. Folding the plan shape into the key
-    closes that aliasing.
-
-    Returns None under Spark Connect (no _jdf surface); the caller
-    must then BYPASS the memo (train fresh), the same conservative
-    rule as a missing file fingerprint — a docstring contract is not
-    enough when a collision drops the wrong rows.
-
-    Truncation guard (r8 advice): the default plan rendering elides
-    attribute lists past spark.sql.debug.maxToStringFields (25) with
-    '... N more fields', so two corpora whose plans differ only in
-    the elided tail would digest identically — recreating the exact
-    aliasing this digest exists to prevent. The conf is raised to
-    2^30 around the render (and restored in a finally), so the
-    digest always sees the full attribute lists."""
-    import hashlib
-    import re
-
-    _MAXF = "spark.sql.debug.maxToStringFields"
-    try:
-        conf = df.sparkSession.conf
-        prev = conf.get(_MAXF, None)
-        conf.set(_MAXF, str(1 << 30))
-        try:
-            plan = df._jdf.queryExecution().analyzed().toString()
-        finally:
-            if prev is None:
-                conf.unset(_MAXF)
-            else:
-                conf.set(_MAXF, prev)
-    except Exception:
-        return None
-    seen: dict[str, str] = {}
-
-    def canon(m: "re.Match[str]") -> str:
-        return seen.setdefault(m.group(0), f"#e{len(seen)}")
-
-    return hashlib.md5(re.sub(r"#\d+", canon, plan).encode()).hexdigest()
-
-
 def kmeans_centroids_cached(
     corpus: DataFrame,
     cache_key: str,
@@ -658,29 +551,14 @@ def kmeans_centroids_cached(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """kmeans_centroids with per-(corpus, config) memoization of the
-    driver-side centroid values. First call trains (n_iter Lloyd
-    passes over the corpus); later calls in the same session return
-    the same (cid, cvec) LocalRelation. Determinism is unaffected: the
-    cached values ARE the quantized-mean training output, so a cold
-    and a warm call return bit-identical centroids.
-
-    Staleness contract (r6 advice): the memo key includes a
-    file-metadata fingerprint of the corpus scan
-    (_corpus_fingerprint), so mutating the files behind the same
-    cache_key retrains rather than serving centroids trained on the
-    old data. The fingerprint is driver-side os.stat only — the warm
-    path still runs zero Spark jobs.
-
-    Aliasing contract (r7 advice): the key ALSO folds in a digest of
-    the corpus's analyzed logical plan (_plan_digest), so two
-    logically different corpora over the same files (different
-    filters/projections) never share centroids. Under Spark Connect
-    the plan digest is unavailable (None) and the memo is BYPASSED —
-    training runs fresh, the same conservative rule as a missing
-    file fingerprint, because a silent collision drops the wrong
-    rows downstream (Connect callers wanting the memo can collect
-    centroids once and rebuild the tiny relation themselves)."""
+    """kmeans_centroids, trained once per corpus and config through
+    `cachectl.trained`, whose key rule decides when the centroids may
+    be reused. A trained quantizer is an index-build artifact: a real
+    IVF system trains it once and serves every query against it, and
+    ANN benchmarks report index build apart from search latency. The
+    memo holds C×d floats (16×64 at the defaults), the same state
+    kmeans_centroids keeps on the driver between Lloyd passes. A warm
+    call runs no Spark job and returns bit-identical centroids."""
     return _trained_frames(
         corpus, cache_key, n_centroids, n_iter, id_col, vec_col
     )[0]
@@ -695,57 +573,21 @@ def _trained_frames(
     vec_col: str,
 ) -> tuple[DataFrame, DataFrame]:
     """kmeans_centroids_cached's (cid, cvec) relation and its one-row
-    `_cs` relation, both LocalRelations built once per (memo key,
-    session) from the memo's floats: a warm serve runs no job to
-    build or broadcast its centroids."""
-    cfg = (cache_key, n_centroids, n_iter, id_col, vec_col)
-    fp = _corpus_fingerprint(corpus)
-    pd_ = _plan_digest(corpus)
+    `_cs` relation, both LocalRelations over the memo's floats: a
+    warm serve runs no job to build or broadcast its centroids, and
+    two builds over the same floats are the same plan to Spark's
+    CacheManager."""
     v = _prep(corpus, id_col, vec_col)
+    cents = trained(
+        corpus,
+        ("kmeans_centroids", cache_key, n_centroids, n_iter, id_col, vec_col),
+        lambda: _lloyd(v, n_centroids, n_iter),
+    )
     sess = corpus.sparkSession
-
-    def frames(cents):
-        return (
-            local_frame(sess, cents, _CENTROID_SCHEMA),
-            _local_centroid_row(sess, cents),
-        )
-
-    if fp is None or pd_ is None:
-        # no observable corpus identity (in-memory source, or no JVM
-        # plan surface under Connect): train fresh rather than risk
-        # serving another corpus's centroids
-        return frames(_lloyd(v, n_centroids, n_iter))
-    key = (*cfg, fp, pd_)
-    if key not in _TRAINED_CENTROID_CACHE:
-        cents = _lloyd(v, n_centroids, n_iter)
-        # evict superseded FILE fingerprints of the same (config,
-        # plan) so a long-lived driver training per micro-batch over
-        # a mutating table holds ONE entry per logical corpus, not
-        # one per historical file set — but distinct logical corpora
-        # (different plan digests) under the same cache_key keep
-        # their own entries rather than thrashing each other
-        for stale in [
-            k
-            for k in _TRAINED_CENTROID_CACHE
-            if k[:5] == cfg and k[6] == key[6]
-        ]:
-            del _TRAINED_CENTROID_CACHE[stale]
-            _TRAINED_CENTROID_DF_CACHE.pop(stale, None)
-        _TRAINED_CENTROID_CACHE[key] = cents
-    hit = _TRAINED_CENTROID_DF_CACHE.get(key)
-    if hit is not None and hit[0] is sess:
-        return hit[1]
-    # sweep entries bound to OTHER sessions so a driver that cycles
-    # sessions never pins a stopped session's object graph through
-    # this module-level dict (r12 review finding); the float memo
-    # above is session-independent and survives
-    for k in [
-        k for k, v in _TRAINED_CENTROID_DF_CACHE.items() if v[0] is not sess
-    ]:
-        del _TRAINED_CENTROID_DF_CACHE[k]
-    hit = (sess, frames(_TRAINED_CENTROID_CACHE[key]))
-    _TRAINED_CENTROID_DF_CACHE[key] = hit
-    return hit[1]
+    return (
+        local_frame(sess, cents, _CENTROID_SCHEMA),
+        _local_centroid_row(sess, cents),
+    )
 
 
 def ivf_trained_topk(
@@ -1311,10 +1153,10 @@ def quantize_int8(
     )
     dequant = F.col("mn") + F.col("code") * rng / F.lit(255.0)
     return coded.groupBy("vec_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "code"))),
-            lambda s: s["code"],
-        ).alias("codes"),
+        F.expr(
+            "transform(array_sort(collect_list(struct(dim, code))),"
+            " s -> s.code) AS codes"
+        ),
         F.round(F.sum(F.abs(F.col("x") - dequant)), 6).alias("abs_err"),
     )
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wilayah_aceh_etl_spark.plans.registry import register
+from wilayah_aceh_etl_spark.session import local_frame
 from wilayah_aceh_etl_spark.sources.tables import load_table
 
 def _stage_events(spark: SparkSession, sf_dir: str) -> str:
@@ -1143,8 +1144,12 @@ def streaming_stream_stream_left_outer(
 
     e.coalesce(4).write.mode("overwrite").parquet(src)
     run_pass()
-    flush_ts = max_ts + _dt.timedelta(days=30)
-    spark.createDataFrame(
+    # local_frame stores a datetime's wall clock as UTC, and
+    # createDataFrame(<list>) read a naive one as local time: pass
+    # that local instant in UTC
+    flush_ts = (max_ts + _dt.timedelta(days=30)).astimezone(_dt.UTC)
+    local_frame(
+        spark,
         [
             (999_998, flush_ts, 9_998, "click", 0.0, "{}"),
             (999_999, flush_ts, 9_999, "purchase", 0.0, "{}"),
@@ -1495,8 +1500,8 @@ def events_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["user_id"], r["exact_n"], sketch.estimate_count(r["user_id"]))
         for r in top
     ]
-    return spark.createDataFrame(
-        rows, "user_id long, exact_n long, est_n long"
+    return local_frame(
+        spark, rows, "user_id long, exact_n long, est_n long"
     ).orderBy(F.col("exact_n").desc(), "user_id")
 
 

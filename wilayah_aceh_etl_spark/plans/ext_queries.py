@@ -25,6 +25,7 @@ from wilayah_aceh_etl_spark.functions.text import (
 from wilayah_aceh_etl_spark.operators import dedup as D
 from wilayah_aceh_etl_spark.operators import similarity as S
 from wilayah_aceh_etl_spark.plans.registry import register
+from wilayah_aceh_etl_spark.session import local_frame
 from wilayah_aceh_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -3492,8 +3493,8 @@ def text_heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.min("doc_id").alias("first_doc"))
     )
-    checkpoints = spark.createDataFrame(
-        [(n,) for n in (50, 100, 200, 300, 400, 500)], "n_docs long"
+    checkpoints = local_frame(
+        spark, [(n,) for n in (50, 100, 200, 300, 400, 500)], "n_docs long"
     )
     return (
         first_seen.crossJoin(F.broadcast(checkpoints))
@@ -3694,10 +3695,11 @@ def similarity_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SHIPPING IVF path, benched (r5 verdict ask #3): identical
     semantics and oracle to similarity_ivf_kmeans_topk — the oracle
     re-derives the 2-iteration Lloyd training AND the search — but
-    the quantizer is memoized per sf_dir as an INDEX-BUILD artifact
-    (operators/similarity.py::kmeans_centroids_cached), so the timed
-    bench runs measure the serving path against trained centroids,
-    the way ANN benchmarks separate index build from search latency.
+    the quantizer is memoized as an INDEX-BUILD artifact per corpus
+    (cachectl.trained: keyed by the embeddings scan's plan and files,
+    with sf_dir as cache_key), so the timed bench runs measure the
+    serving path against trained centroids, the way ANN benchmarks
+    separate index build from search latency.
     A/B at sf0.1/local[32]: retrain-per-query 5.0 s vs seeded search
     1.6 s; memoized-trained search benches within noise of the seeded
     plan because the read plan (_ivf_search) is byte-identical —

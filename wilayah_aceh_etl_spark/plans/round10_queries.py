@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from wilayah_aceh_etl_spark.operators import similarity as S
 from wilayah_aceh_etl_spark.plans.registry import register
+from wilayah_aceh_etl_spark.session import local_frame
 from wilayah_aceh_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -1015,7 +1016,7 @@ def data_scaling_unigram_nll_curve(
         F.col("doc_id") % 5 == 0
     )
     lv = F.broadcast(
-        spark.createDataFrame([(1,), (2,), (4,), (8,), (16,)], "width long")
+        local_frame(spark, [(1,), (2,), (4,), (8,), (16,)], "width long")
     )
     trt = tr.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
@@ -1277,7 +1278,8 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     trace_cov = sq / (n * 16777216) - _fold_dot(mu, mu)
     lambda1 = _fold_dot(v1, v2) / _fold_dot(v1, v1)
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [(n, trace_cov, lambda1, lambda1 / trace_cov)],
         "n_vectors long, trace_cov double, lambda1 double,"
         " top_pc_share double",
@@ -1424,7 +1426,7 @@ def _packing_counts_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("n")
     )
     lv = F.broadcast(
-        spark.createDataFrame([(128,), (512,), (2048,)], "ctx long")
+        local_frame(spark, [(128,), (512,), (2048,)], "ctx long")
     )
     return (
         nt.crossJoin(lv)
@@ -1669,7 +1671,8 @@ def embedding_alignment_by_label(
             + _fold_dot(gmu, gmu)
         )
         rows.append((lbl, n, alignment, offset))
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         rows,
         "label int, n_vectors long, alignment_sq double,"
         " centroid_offset_sq double",
@@ -1763,7 +1766,7 @@ def tokenizer_vocab_coverage_curve(
     )
     tot = cnt.agg(F.sum("c").cast("long").alias("t"))
     lv = F.broadcast(
-        spark.createDataFrame([(4,), (8,), (16,), (32,)], "k long")
+        local_frame(spark, [(4,), (8,), (16,), (32,)], "k long")
     )
     return (
         lv.join(rk, F.col("r") <= F.col("k"), "left")

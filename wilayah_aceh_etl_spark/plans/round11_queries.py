@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from wilayah_aceh_etl_spark.operators import dedup as D
 from wilayah_aceh_etl_spark.operators import similarity as S
 from wilayah_aceh_etl_spark.plans.registry import register
+from wilayah_aceh_etl_spark.session import local_frame
 from wilayah_aceh_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -595,8 +596,8 @@ def _model_scale_grid(spark: SparkSession) -> DataFrame:
     """The 4-row scale grid as a broadcast relation (the Spark twin
     of _MODEL_GRID_SQL)."""
     return F.broadcast(
-        spark.createDataFrame(
-            [(n,) for n in _MODEL_SCALES], "n_params long"
+        local_frame(
+            spark, [(n,) for n in _MODEL_SCALES], "n_params long"
         )
     )
 

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wilayah_aceh_etl_spark.plans.registry import register
+from wilayah_aceh_etl_spark.session import local_frame
 from wilayah_aceh_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -343,7 +344,8 @@ def curation_funnel_data_budget(
         cache_key=f"{sf_dir}#derived16",
     ).select("minhash_keep", "semantic_keep", "n_docs", "tokens")
     pol = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [("raw",), ("minhash",), ("semantic",), ("both",)],
             "policy string",
         )

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wilayah_aceh_etl_spark.plans.registry import register
+from wilayah_aceh_etl_spark.session import local_frame
 from wilayah_aceh_etl_spark.sources.tables import load_table
 
 
@@ -500,7 +501,8 @@ def events_cms_guarantee_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in top
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "user_id long, exact_n long, never_underestimates boolean,"
         " within_eps_n boolean",
@@ -836,7 +838,8 @@ def csv_malformed_modes_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
             False,
         ),
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "mode string, n_rows bigint, n_corrupt bigint, sum_cust bigint,"
         " read_raised boolean",
@@ -925,7 +928,8 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentencepiece's distributed mode)."""
     docs = load_table(spark, sf_dir, "documents")
     out = _bpe_learn_merges(docs, n_iter=3)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "iter int, merge_left string, merge_right string,"
         " pair_count bigint, total_tokens_after bigint",
@@ -1665,7 +1669,7 @@ def ml_logreg_top_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w, _b = logreg_fit(emb, n_iter=3, lr=0.5)
     rows = [(j + 1, float(wj)) for j, wj in enumerate(w)]
-    wdf = spark.createDataFrame(rows, "dim int, wj double").select(
+    wdf = local_frame(spark, rows, "dim int, wj double").select(
         "dim", F.round(F.col("wj") * Q).cast("long").alias("w_q")
     )
     rk = Window.orderBy(F.abs(F.col("w_q")).desc(), "dim")

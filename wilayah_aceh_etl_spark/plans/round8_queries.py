@@ -15,6 +15,7 @@ from wilayah_aceh_etl_spark.plans.round7_queries import (
     _bpe_learn_merges,
     _bpe_step_sql,
 )
+from wilayah_aceh_etl_spark.session import local_frame
 from wilayah_aceh_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -173,8 +174,8 @@ def model_eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(1, 21):
         fact[i] = fact[i - 1] * i
     fact_df = F.broadcast(
-        spark.createDataFrame(
-            [(i, v) for i, v in fact.items()], "i int, fact long"
+        local_frame(
+            spark, [(i, v) for i, v in fact.items()], "i int, fact long"
         )
     )
     prob = (
@@ -188,7 +189,7 @@ def model_eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("c"),
         )
     )
-    ks = spark.createDataFrame([(1,), (5,), (10,)], "k int")
+    ks = local_frame(spark, [(1,), (5,), (10,)], "k int")
     est = prob.crossJoin(F.broadcast(ks))
     for col, idx in (("f_nc", F.col("n") - F.col("c")),
                      ("f_k", F.col("k")),
@@ -375,7 +376,7 @@ def labels_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     marg = (
         lab.crossJoin(
-            F.broadcast(spark.createDataFrame([(0,), (1,), (2,)], "k int"))
+            F.broadcast(local_frame(spark, [(0,), (1,), (2,)], "k int"))
         )
         .groupBy("k")
         .agg(
@@ -775,7 +776,8 @@ def ml_bradley_terry_strengths(
         ranked = sorted(pi, key=lambda i: (-pi[i], i))
         rk = {i: r + 1 for r, i in enumerate(ranked)}
         return (
-            duels.sparkSession.createDataFrame(
+            local_frame(
+                duels.sparkSession,
                 [
                     (int(i), int(wins[i]), round(pi[i] / base, 6), rk[i])
                     for i in sorted(pi)

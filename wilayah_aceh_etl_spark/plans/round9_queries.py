@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wilayah_aceh_etl_spark.plans.registry import register
+from wilayah_aceh_etl_spark.session import local_frame
 from wilayah_aceh_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -4091,8 +4092,8 @@ def data_selection_kcenter_coreset(
             nid = int(-best["nid"])
             centers.append((nid, list(best["e"])))
             out.append((j, nid, float(best["d"])))
-        rows = spark.createDataFrame(
-            out, "step int, vec_id long, dmin double"
+        rows = local_frame(
+            spark, out, "step int, vec_id long, dmin double"
         )
         return rows.select(
             "step",
@@ -4815,8 +4816,8 @@ def model_eval_best_of_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(1, 13):
         fact[i] = fact[i - 1] * i
     fact_df = F.broadcast(
-        spark.createDataFrame(
-            [(i, v) for i, v in fact.items()], "i int, fact long"
+        local_frame(
+            spark, [(i, v) for i, v in fact.items()], "i int, fact long"
         )
     )
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
@@ -4841,7 +4842,7 @@ def model_eval_best_of_n(spark: SparkSession, sf_dir: str) -> DataFrame:
         "reward_milli",
         F.row_number().over(w_i).alias("i"),
     )
-    ns = spark.createDataFrame([(1,), (4,), (8,)], "n int")
+    ns = local_frame(spark, [(1,), (4,), (8,)], "n int")
     est = samples.crossJoin(F.broadcast(ns))
     for col, idx in (
         ("f_i1", F.col("i") - 1),
@@ -5057,7 +5058,7 @@ def approx_f2_ams_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
-    ids = spark.createDataFrame([(i,) for i in range(8)], "i int")
+    ids = local_frame(spark, [(i,) for i in range(8)], "i int")
     sign = (
         F.when(
             (

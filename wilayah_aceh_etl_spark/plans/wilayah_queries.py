@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wilayah_aceh_etl_spark.plans.registry import register
+from wilayah_aceh_etl_spark.session import local_frame
 from wilayah_aceh_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -928,6 +929,6 @@ def wilayah_commit_log_time_travel(
             )
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "version int, action string, n_rows long, n_lower long"
+    return local_frame(
+        spark, rows, "version int, action string, n_rows long, n_lower long"
     ).orderBy("version")
